@@ -709,7 +709,7 @@ object Bench {
             // downgrading a better previously-persisted measurement
             val priorEff = prior832.flatMap(BenchJson.numField(_, "efficiency"))
               .map(_.toDouble).getOrElse(0.0)
-            if (eff >= 0.5 && eff > priorEff) {
+            if (BenchJson.acceptPrior832(eff, priorEff)) {
               try {
                 val rec = cand.dropRight(1) +
                   s""","recorded_unix":${System.currentTimeMillis() / 1000}}"""

@@ -211,4 +211,11 @@ object BenchJson {
 
   def retryReserve(eff28: Double): Double =
     if (eff28 > 0 && eff28 < 0.8) 260.0 else 0.0
+
+  /** pair_8_32 prior-persist guard: only a plausible efficiency that
+    * beats the persisted prior becomes the next runs' prior. r06
+    * persisted 1.255, which is super-linear and so a measurement
+    * artifact, because the guard had no upper bound. */
+  def acceptPrior832(eff: Double, priorEff: Double): Boolean =
+    eff >= 0.5 && eff <= 1.0 && eff > priorEff
 }

@@ -19,6 +19,13 @@ import graft.kg.Triple
   * write-temp + atomic rename. A crash mid-range leaves a partial
   * `range=R` dir NOT in the manifest; resume overwrites it
   * idempotently — per-partition lineage, exactly-once output.
+  *
+  * A fresh write is one parquet file per `range=R/pred=P/bucket=B`
+  * leaf. One task writes each leaf, so a hot (pred, bucket) leaf is
+  * one task's work; [[compactTriples]] already accepts the same bound,
+  * and `graft.Bench` does not drive this sink. Compaction stays the
+  * maintenance op for tables written before the one-file-per-leaf
+  * layout or appended to by other writers.
   */
 object TableIO {
 
@@ -57,27 +64,35 @@ object TableIO {
       .withColumn("bucket", pmod(xxhash64(col("subj")), lit(NBuckets)).cast("int"))
       .withColumn("range", pmod(col("bucket"), lit(NRanges)))
 
+  /** One task owns each (pred, bucket) leaf, so a partitioned write
+    * emits exactly one file per leaf. */
+  private def byLeaf(df: DataFrame): DataFrame =
+    df.repartition(col("pred"), col("bucket"))
+
   /** Resumable write: skips ranges already in the manifest, writes
     * each missing range atomically (dir overwrite + manifest rename).
+    * The missing ranges' rows go through one (pred, bucket) shuffle
+    * ([[byLeaf]]) and one aggregate job counts every range's rows.
     * `failAfterRanges` injects a crash for the resume test. */
   def writeTriples(triples: Dataset[Triple], outDir: String,
                    failAfterRanges: Int = Int.MaxValue): Map[Int, RangeEntry] = {
     var manifest = readManifest(outDir)
-    val df = withPartitionCols(triples)
     val todo = (0 until NRanges).filterNot(manifest.contains)
     if (todo.isEmpty) return manifest
-    val cached = df.cache()
+    val cached =
+      byLeaf(withPartitionCols(triples).filter(col("range").isin(todo: _*))).cache()
     try {
+      val rowsByRange = cached.groupBy("range").count().collect()
+        .map(row => row.getInt(0) -> row.getLong(1)).toMap
       var written = 0
       todo.foreach { r =>
         if (written >= failAfterRanges)
           throw new RuntimeException(s"injected failure before range $r")
-        val part = cached.filter(col("range") === r).drop("range")
-        val rows = part.count()
-        part.write.mode("overwrite")
+        cached.filter(col("range") === r).drop("range")
+          .write.mode("overwrite")
           .partitionBy("pred", "bucket")
           .parquet(s"$outDir/range=$r")
-        manifest += r -> RangeEntry(r, rows, System.currentTimeMillis())
+        manifest += r -> RangeEntry(r, rowsByRange.getOrElse(r, 0L), System.currentTimeMillis())
         writeManifest(outDir, manifest)
         written += 1
       }
@@ -95,13 +110,14 @@ object TableIO {
   }
 
   /** Compact committed ranges: rewrite each manifest-listed range so
-    * every (pred, bucket) partition holds ONE file. At 10^12-turn
-    * scale every incremental write appends task-count files per
-    * partition and readers pay per-file open cost — compaction is the
-    * standing maintenance op (Iceberg's rewrite_data_files, through
-    * this facade). Per range: rewrite into a temp dir, verify the row
-    * count against the manifest, then swap directories. The swap is
-    * two renames (a real Iceberg commit swaps a metadata pointer);
+    * every (pred, bucket) partition holds ONE file. [[writeTriples]]
+    * already writes that layout; an appender that writes from many
+    * tasks adds task-count files per partition and readers pay
+    * per-file open cost — compaction is the standing maintenance op
+    * (Iceberg's rewrite_data_files, through this facade). Per range:
+    * rewrite into a temp dir, verify the row count against the
+    * manifest, then swap directories. The swap is two renames (a
+    * real Iceberg commit swaps a metadata pointer);
     * the facade documents the single-writer assumption its manifest
     * commits already make. A crash before the swap leaves the old
     * range intact (stale temp dirs are cleaned on the next run); a
@@ -109,15 +125,13 @@ object TableIO {
     * — the next compaction (or [[repairRange]]) restores it before
     * proceeding, so every crash point is recoverable. */
   def compactTriples(spark: SparkSession, outDir: String): Unit = {
-    import org.apache.spark.sql.functions.col
     val manifest = readManifest(outDir)
     manifest.toSeq.sortBy(_._1).foreach { case (r, entry) =>
       val src = Paths.get(outDir, s"range=$r")
       val tmp = Paths.get(outDir, s".range-$r-compacting")
       repairRange(outDir, r) // crash between the two swap renames
       deleteRecursively(tmp) // stale temp from a crashed compaction
-      spark.read.parquet(src.toString)
-        .repartition(col("pred"), col("bucket")) // 1 task owns each partition → 1 file
+      byLeaf(spark.read.parquet(src.toString))
         .write.mode("overwrite").partitionBy("pred", "bucket").parquet(tmp.toString)
       val rows = spark.read.parquet(tmp.toString).count()
       require(rows == entry.rows,

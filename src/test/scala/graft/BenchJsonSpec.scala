@@ -159,6 +159,18 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(!BenchJson.acceptRetry28(0.70, 0.769, honest))
   }
 
+  test("acceptPrior832: persists only a plausible improvement over the prior") {
+    // r06 persisted a super-linear 1.255
+    assert(!BenchJson.acceptPrior832(1.255, 0.728))
+    assert(BenchJson.acceptPrior832(0.93, 0.728))
+    assert(BenchJson.acceptPrior832(1.0, 0.728))
+    // at or below the prior is rejected
+    assert(!BenchJson.acceptPrior832(0.728, 0.728))
+    assert(!BenchJson.acceptPrior832(0.70, 0.728))
+    // below the 0.5 floor is rejected even with no prior
+    assert(!BenchJson.acceptPrior832(0.45, 0.0))
+  }
+
   test("windowQuality: unmeasured defaults to nominal") {
     assert(BenchJson.windowQuality(None) == 1.0)
     assert(BenchJson.windowQuality(Some(450.0)) > 5.0)

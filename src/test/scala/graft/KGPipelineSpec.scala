@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kg._
 import graft.sources.TableIO
+import scala.jdk.CollectionConverters._
 
 class KGPipelineSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -77,6 +78,21 @@ class KGPipelineSpec extends AnyFunSuite {
     assert(t2.nonEmpty)
   }
 
+  /** Parquet files per directory under `d`. */
+  private def parquetFiles(d: String): Map[String, Int] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
+    try files.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .toSeq.groupBy(_.getParent.toString).view.mapValues(_.size).toMap
+    finally files.close()
+  }
+
+  /** Each committed range's manifest row count must equal what reads back from its dir. */
+  private def assertManifestMatchesDirs(dir: String): Unit =
+    TableIO.readManifest(dir).foreach { case (r, e) =>
+      val back = spark.read.parquet(s"$dir/range=$r").count()
+      assert(e.rows == back, s"range $r: manifest rows ${e.rows} != read-back $back")
+    }
+
   test("resumable triple sink: crash mid-write, resume, identical output") {
     val dir = SparkTestBase.scratchDir("graft-triples")
     val full = result.triples
@@ -92,25 +108,39 @@ class KGPipelineSpec extends AnyFunSuite {
     assert(partial.forall { case (r, e) => manifest(r).commitTs == e.commitTs })
     val back = TableIO.readTriples(spark, dir).collect().toSet
     assert(back == full.collect().toSet)
+    assertManifestMatchesDirs(dir)
+  }
+
+  test("sink layout: a fresh write is one file per (range, pred, bucket) leaf") {
+    val dir = SparkTestBase.scratchDir("graft-triples-layout")
+    // a 24-partition input must not leak its partitioning into the layout
+    val manifest = TableIO.writeTriples(result.triples.repartition(24), dir)
+    assert(manifest.size == TableIO.NRanges)
+    val files = parquetFiles(dir)
+    assert(files.values.forall(_ == 1), s"files per leaf: ${files.filter(_._2 > 1)}")
+    assert(files.keys.forall(_.matches(""".*/range=\d+/pred=[^/]+/bucket=\d+""")), files.keys)
+    val leaves = spark.read.parquet(dir).select("range", "pred", "bucket").distinct().count()
+    assert(files.size == leaves, s"${files.size} leaf dirs vs $leaves distinct leaves")
+    val back = TableIO.readTriples(spark, dir).collect().toSet
+    assert(back == result.triples.collect().toSet)
+    assertManifestMatchesDirs(dir)
+    // compaction of a fresh write is a no-op on rows and on files per dir
+    TableIO.compactTriples(spark, dir)
+    assert(parquetFiles(dir) == files)
+    assert(TableIO.readTriples(spark, dir).collect().toSet == back)
   }
 
   test("compaction: one file per partition, identical rows, manifest intact") {
-    import graft.sources.TableIO
     val dir = java.nio.file.Files.createTempDirectory("triples_compact").toString
-    // write with extra parallelism so partitions hold MANY small files
-    val spread = result.triples.repartition(24)
-    TableIO.writeTriples(spread, dir)
-    val before = TableIO.readTriples(spark, dir).collect().toSet
-    def parquetFiles(d: String) = {
-      val root = java.nio.file.Paths.get(d)
-      val files = java.nio.file.Files.walk(root).iterator()
-      var perDir = Map.empty[String, Int]
-      files.forEachRemaining { p =>
-        if (p.toString.endsWith(".parquet"))
-          perDir = perDir.updated(p.getParent.toString, perDir.getOrElse(p.getParent.toString, 0) + 1)
-      }
-      perDir
+    TableIO.writeTriples(result.triples, dir)
+    // a fresh write is already one file per leaf, so lay each committed
+    // range out as a 24-task appender would: MANY small files per leaf
+    TableIO.readManifest(dir).keys.foreach { r =>
+      spark.read.parquet(s"$dir/range=$r").repartition(24).localCheckpoint()
+        .write.mode("overwrite").partitionBy("pred", "bucket").parquet(s"$dir/range=$r")
     }
+    val before = TableIO.readTriples(spark, dir).collect().toSet
+    assert(before == result.triples.collect().toSet)
     assert(parquetFiles(dir).values.exists(_ > 1), "fixture must start with small files")
     val manifestBefore = TableIO.readManifest(dir)
     TableIO.compactTriples(spark, dir)
