@@ -2,7 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kg._
-import graft.sources.TableIO
+import graft.sources.{NioRawLocalFileSystem, TableIO}
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import scala.jdk.CollectionConverters._
 
 class KGPipelineSpec extends AnyFunSuite {
@@ -162,6 +168,125 @@ class KGPipelineSpec extends AnyFunSuite {
     TableIO.compactTriples(spark, dir)
     assert(java.nio.file.Files.exists(src) && !java.nio.file.Files.exists(old))
     assert(TableIO.readTriples(spark, dir).collect().toSet == before)
+  }
+
+  /** Jobs that wrote records to files while `f` ran. */
+  private def writeJobs(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val listener = new SparkListener {
+      val jobOfStage = scala.collection.mutable.Map.empty[Int, Int]
+      val writers = scala.collection.mutable.Set.empty[Int]
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        e.stageIds.foreach(jobOfStage(_) = e.jobId)
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+        if (e.taskMetrics != null && e.taskMetrics.outputMetrics.recordsWritten > 0)
+          jobOfStage.get(e.stageId).foreach(writers += _)
+      }
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { f; ListenerBusDrain(sc) } finally sc.removeSparkListener(listener)
+    listener.synchronized(listener.writers.size)
+  }
+
+  /** POSIX permissions under `d` by kind: dirs by depth, then parquet
+    * files and their `.crc` checksums. */
+  private def modes(d: String): Map[String, Set[String]] = {
+    val root = Paths.get(d)
+    val all = Files.walk(root)
+    try all.iterator().asScala.filter(_ != root).toSeq.flatMap { p =>
+      val kind =
+        if (Files.isDirectory(p)) Some(s"dir@${root.relativize(p).getNameCount}")
+        else if (p.toString.endsWith(".parquet")) Some("parquet")
+        else if (p.toString.endsWith(".parquet.crc")) Some("crc")
+        else None
+      kind.map(_ -> PosixFilePermissions.toString(Files.getPosixFilePermissions(p)))
+    }.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    finally all.close()
+  }
+
+  test("sink: crash before the first commit leaves staged rows invisible; resume clears them") {
+    val dir = SparkTestBase.scratchDir("graft-triples-staged")
+    val full = result.triples
+    intercept[RuntimeException] {
+      TableIO.writeTriples(full, dir, failAfterRanges = 0)
+    }
+    assert(TableIO.readManifest(dir).isEmpty)
+    val staging = Paths.get(dir, ".staging")
+    assert(spark.read.parquet(staging.toString).count() == full.count(), "the write job staged every row")
+    assert(TableIO.readTriples(spark, dir).count() == 0)
+    assert(spark.read.schema("subj STRING, obj STRING, range INT, pred STRING, bucket INT")
+      .parquet(dir).count() == 0)
+    val manifest = TableIO.writeTriples(full, dir)
+    assert(!Files.exists(staging))
+    assert(manifest.size == TableIO.NRanges)
+    assert(TableIO.readTriples(spark, dir).collect().toSet == full.collect().toSet)
+    assert(parquetFiles(dir).values.forall(_ == 1))
+    assertManifestMatchesDirs(dir)
+  }
+
+  test("sink: one write job per writeTriples call, whatever the number of missing ranges") {
+    val dir = SparkTestBase.scratchDir("graft-triples-jobs")
+    val crashed = writeJobs {
+      intercept[RuntimeException](TableIO.writeTriples(result.triples, dir, failAfterRanges = 1))
+    }
+    assert(TableIO.readManifest(dir).size == 1)
+    val resumed = writeJobs(TableIO.writeTriples(result.triples, dir))
+    val fresh = writeJobs(TableIO.writeTriples(result.triples, SparkTestBase.scratchDir("graft-triples-jobs")))
+    assert((crashed, resumed, fresh) == ((1, 1, 1)))
+    assert(writeJobs(TableIO.writeTriples(result.triples, dir)) == 0, "a complete sink writes nothing")
+  }
+
+  test("sink: an empty input commits every range empty and reads back empty") {
+    import spark.implicits._
+    val dir = SparkTestBase.scratchDir("graft-triples-empty")
+    val manifest = TableIO.writeTriples(spark.emptyDataset[Triple], dir)
+    assert(manifest.keySet == (0 until TableIO.NRanges).toSet)
+    assert(manifest.values.forall(_.rows == 0), manifest)
+    assert(TableIO.readTriples(spark, dir).count() == 0)
+    TableIO.compactTriples(spark, dir)
+    assert(TableIO.readTriples(spark, dir).count() == 0)
+  }
+
+  test("sink: an input whose rows all land in one range commits the others empty") {
+    import spark.implicits._
+    val src = SparkTestBase.scratchDir("graft-triples-src")
+    TableIO.writeTriples(result.triples, src)
+    val oneRange = spark.read.parquet(s"$src/range=0").select("subj", "pred", "obj").as[Triple]
+    val want = oneRange.collect().toSet
+    assert(want.nonEmpty)
+    val dir = SparkTestBase.scratchDir("graft-triples-one-range")
+    val manifest = TableIO.writeTriples(oneRange, dir)
+    assert(manifest.view.mapValues(_.rows).toMap ==
+      Map(0 -> want.size.toLong) ++ (1 until TableIO.NRanges).map(_ -> 0L))
+    assert(TableIO.readTriples(spark, dir).collect().toSet == want)
+    TableIO.compactTriples(spark, dir)
+    assert(TableIO.readTriples(spark, dir).collect().toSet == want)
+  }
+
+  test("sink: files and dirs get the permissions of a plain parquet write of the same frame") {
+    val dir = SparkTestBase.scratchDir("graft-triples-perms")
+    TableIO.writeTriples(result.triples, dir)
+    val plain = SparkTestBase.scratchDir("graft-triples-plain") + "/t"
+    spark.read.parquet(dir).write.partitionBy("range", "pred", "bucket").parquet(plain)
+    val sink = modes(dir)
+    assert(Set("dir@1", "dir@2", "dir@3", "parquet", "crc").subsetOf(sink.keySet), sink)
+    assert(sink == modes(plain))
+  }
+
+  test("NioRawLocalFileSystem sets rwx bits itself and hands the sticky bit to Hadoop") {
+    val fs = new NioRawLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+    val root = Paths.get(SparkTestBase.scratchDir("graft-nio-fs"))
+    def mode(p: java.nio.file.Path) = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+    def perm(octal: String) = new FsPermission(Integer.parseInt(octal, 8).toShort)
+    val f = Files.createFile(root.resolve("f"))
+    fs.setPermission(new Path(f.toString), perm("640"))
+    assert(mode(f) == Integer.parseInt("640", 8))
+    val d = Files.createDirectory(root.resolve("d"))
+    fs.setPermission(new Path(d.toString), perm("1750"))
+    assert(mode(d) == Integer.parseInt("1750", 8))
   }
 
   test("oversized prompts are dropped (counted, not extracted)") {
