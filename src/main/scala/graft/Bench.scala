@@ -67,8 +67,8 @@ object Bench {
     * partition per core, 8 MB splits so the narrow extraction stage
     * gets ≥1 partition per core (128 MB default bin-packs the corpus
     * into ~13 splits, capping parallelism).
-    * `bigCorpus = true`: the ≥100M-turn tuning (same as
-    * tools/StressRun, which produced the round-2 100M-turn evidence):
+    * `bigCorpus = true`: the ≥100M-turn tuning (the one behind the
+    * round-2 100M-turn stress evidence in BASELINE.md):
     * ≥64 shuffle partitions regardless of cores — at 161M distinct
     * triples, 32 shuffle partitions make ~5M-row spill chunks and the
     * shuffle serializes; 64 halves them and overlaps spill with

@@ -62,7 +62,14 @@ object Canonicalize {
   private def connectedComponentsLocal(spark: org.apache.spark.sql.SparkSession,
                                        sym: DataFrame): DataFrame = {
     import spark.implicits._
-    val edges = sym.as[(String, String)].collect()
+    spark.createDataset(unionFind(sym.as[(String, String)].collect().toSeq))
+      .toDF("vertex", "component")
+  }
+
+  /** Driver-local union-find: every vertex of `edges` paired with its
+    * component's root, the component's min vertex id (min-id root,
+    * path compression). */
+  private def unionFind(edges: Seq[(String, String)]): Seq[(String, String)] = {
     val parent = scala.collection.mutable.HashMap.empty[String, String]
     def find(x: String): String = {
       var r = x
@@ -76,8 +83,7 @@ object Canonicalize {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb } // min-id root
     }
-    val rows = parent.keys.toSeq.map(v => (v, find(v)))
-    spark.createDataset(rows).toDF("vertex", "component")
+    parent.keys.toSeq.map(v => (v, find(v)))
   }
 
   private def connectedComponentsLoop(sym: DataFrame, maxIter: Int,
@@ -180,26 +186,13 @@ object Canonicalize {
 
   /** Driver-local union-find + canonical pick over a small edge set. */
   def canonicalMapLocal(edges: Seq[(String, String)]): Seq[(String, String)] = {
-    val parent = scala.collection.mutable.HashMap.empty[String, String]
-    def find(x: String): String = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x
-      while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
+    val roots = unionFind(edges)
+    // root = min member, the canonical of an entity-free component
+    val canonical = roots.groupBy(_._2).map { case (root, ms) =>
+      val entityIds = ms.collect { case (m, _) if m.startsWith("e:") => m.substring(2) }
+      root -> (if (entityIds.nonEmpty) entityIds.min else root)
     }
-    edges.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    val members = parent.keys.toSeq
-    val byRoot = members.groupBy(find)
-    val canonical = byRoot.map { case (root, ms) =>
-      val entityIds = ms.collect { case m if m.startsWith("e:") => m.substring(2) }
-      root -> (if (entityIds.nonEmpty) entityIds.min else ms.min)
-    }
-    members.map(m => m -> canonical(find(m)))
+    roots.map { case (m, root) => m -> canonical(root) }
   }
 
   /** Distributed CC + canonical aggregation (the big-graph path). */

@@ -138,54 +138,50 @@ object Experiments {
 
   /** Run the pipeline collecting per-stage row counts + wall times
     * into StageMetric rows (north rule: every stage writes lineage +
-    * metrics). Each count is an extra action — use for audited runs,
-    * not the hot path. */
+    * metrics). The stages are the ones [[KGPipeline.run]] calls, in
+    * its order, so the audited plan is the production plan. Each
+    * stage's output is cached and counted, and its wall includes that
+    * count — an extra action per stage, so use for audited runs, not
+    * the hot path. The prompts cache is released once extraction is
+    * materialized; [[KGPipeline.Result.unpersistAll]] releases the rest. */
   def runWithMetrics(spark: SparkSession, turns: Dataset[Turn],
                      cfg: TranscriptGen.Config, runId: String): (KGPipeline.Result, Dataset[StageMetric]) = {
     import spark.implicits._
     val metrics = Vector.newBuilder[StageMetric]
-    def staged[T](stage: String, rowsIn: Long)(f: => (T, Long)): T = {
+    def staged[T](stage: String, rowsIn: Long)(f: => (T, Long)): (T, Long) = {
       val t0 = System.nanoTime()
       val (r, rowsOut) = f
       metrics += StageMetric(runId, stage, rowsIn, rowsOut,
         math.max(0L, rowsIn - rowsOut), (System.nanoTime() - t0) / 1000000L)
-      r
+      (r, rowsOut)
     }
+    def cachedCount[T](ds: Dataset[T]): (Dataset[T], Long) = { val c = ds.cache(); (c, c.count()) }
 
-    val nTurns = turns.count()
-    val prompts = staged("prompts", nTurns) {
-      val p = Extraction.buildPrompts(turns).cache(); (p, p.count())
+    val (prompts, nPrompts) = staged("prompts", turns.count()) {
+      cachedCount(Extraction.buildPromptsWithShots(turns, Array.empty, 0))
     }
-    val nPrompts = prompts.count()
-    val extracted = staged("extract", nPrompts) {
-      val e = Extraction.extractAll(Extraction.scoreMentions(prompts, cfg), cfg).cache()
-      (e, e.count())
+    val (extracted, _) = staged("extract", nPrompts) {
+      cachedCount(KGPipeline.extract(prompts, cfg))
     }
-    val mentions = extracted.flatMap(e =>
-      e.parsed.map { case (m, t) => Mention(e.conv_id, e.turn_idx, m, t) })
-    val nMentions = mentions.count()
-    // verified is consumed by four actions below (verify count, link
-    // input, two materialize row counts) — count it ONCE over the
-    // cached extracted rows instead of re-running the flatMap per job
-    val verified = extracted.flatMap(e =>
-      e.verified.map { case (m, t) => Mention(e.conv_id, e.turn_idx, m, t) }).cache()
-    val nVerified = verified.count()
-    staged[Unit]("verify", nMentions) { ((), nVerified) }
-    val relations = extracted.flatMap(e =>
-      e.relations.map { case (s, p, o) => Relation(e.conv_id, e.turn_idx, s, p, o) })
-    val links = staged("link", nVerified) {
-      val l = EntityLinking.link(verified, Lexicon.catalogue.toArray).cache()
-      (l, l.count())
+    prompts.unpersist()
+    val mentions = KGPipeline.mentionsOf(extracted)
+    val verified = KGPipeline.verifiedOf(extracted)
+    val relations = KGPipeline.relationsOf(extracted)
+    // the three projection sizes in ONE job over the cached rows
+    val sizes = extracted.select(Seq("parsed", "verified", "relations")
+      .map(c => coalesce(sum(size(col(c))), lit(0L))): _*).head()
+    val (nVerified, nRelations) = (sizes.getLong(1), sizes.getLong(2))
+    staged[Unit]("verify", sizes.getLong(0)) { ((), nVerified) }
+    val (links, nLinks) = staged("link", nVerified) {
+      cachedCount(EntityLinking.linkAdaptive(verified, Lexicon.catalogue.toArray))
     }
-    val canon = staged("canonicalize", links.count()) {
-      val c = Canonicalize.canonicalMap(links, TranscriptGen.entities(spark)).cache()
-      (c, c.count())
+    val (canon, _) = staged("canonicalize", nLinks) {
+      cachedCount(Canonicalize.canonicalMap(links, TranscriptGen.entities(spark)))
     }
-    val triples = staged("materialize", nVerified + relations.count()) {
-      val t = KGPipeline.materializeTriples(verified, relations, canon)
+    val (triples, _) = staged("materialize", nVerified + nRelations) {
+      val t = KGPipeline.materializeTriplesAdaptive(extracted, verified, relations, canon)
       (t, t.count())
     }
-    verified.unpersist() // last action that reads it ran above
     val result = KGPipeline.Result(turns, prompts, mentions, verified, relations,
       links, canon, triples, extracted)
     (result, spark.createDataset(metrics.result()))

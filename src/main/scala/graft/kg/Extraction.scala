@@ -296,57 +296,4 @@ object Extraction {
       }
     }
   }
-
-  /** Two-stage chain (pt_multi_pt.py:81-90 shape): stage-1 mentions
-    * grouped back per turn feed the relation scorer; responses are
-    * filing-format dicts parsed and split into (subj, pred, obj).
-    * Standalone operator for externally-supplied mention sets (the
-    * pipeline itself uses the fused [[extractAll]]); a single cogroup
-    * on (conv_id, turn_idx) — one shuffle per side. */
-  def extractRelations(scored: Dataset[Scored], mentions: Dataset[Mention],
-                       cfg: TranscriptGen.Config): Dataset[Relation] = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    scored.groupByKey(s => (s.conv_id, s.turn_idx))
-      .cogroup(mentions.groupByKey(m => (m.conv_id, m.turn_idx))) { case ((c, t), ss, ms) =>
-        val sOpt = ss.toList.headOption
-        // canonical order: shuffle loses arrival order, so sort by
-        // (mention, tag) then re-establish in-text position
-        val mset = ms.map(m => (m.mention, m.tag)).toList.sortBy(identity)
-        sOpt match {
-          case Some(s) if mset.nonEmpty =>
-            val ordered = mset.sortBy { case (m, _) =>
-              val i = s.text.indexOf(m); if (i < 0) Int.MaxValue else i
-            }
-            val resp = Scorer.relationResponse(c, t, s.text, ordered, cfg)
-            Parsers.parseFilingJson(resp, Scorer.RelationPreds).flatMap { case (pair, pred) =>
-              val arrow = pair.indexOf(" -> ")
-              if (arrow < 0) Nil
-              else List(Relation(c, t, pair.substring(0, arrow), pred, pair.substring(arrow + 4)))
-            }
-          case _ => Nil
-        }
-      }
-  }
-
-  /** Verification pass (verifier.py:11-32): one yes/no scorer call
-    * per extracted mention; keep iff "yes". A second batched pass,
-    * cogrouped with the (cached) scored turns — the mention stream
-    * never re-joins the raw transcripts. */
-  def verifyMentions(mentions: Dataset[Mention], scored: Dataset[Scored],
-                     cfg: TranscriptGen.Config): Dataset[Mention] = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
-    scored.groupByKey(s => (s.conv_id, s.turn_idx))
-      .cogroup(mentions.groupByKey(m => (m.conv_id, m.turn_idx))) { case (_, ss, ms) =>
-        ss.toList.headOption match {
-          case Some(s) =>
-            ms.filter { m =>
-              val resp = Scorer.verifierResponse(m.conv_id, m.turn_idx, m.mention, m.tag, s.text, cfg)
-              Parsers.verifierAnswer(resp).contains(true)
-            }
-          case None => Iterator.empty
-        }
-      }
-  }
 }

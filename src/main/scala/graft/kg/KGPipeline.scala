@@ -58,19 +58,11 @@ object KGPipeline {
     //      never cross a shuffle. Any of the five prompt techniques
     //      can drive detection (classical_test's grid axis,
     //      llm/LLMModel.py:164-169).
-    val extracted = (technique match {
-      case PromptTechniques.Discussion =>
-        Extraction.extractAll(Extraction.scoreMentions(prompts, cfg), cfg)
-      case other =>
-        Extraction.extractAllWith(prompts, other, cfg)
-    }).cache()
+    val extracted = extract(prompts, cfg, technique).cache()
 
-    val mentions = extracted.flatMap(e =>
-      e.parsed.map { case (m, t) => Mention(e.conv_id, e.turn_idx, m, t) })
-    val verified = extracted.flatMap(e =>
-      e.verified.map { case (m, t) => Mention(e.conv_id, e.turn_idx, m, t) })
-    val relations = extracted.flatMap(e =>
-      e.relations.map { case (s, p, o) => Relation(e.conv_id, e.turn_idx, s, p, o) })
+    val mentions = mentionsOf(extracted)
+    val verified = verifiedOf(extracted)
+    val relations = relationsOf(extracted)
 
     // 5. entity linking — path auto-selected by catalogue size:
     //    broadcast full-scan below EntityLinking.BroadcastCatalogueThreshold,
@@ -89,6 +81,35 @@ object KGPipeline {
     val triples = materializeTriplesAdaptive(extracted, verified, relations, canon)
 
     Result(turns, prompts, mentions, verified, relations, links, canon, triples, extracted)
+  }
+
+  /** Detection under `technique`, then the fused per-turn chain. */
+  def extract(prompts: Dataset[Prompt], cfg: TranscriptGen.Config,
+              technique: PromptTechniques.Technique = PromptTechniques.Discussion)
+      : Dataset[Extraction.TurnExtraction] = technique match {
+    case PromptTechniques.Discussion =>
+      Extraction.extractAll(Extraction.scoreMentions(prompts, cfg), cfg)
+    case other =>
+      Extraction.extractAllWith(prompts, other, cfg)
+  }
+
+  /** The projections of the extraction rows — parsed mentions,
+    * verifier-surviving mentions and relations — defined once for the
+    * batch, audited and streaming paths. */
+  def mentionsOf(extracted: Dataset[Extraction.TurnExtraction]): Dataset[Mention] = {
+    import extracted.sparkSession.implicits._
+    extracted.flatMap(e => e.parsed.map { case (m, t) => Mention(e.conv_id, e.turn_idx, m, t) })
+  }
+
+  def verifiedOf(extracted: Dataset[Extraction.TurnExtraction]): Dataset[Mention] = {
+    import extracted.sparkSession.implicits._
+    extracted.flatMap(e => e.verified.map { case (m, t) => Mention(e.conv_id, e.turn_idx, m, t) })
+  }
+
+  def relationsOf(extracted: Dataset[Extraction.TurnExtraction]): Dataset[Relation] = {
+    import extracted.sparkSession.implicits._
+    extracted.flatMap(e =>
+      e.relations.map { case (s, p, o) => Relation(e.conv_id, e.turn_idx, s, p, o) })
   }
 
   /** Canonical-map rows that fit the driver comfortably take the

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.kg.{Extraction, LinkMatch, Mention, Triple, Turn, TranscriptGen}
+import graft.kg.{Extraction, KGPipeline, LinkMatch, Mention, Triple, Turn, TranscriptGen}
 
 /** Structured Streaming lift of the extraction stage (SURVEY §2.10).
   * The per-turn chain is stateless once the scorer/few-shot index is
@@ -18,18 +18,12 @@ object StreamingExtraction {
 
   /** Stateless streaming extraction: works on any streaming
     * Dataset[Turn] (kafka/file/memory source behind it). */
-  def extractionStream(turns: Dataset[Turn], cfg: TranscriptGen.Config): Dataset[Extraction.TurnExtraction] = {
-    val prompts = Extraction.buildPrompts(turns)
-    val scored = Extraction.scoreMentions(prompts, cfg)
-    Extraction.extractAll(scored, cfg)
-  }
+  def extractionStream(turns: Dataset[Turn], cfg: TranscriptGen.Config): Dataset[Extraction.TurnExtraction] =
+    KGPipeline.extract(Extraction.buildPrompts(turns), cfg)
 
   /** Streaming mentions (exploded). */
-  def mentionStream(turns: Dataset[Turn], cfg: TranscriptGen.Config): Dataset[Mention] = {
-    import turns.sparkSession.implicits._
-    extractionStream(turns, cfg).flatMap(e =>
-      e.verified.map { case (m, t) => Mention(e.conv_id, e.turn_idx, m, t) })
-  }
+  def mentionStream(turns: Dataset[Turn], cfg: TranscriptGen.Config): Dataset[Mention] =
+    KGPipeline.verifiedOf(extractionStream(turns, cfg))
 
   /** Stateful per-conversation extraction state via
     * mapGroupsWithState (the construct canonicalization would need in
@@ -118,7 +112,7 @@ object StreamingExtraction {
     val bc = turns.sparkSession.sparkContext.broadcast(canonical)
     // shared triple vocabulary with the batch path — KGPipeline.triplesOf
     // is the single definition, so batch and stream can never drift
-    extractionStream(turns, cfg).flatMap(e => graft.kg.KGPipeline.triplesOf(e, bc.value))
+    extractionStream(turns, cfg).flatMap(e => KGPipeline.triplesOf(e, bc.value))
   }
 
   /** One mention string's current canonical entity assignment. */

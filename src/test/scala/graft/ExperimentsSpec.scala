@@ -83,6 +83,39 @@ class ExperimentsSpec extends AnyFunSuite {
     assert(pf.contains("run_id"), pf)
   }
 
+  test("runWithMetrics runs the production plan: no join in the audited triples, rows_out = KGPipeline.run counts") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val cfg = TranscriptGen.Config(nConvs = 20)
+    val turns = TranscriptGen.transcripts(spark, cfg)
+    val (audited, metrics) = Experiments.runWithMetrics(spark, turns, cfg, "plan-run")
+    val joins = audited.triples.queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.isEmpty, audited.triples.queryExecution.optimizedPlan.toString)
+    val m = metrics.collect().map(s => s.stage -> s.rows_out).toMap
+    val prod = KGPipeline.run(spark, turns, cfg)
+    val expected = Map(
+      "prompts" -> prod.prompts.count(),
+      "extract" -> prod.extracted.count(),
+      "verify" -> prod.verified.count(),
+      "link" -> prod.links.count(),
+      "canonicalize" -> prod.canonicalMap.count(),
+      "materialize" -> prod.triples.count())
+    assert(m == expected)
+    assert(audited.triples.collect().toSet == prod.triples.collect().toSet)
+    audited.unpersistAll()
+    prod.unpersistAll()
+  }
+
+  test("runWithMetrics: unpersistAll leaves no cached stage behind") {
+    import org.apache.spark.storage.StorageLevel
+    spark.catalog.clearCache()
+    val cfg = TranscriptGen.Config(nConvs = 10)
+    val (result, _) = Experiments.runWithMetrics(
+      spark, TranscriptGen.transcripts(spark, cfg), cfg, "cache-run")
+    result.unpersistAll()
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(result.prompts.storageLevel == StorageLevel.NONE)
+  }
+
   test("confidence stage attaches levels; missing keys → null level") {
     import spark.implicits._
     val cfg = TranscriptGen.Config(nConvs = 40)

@@ -44,12 +44,9 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("entity linking plan has no cartesian product and no sort-merge join") {
-    import spark.implicits._
     val cfg = TranscriptGen.Config(nConvs = 20)
     val prompts = Extraction.buildPrompts(TranscriptGen.transcripts(spark, cfg))
-    val extracted = Extraction.extractAll(Extraction.scoreMentions(prompts, cfg), cfg)
-    val verified = extracted.flatMap(e =>
-      e.verified.map { case (m, t) => Mention(e.conv_id, e.turn_idx, m, t) })
+    val verified = KGPipeline.verifiedOf(KGPipeline.extract(prompts, cfg))
     // assert on the distributed scoring path (link() localizes small inputs)
     val links = EntityLinking.matches(EntityLinking.proposals(
       EntityLinking.valuesToMatch(verified), Lexicon.catalogue.toArray))
