@@ -110,8 +110,7 @@ object SparkEntry {
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")),
     "kg_mention_confidence" -> ((s, dir) => {
       val cfg = cfgFor(dir)
-      val prompts = Extraction.buildPrompts(TranscriptGen.transcripts(s, cfg))
-      val extracted = Extraction.extractAll(Extraction.scoreMentions(prompts, cfg), cfg)
+      val extracted = KGPipeline.extract(Extraction.buildPrompts(TranscriptGen.transcripts(s, cfg)), cfg)
       Extraction.withConfidence(extracted, cfg).toDF()
     }),
     "kg_mention_logits" -> ((s, dir) => {
@@ -123,8 +122,7 @@ object SparkEntry {
       // typed Dataset (withLogits) keeps the real array.
       import org.apache.spark.sql.functions.{concat_ws, col, round, transform => htransform}
       val cfg = cfgFor(dir)
-      val prompts = Extraction.buildPrompts(TranscriptGen.transcripts(s, cfg))
-      val extracted = Extraction.extractAll(Extraction.scoreMentions(prompts, cfg), cfg)
+      val extracted = KGPipeline.extract(Extraction.buildPrompts(TranscriptGen.transcripts(s, cfg)), cfg)
       Extraction.withLogits(extracted, cfg).toDF()
         .withColumn("logits",
           concat_ws(",", htransform(col("logits"), l => round(l, 6).cast("string"))))

@@ -131,16 +131,25 @@ object Canonicalize {
     * normalized display name is identical are the same real-world
     * entity (the duplicate-catalogue case the reference resolves by
     * hand). Normalization: lowercase, strip punctuation, drop
-    * middle initials. */
+    * middle initials. Returns (src, dst) = (id, the group's min id). */
   def aliasEdges(catalogue: Dataset[Entity]): DataFrame = {
-    val spark = catalogue.sparkSession
-    import spark.implicits._
-    val normed = catalogue.map(e => (normalizeName(e.display_name), e.entity_id))
-      .toDF("norm", "entity_id")
-    val grouped = normed.groupBy("norm")
-      .agg(min("entity_id").as("canon"), collect_set("entity_id").as("ids"))
-    grouped.select(explode(col("ids")).as("src"), col("canon").as("dst"))
-      .filter(col("src") =!= col("dst"))
+    import catalogue.sparkSession.implicits._
+    catalogue.groupByKey(e => normalizeName(e.display_name))
+      .flatMapGroups((_: String, es: Iterator[Entity]) => aliasGroup(es.map(_.entity_id).toSeq))
+      .toDF("src", "dst")
+  }
+
+  /** [[aliasEdges]] over driver-held catalogue rows. */
+  def aliasEdgesLocal(catalogue: Seq[Entity]): Seq[(String, String)] =
+    catalogue.groupBy(e => normalizeName(e.display_name)).values
+      .flatMap(es => aliasGroup(es.map(_.entity_id))).toSeq
+
+  /** The alias rule for one normalized-name group: every other id →
+    * the group's min id (the canonical). */
+  private def aliasGroup(ids: Seq[String]): Seq[(String, String)] = {
+    val distinct = ids.distinct
+    val canonical = distinct.min
+    distinct.filter(_ != canonical).map(_ -> canonical)
   }
 
   def normalizeName(name: String): String =
@@ -151,37 +160,32 @@ object Canonicalize {
       .replaceAll("[^a-z0-9 ]", "")
       .trim
 
+  /** One canonical-map row (`m:<mention>` or `e:<entity_id>` member). */
+  final case class CanonEntry(member: String, canonical: String)
+
   /** mention→canonical-entity map from accepted links + alias edges.
     * Components that contain no catalogue entity id keep the mention
     * itself as canonical subject. Returns (member, canonical).
-    * Adaptive: when the edge set fits the driver, the union-find AND
-    * the canonical-pick run locally in one pass (no groupBy/join
-    * stages); the distributed CC + aggregation path handles big
-    * graphs — both spec-asserted equal. */
+    * Follows linking's path, with no probe: driver-held links and
+    * catalogue (`isLocal`, no job; [[EntityLinking.link]] returns such
+    * links up to [[EntityLinking.LocalValuesThreshold]] distinct
+    * values) get the driver union-find and a driver-held map; anything
+    * else, however few edges, the distributed CC + aggregation path —
+    * both spec-asserted equal. */
   def canonicalMap(accepted: Dataset[LinkMatch], catalogue: Dataset[Entity]): DataFrame = {
     val spark = accepted.sparkSession
     import spark.implicits._
-    val linkEdges = accepted.filter(_.accepted)
-      .map(lm => ("m:" + lm.mention, "e:" + lm.entity_id))
-      .toDF("src", "dst")
-    val aliases = aliasEdges(catalogue)
-      .select(concat(lit("e:"), col("src")).as("src"), concat(lit("e:"), col("dst")).as("dst"))
-    // bounded-probe collect picks the path in ONE job (the
-    // EntityLinking.link pattern, r6 — the r5 count-then-collect pair
-    // cost an extra job per pipeline run): fetch at most threshold+1
-    // rows; if the limit did not truncate, those rows ARE the full
-    // edge set (union-find and the canonical pick are row-order
-    // independent, so the limit's arbitrary order is immaterial).
-    // A big graph still never collects — the probe stops at the cap.
-    val edges = linkEdges.union(aliases).cache()
-    try {
-      val probe = edges.as[(String, String)]
-        .limit(LocalEdgeThreshold.toInt + 1).collect()
-      if (probe.length <= LocalEdgeThreshold)
-        spark.createDataset(canonicalMapLocal(probe.toSeq)).toDF("member", "canonical")
-      else
-        canonicalMapDistributed(edges)
-    } finally edges.unpersist()
+    def linkEdge(lm: LinkMatch) = ("m:" + lm.mention, "e:" + lm.entity_id)
+    if (accepted.isLocal && catalogue.isLocal) {
+      val edges = accepted.collect().toSeq.filter(_.accepted).map(linkEdge) ++
+        aliasEdgesLocal(catalogue.collect().toSeq).map { case (a, b) => ("e:" + a, "e:" + b) }
+      // from a case class: a toDF(names) Project would make the plan non-local
+      spark.createDataFrame(canonicalMapLocal(edges).map { case (m, c) => CanonEntry(m, c) })
+    } else {
+      val aliases = aliasEdges(catalogue)
+        .select(concat(lit("e:"), col("src")).as("src"), concat(lit("e:"), col("dst")).as("dst"))
+      canonicalMapDistributed(accepted.filter(_.accepted).map(linkEdge).toDF("src", "dst").union(aliases))
+    }
   }
 
   /** Driver-local union-find + canonical pick over a small edge set. */

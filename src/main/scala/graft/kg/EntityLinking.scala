@@ -114,7 +114,9 @@ object EntityLinking {
 
   /** Full linking pass over a mention set: distributed dedup, then
     * adaptive scoring (driver-local below threshold — kills ~6 tiny
-    * stages per run — identical math either way, spec-asserted). */
+    * stages per run — identical math either way, spec-asserted). The
+    * pipeline's one small-path decision: the driver-held rows it then
+    * returns steer canonicalization and materialization (`isLocal`). */
   def link(mentions: Dataset[Mention], catalogue: Array[Entity]): Dataset[LinkMatch] = {
     val spark = mentions.sparkSession
     import spark.implicits._
@@ -134,21 +136,11 @@ object EntityLinking {
     * (BlockedLinkingSpec, incl. a ×100 catalogue). */
   val BroadcastCatalogueThreshold: Long = 100000L
 
-  /** Full linking against a catalogue DATASET, auto-selecting the
-    * path by catalogue size the same way the local/distributed
-    * scoring paths are gated: small → collect + broadcast (exact
-    * reference semantics); large → blocked equi-join candidates +
-    * identical margin/normalize/accept semantics downstream. */
-  def linkAdaptive(mentions: Dataset[Mention], catalogue: Dataset[Entity],
-                   forceBlocked: Boolean = false): Dataset[LinkMatch] = {
-    if (!forceBlocked && catalogue.count() <= BroadcastCatalogueThreshold)
-      link(mentions, catalogue.collect())
-    else
-      matches(proposalsBlocked(valuesToMatch(mentions), catalogue))
-  }
-
-  /** Array-catalogue overload (no extra count job — the size is known
-    * driver-side); used by the pipeline. */
+  /** Full linking, the path selected by catalogue size (known
+    * driver-side, so no count job): small → [[link]] (broadcast
+    * catalogue, exact reference semantics); large → blocked equi-join
+    * candidates + identical margin/normalize/accept semantics
+    * downstream. Used by the pipeline. */
   def linkAdaptive(mentions: Dataset[Mention], catalogue: Array[Entity]): Dataset[LinkMatch] = {
     if (catalogue.length <= BroadcastCatalogueThreshold) link(mentions, catalogue)
     else {

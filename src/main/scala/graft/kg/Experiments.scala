@@ -148,16 +148,19 @@ object Experiments {
                      cfg: TranscriptGen.Config, runId: String): (KGPipeline.Result, Dataset[StageMetric]) = {
     import spark.implicits._
     val metrics = Vector.newBuilder[StageMetric]
-    def staged[T](stage: String, rowsIn: Long)(f: => (T, Long)): (T, Long) = {
+    // rowsIn is timed with the stage (verify's is the stage's one job)
+    def staged[T](stage: String, rowsIn: => Long)(f: => (T, Long)): (T, Long) = {
       val t0 = System.nanoTime()
+      val in = rowsIn
       val (r, rowsOut) = f
-      metrics += StageMetric(runId, stage, rowsIn, rowsOut,
-        math.max(0L, rowsIn - rowsOut), (System.nanoTime() - t0) / 1000000L)
+      metrics += StageMetric(runId, stage, in, rowsOut,
+        math.max(0L, in - rowsOut), (System.nanoTime() - t0) / 1000000L)
       (r, rowsOut)
     }
     def cachedCount[T](ds: Dataset[T]): (Dataset[T], Long) = { val c = ds.cache(); (c, c.count()) }
 
-    val (prompts, nPrompts) = staged("prompts", turns.count()) {
+    val nTurns = turns.count()
+    val (prompts, nPrompts) = staged("prompts", nTurns) {
       cachedCount(Extraction.buildPromptsWithShots(turns, Array.empty, 0))
     }
     val (extracted, _) = staged("extract", nPrompts) {
@@ -168,10 +171,10 @@ object Experiments {
     val verified = KGPipeline.verifiedOf(extracted)
     val relations = KGPipeline.relationsOf(extracted)
     // the three projection sizes in ONE job over the cached rows
-    val sizes = extracted.select(Seq("parsed", "verified", "relations")
+    lazy val sizes = extracted.select(Seq("parsed", "verified", "relations")
       .map(c => coalesce(sum(size(col(c))), lit(0L))): _*).head()
-    val (nVerified, nRelations) = (sizes.getLong(1), sizes.getLong(2))
-    staged[Unit]("verify", sizes.getLong(0)) { ((), nVerified) }
+    val (_, nVerified) = staged[Unit]("verify", sizes.getLong(0)) { ((), sizes.getLong(1)) }
+    val nRelations = sizes.getLong(2)
     val (links, nLinks) = staged("link", nVerified) {
       cachedCount(EntityLinking.linkAdaptive(verified, Lexicon.catalogue.toArray))
     }

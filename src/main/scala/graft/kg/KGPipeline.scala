@@ -64,24 +64,27 @@ object KGPipeline {
     val verified = verifiedOf(extracted)
     val relations = relationsOf(extracted)
 
-    // 5. entity linking — path auto-selected by catalogue size:
-    //    broadcast full-scan below EntityLinking.BroadcastCatalogueThreshold,
-    //    blocking-key equi-join candidates above it
+    // 5. entity linking — path auto-selected by catalogue size
+    //    (EntityLinking.BroadcastCatalogueThreshold) and distinct mention
+    //    count: few values → driver-held links, which steps 6-7 follow
     val catalogue = Lexicon.catalogue.toArray
-    val links = EntityLinking.linkAdaptive(verified, catalogue).cache()
+    val links = cachedUnlessLocal(EntityLinking.linkAdaptive(verified, catalogue))
 
     // 6. canonicalization (CC over accepted links + catalogue aliases)
-    val canon = Canonicalize.canonicalMap(links, TranscriptGen.entities(spark))
-      .cache()
+    val canon = cachedUnlessLocal(Canonicalize.canonicalMap(links, TranscriptGen.entities(spark)))
 
-    // 7. triple materialization — adaptive like the CC step: a small
-    //    canonical map rides a broadcast variable through ONE narrow
-    //    flatMap over the extraction rows; a huge one falls back to
-    //    broadcast joins (same semantics, tested equal)
+    // 7. triple materialization: a driver-held canonical map rides a
+    //    broadcast variable through ONE narrow flatMap over the
+    //    extraction rows; a distributed one, broadcast joins
     val triples = materializeTriplesAdaptive(extracted, verified, relations, canon)
 
     Result(turns, prompts, mentions, verified, relations, links, canon, triples, extracted)
   }
+
+  /** A cached LocalRelation is read back through Spark jobs, so only
+    * distributed stages are cached. */
+  private def cachedUnlessLocal[T](ds: Dataset[T]): Dataset[T] =
+    if (ds.isLocal) ds else ds.cache()
 
   /** Detection under `technique`, then the fused per-turn chain. */
   def extract(prompts: Dataset[Prompt], cfg: TranscriptGen.Config,
@@ -112,29 +115,22 @@ object KGPipeline {
       e.relations.map { case (s, p, o) => Relation(e.conv_id, e.turn_idx, s, p, o) })
   }
 
-  /** Canonical-map rows that fit the driver comfortably take the
-    * narrow path (collect once → broadcast var → single fused flatMap
-    * + distinct: no joins, no union, no per-branch broadcast
-    * exchanges). Larger maps use [[materializeTriples]] joins. */
-  val LocalCanonThreshold: Long = 2L << 21
-
+  /** Follows canonicalization's path (`isLocal`, no job): a driver-held
+    * canonical map is broadcast into ONE narrow flatMap + distinct (no
+    * joins, no union); any other map takes the [[materializeTriples]]
+    * broadcast joins. */
   def materializeTriplesAdaptive(extracted: Dataset[Extraction.TurnExtraction],
                                  verified: Dataset[Mention], relations: Dataset[Relation],
-                                 canon: DataFrame): Dataset[Triple] = {
-    val spark = extracted.sparkSession
-    import spark.implicits._
-    val canonM = canon.filter(org.apache.spark.sql.functions.col("member").startsWith("m:"))
-    // bounded-probe collect (one job instead of count + collect, r6):
-    // if the limit did not truncate, the probe IS the full map — the
-    // Map is unordered, so the limit's arbitrary row order is
-    // immaterial; an over-threshold map never collects past the cap
-    val probe = canonM.limit(LocalCanonThreshold.toInt + 1).collect()
-    if (probe.length > LocalCanonThreshold)
-      return materializeTriples(verified, relations, canon)
-    val map = probe.map(r => r.getString(0).substring(2) -> r.getString(1)).toMap
-    val bc = spark.sparkContext.broadcast(map)
-    extracted.flatMap { e => triplesOf(e, bc.value) }.distinct()
-  }
+                                 canon: DataFrame): Dataset[Triple] =
+    if (!canon.isLocal) materializeTriples(verified, relations, canon)
+    else {
+      val spark = extracted.sparkSession
+      import spark.implicits._
+      val map = canon.as[(String, String)].collect()
+        .collect { case (m, c) if m.startsWith("m:") => m.substring(2) -> c }.toMap
+      val bc = spark.sparkContext.broadcast(map)
+      extracted.flatMap(e => triplesOf(e, bc.value)).distinct()
+    }
 
   /** The triple vocabulary of one extracted turn against a canonical
     * surface map — the ONE definition shared by the batch narrow path

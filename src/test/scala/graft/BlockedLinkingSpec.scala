@@ -33,7 +33,7 @@ class BlockedLinkingSpec extends AnyFunSuite {
     r.unpersistAll()
 
     // small catalogue: adaptive == the broadcast reference path, exactly
-    val small = EntityLinking.linkAdaptive(verified, TranscriptGen.entities(spark))
+    val small = EntityLinking.linkAdaptive(verified, Lexicon.catalogue.toArray)
       .collect().map(l => (l.mention, l.entity_id, l.accepted)).toSet
     val direct = EntityLinking.link(verified, Lexicon.catalogue.toArray)
       .collect().map(l => (l.mention, l.entity_id, l.accepted)).toSet
@@ -48,7 +48,8 @@ class BlockedLinkingSpec extends AnyFunSuite {
     val bigDs = spark.createDataset(big)
     val exact = EntityLinking.link(verified, big.toArray)
       .filter(_.accepted).collect().map(l => l.mention -> l.entity_id).toMap
-    val blocked = EntityLinking.linkAdaptive(verified, bigDs, forceBlocked = true)
+    val blocked = EntityLinking.matches(
+      EntityLinking.proposalsBlocked(EntityLinking.valuesToMatch(verified), bigDs))
       .filter(_.accepted).collect().map(l => l.mention -> l.entity_id).toMap
     assert(exact.nonEmpty)
     val hits = exact.count { case (m, e) => blocked.get(m).contains(e) }

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.kg.Canonicalize
+import graft.kg.{Canonicalize, Entity, KGPipeline, Lexicon, TranscriptGen}
 
 class CanonicalizeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -72,6 +72,37 @@ class CanonicalizeSpec extends AnyFunSuite {
       assert(math.abs(d.confidence - l.confidence) < 1e-12, m)
       assert(d.accepted == l.accepted, m)
     }
+  }
+
+  test("driver alias edges ≡ aliasEdges on the fixture catalogue and on forced name duplicates") {
+    import spark.implicits._
+    val forced = Seq(
+      Entity("P2", "Alice J. Johnson", "Personne"), Entity("P1", "alice johnson", "Personne"),
+      Entity("P3", "Alice Johnson!", "Personne"), Entity("P3", "Alice K. Johnson", "Personne"),
+      Entity("O9", "ACME Industries", "Entreprise"), Entity("O10", "Acme  Industries.", "Entreprise"),
+      Entity("O11", "Lone Org", "Entreprise"))
+    for (cat <- Seq(Lexicon.catalogue, forced)) {
+      val local = Canonicalize.aliasEdgesLocal(cat)
+      val dist = Canonicalize.aliasEdges(cat.toDS()).as[(String, String)].collect()
+      assert(local.toSet == dist.toSet)
+      assert(local.size == local.toSet.size && dist.length == dist.toSet.size, "no duplicate edges")
+      assert(local.nonEmpty)
+    }
+    assert(Canonicalize.aliasEdgesLocal(forced).toSet == Set("P2" -> "P1", "P3" -> "P1", "O9" -> "O10"))
+  }
+
+  test("canonicalMap follows isLocal: driver-held inputs give a driver-held map equal to the distributed one") {
+    val r = KGPipeline.run(spark, TranscriptGen.Config(nConvs = 40))
+    val catalogue = TranscriptGen.entities(spark)
+    assert(r.links.isLocal && catalogue.isLocal)
+    val local = Canonicalize.canonicalMap(r.links, catalogue)
+    val dist = Canonicalize.canonicalMap(r.links.repartition(2), catalogue.repartition(2))
+    assert(local.isLocal && !dist.isLocal)
+    val rows = local.collect().map(row => row.getString(0) -> row.getString(1))
+    assert(rows.exists(_._1.startsWith("m:")) && rows.exists(_._1.startsWith("e:")))
+    assert(rows.toSet == dist.collect().map(row => row.getString(0) -> row.getString(1)).toSet)
+    assert(rows.length == rows.toMap.size, "one canonical per member")
+    r.unpersistAll()
   }
 
   test("normalizeName drops middle initials and punctuation") {

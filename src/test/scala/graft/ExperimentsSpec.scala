@@ -49,6 +49,8 @@ class ExperimentsSpec extends AnyFunSuite {
     assert(m("prompts").dropped > 0)
     // verify drops a small number of mentions
     assert(m("verify").rows_out <= m("verify").rows_in)
+    // its one aggregate job is timed inside the stage
+    assert(m("verify").wall_ms > 0)
     assert(m("materialize").rows_out == result.triples.count())
     assert(metrics.collect().forall(_.run_id == "test-run"))
     result.unpersistAll()

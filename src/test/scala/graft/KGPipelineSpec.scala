@@ -7,8 +7,6 @@ import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.PosixFilePermissions
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import scala.jdk.CollectionConverters._
 
 class KGPipelineSpec extends AnyFunSuite {
@@ -82,6 +80,33 @@ class KGPipelineSpec extends AnyFunSuite {
     val t13 = KGPipeline.run(spark, turns13, cfg).triples.collect().toSet
     assert(t2 == t13)
     assert(t2.nonEmpty)
+  }
+
+  test("run + triples.count() on 500 conversations: at most 6 Spark jobs, links and canonical map driver-held") {
+    var r: KGPipeline.Result = null
+    val jobs = SparkTestBase.countJobs {
+      r = KGPipeline.run(spark, TranscriptGen.Config(nConvs = 500))
+      r.triples.count()
+    }
+    info(s"${jobs.started} jobs: ${jobs.callSites.mkString(", ")}")
+    assert(jobs.started <= 6, jobs.callSites)
+    assert(r.links.isLocal && r.canonicalMap.isLocal)
+    r.unpersistAll()
+  }
+
+  test("driver kg_mention_confidence / kg_mention_logits rows equal the spelled-out extraction chain") {
+    import org.apache.spark.sql.functions.{col, concat_ws, round, transform}
+    val cfg40 = TranscriptGen.Config(nConvs = 40)
+    val extracted = Extraction.extractAll(Extraction.scoreMentions(
+      Extraction.buildPrompts(TranscriptGen.transcripts(spark, cfg40)), cfg40), cfg40)
+    // any sf dir other than sf0.01/sf0.1 gives the 40-conversation config
+    def rows(query: String) = SparkEntry.queries(query)(spark, "sf0.001").collect().toSet
+    val conf = Extraction.withConfidence(extracted, cfg40).toDF().collect().toSet
+    assert(conf.nonEmpty && rows("kg_mention_confidence") == conf)
+    val logits = Extraction.withLogits(extracted, cfg40).toDF()
+      .withColumn("logits", concat_ws(",", transform(col("logits"), l => round(l, 6).cast("string"))))
+      .collect().toSet
+    assert(logits.nonEmpty && rows("kg_mention_logits") == logits)
   }
 
   /** Parquet files per directory under `d`. */
@@ -170,26 +195,6 @@ class KGPipelineSpec extends AnyFunSuite {
     assert(TableIO.readTriples(spark, dir).collect().toSet == before)
   }
 
-  /** Jobs that wrote records to files while `f` ran. */
-  private def writeJobs(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val listener = new SparkListener {
-      val jobOfStage = scala.collection.mutable.Map.empty[Int, Int]
-      val writers = scala.collection.mutable.Set.empty[Int]
-      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-        e.stageIds.foreach(jobOfStage(_) = e.jobId)
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-        if (e.taskMetrics != null && e.taskMetrics.outputMetrics.recordsWritten > 0)
-          jobOfStage.get(e.stageId).foreach(writers += _)
-      }
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try { f; ListenerBusDrain(sc) } finally sc.removeSparkListener(listener)
-    listener.synchronized(listener.writers.size)
-  }
-
   /** POSIX permissions under `d` by kind: dirs by depth, then parquet
     * files and their `.crc` checksums. */
   private def modes(d: String): Map[String, Set[String]] = {
@@ -228,14 +233,16 @@ class KGPipelineSpec extends AnyFunSuite {
 
   test("sink: one write job per writeTriples call, whatever the number of missing ranges") {
     val dir = SparkTestBase.scratchDir("graft-triples-jobs")
-    val crashed = writeJobs {
+    val crashed = SparkTestBase.countJobs {
       intercept[RuntimeException](TableIO.writeTriples(result.triples, dir, failAfterRanges = 1))
-    }
+    }.writing
     assert(TableIO.readManifest(dir).size == 1)
-    val resumed = writeJobs(TableIO.writeTriples(result.triples, dir))
-    val fresh = writeJobs(TableIO.writeTriples(result.triples, SparkTestBase.scratchDir("graft-triples-jobs")))
+    val resumed = SparkTestBase.countJobs(TableIO.writeTriples(result.triples, dir)).writing
+    val fresh = SparkTestBase.countJobs(
+      TableIO.writeTriples(result.triples, SparkTestBase.scratchDir("graft-triples-jobs"))).writing
     assert((crashed, resumed, fresh) == ((1, 1, 1)))
-    assert(writeJobs(TableIO.writeTriples(result.triples, dir)) == 0, "a complete sink writes nothing")
+    assert(SparkTestBase.countJobs(TableIO.writeTriples(result.triples, dir)).writing == 0,
+      "a complete sink writes nothing")
   }
 
   test("sink: an empty input commits every range empty and reads back empty") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Shared local SparkSession for all specs (one JVM, forked by sbt). */
@@ -23,6 +25,35 @@ object SparkTestBase {
   private def deleteRecursive(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursive)
     f.delete(): Unit
+  }
+
+  /** Spark jobs started while a block ran (their call sites), and how
+    * many of them wrote records to files. */
+  final case class Jobs(callSites: Seq[String], writing: Int) {
+    def started: Int = callSites.size
+  }
+
+  /** Counts the jobs `f` starts on the shared session (specs run one at
+    * a time, so no other suite's jobs are counted). */
+  def countJobs(f: => Unit): Jobs = {
+    val sc = spark.sparkContext
+    val listener = new SparkListener {
+      val jobs = scala.collection.mutable.ArrayBuffer.empty[String]
+      val jobOfStage = scala.collection.mutable.Map.empty[Int, Int]
+      val writers = scala.collection.mutable.Set.empty[Int]
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        jobs += e.stageInfos.maxBy(_.stageId).name // the result stage: the action's call site
+        e.stageIds.foreach(jobOfStage(_) = e.jobId)
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+        if (e.taskMetrics != null && e.taskMetrics.outputMetrics.recordsWritten > 0)
+          jobOfStage.get(e.stageId).foreach(writers += _)
+      }
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { f; ListenerBusDrain(sc) } finally sc.removeSparkListener(listener)
+    listener.synchronized(Jobs(listener.jobs.toSeq, listener.writers.size))
   }
 
   lazy val spark: SparkSession = {
