@@ -4,38 +4,32 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Canonicalization: connected components over accepted `sameAs`
-  * edges, canonical id = min member per component (SURVEY §7.0 step
-  * 6). The reference delegates this merge to a human via Excel
-  * (entityMatching.py:170-430); we close it with an iterative
-  * DataFrame fixpoint.
+  * edges, canonical id = min catalogue entity id per component
+  * (SURVEY §7.0 step 6). The reference delegates this merge to a human
+  * via Excel (entityMatching.py:170-430).
   *
-  * Algorithm: hash-min label propagation. Each vertex starts labeled
-  * with itself; every round each vertex takes the min label among
-  * itself and its neighbors; stop when no label changes. Rounds =
-  * O(graph diameter) — our link graphs are star-shaped (mention ↔
-  * entity ↔ alias), diameter ≤ 4. `localCheckpoint` every round cuts
-  * the growing lineage (SURVEY §7.3 plan-growth hazard).
+  * The pipeline's map ([[canonicalMap]]) is built on the driver at any
+  * size: linking's output is collected once and closed with a
+  * union-find. Materialization broadcasts the map anyway, so a
+  * distributed map would buy no memory headroom, only jobs.
   *
-  * Skew: a hot mention string produces one high-degree vertex. The
-  * groupBy(dst).min aggregation handles it with map-side partial
-  * aggregation (hash-min is algebraic), so no salting is needed
-  * here — the skew collapses in the combiner. AQE skew-join handles
-  * the join side.
+  * [[connectedComponents]] is the distributed hash-min label
+  * propagation over an edge frame, for graphs that live in Spark (q35).
   */
 object Canonicalize {
 
-  /** edges: (src, dst) string pairs, undirected. Returns
+  /** Hash-min label propagation: each vertex starts labeled with
+    * itself; every round each vertex takes the min label among itself
+    * and its neighbors; stop when no label changes. Rounds = O(graph
+    * diameter). `localCheckpoint` every round cuts the growing lineage
+    * (SURVEY §7.3 plan-growth hazard).
+    *
+    * Skew: a hot vertex's groupBy(dst).min is algebraic, so it
+    * collapses in the map-side combiner; no salting is needed.
+    *
+    * edges: (src, dst) string pairs, undirected. Returns
     * (vertex, component) with component = min vertex id reachable. */
-  /** Edge-count threshold below which CC runs as driver-local
-    * union-find over the (already tiny) distinct edge set — the same
-    * adaptivity as a broadcast join: the distinct mention/entity graph
-    * is typically orders of magnitude smaller than the corpus, and
-    * the iterative loop's many small jobs would otherwise dominate.
-    * Above the threshold the distributed hash-min loop runs. */
-  val LocalEdgeThreshold: Long = 2L << 21 // ~4M edges ≈ a few hundred MB driver-side
-
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-                          forceDistributed: Boolean = false): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     val sym = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -50,20 +44,9 @@ object Canonicalize {
     // — NOT by mutating the session-global shuffle-partitions conf,
     // which would race against concurrent queries on the same session.
     val nEdges = sym.count()
-    if (nEdges <= LocalEdgeThreshold && !forceDistributed)
-      return connectedComponentsLocal(spark, sym)
     val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions").toLong
     val loopPartitions = math.max(4L, math.min(sessionWidth, nEdges / 100000L + 1)).toInt
     connectedComponentsLoop(sym.repartition(loopPartitions, col("src")), maxIter, loopPartitions)
-  }
-
-  /** Driver-local union-find over a collected small edge set; output
-    * schema identical to the distributed loop. */
-  private def connectedComponentsLocal(spark: org.apache.spark.sql.SparkSession,
-                                       sym: DataFrame): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(unionFind(sym.as[(String, String)].collect().toSeq))
-      .toDF("vertex", "component")
   }
 
   /** Driver-local union-find: every vertex of `edges` paired with its
@@ -132,14 +115,6 @@ object Canonicalize {
     * entity (the duplicate-catalogue case the reference resolves by
     * hand). Normalization: lowercase, strip punctuation, drop
     * middle initials. Returns (src, dst) = (id, the group's min id). */
-  def aliasEdges(catalogue: Dataset[Entity]): DataFrame = {
-    import catalogue.sparkSession.implicits._
-    catalogue.groupByKey(e => normalizeName(e.display_name))
-      .flatMapGroups((_: String, es: Iterator[Entity]) => aliasGroup(es.map(_.entity_id).toSeq))
-      .toDF("src", "dst")
-  }
-
-  /** [[aliasEdges]] over driver-held catalogue rows. */
   def aliasEdgesLocal(catalogue: Seq[Entity]): Seq[(String, String)] =
     catalogue.groupBy(e => normalizeName(e.display_name)).values
       .flatMap(es => aliasGroup(es.map(_.entity_id))).toSeq
@@ -166,29 +141,24 @@ object Canonicalize {
   /** mention→canonical-entity map from accepted links + alias edges.
     * Components that contain no catalogue entity id keep the mention
     * itself as canonical subject. Returns (member, canonical).
-    * Follows linking's path, with no probe: driver-held links and
-    * catalogue (`isLocal`, no job; [[EntityLinking.link]] returns such
-    * links up to [[EntityLinking.LocalValuesThreshold]] distinct
-    * values) get the driver union-find and a driver-held map; anything
-    * else, however few edges, the distributed CC + aggregation path —
-    * both spec-asserted equal. */
+    *
+    * Both inputs are collected once: a driver-held input
+    * ([[EntityLinking.link]]'s links up to
+    * [[EntityLinking.LocalValuesThreshold]] distinct values, the
+    * pipeline's catalogue) runs no job, a distributed one runs one job.
+    * The map is a `LocalRelation` of [[CanonEntry]] rows, so reading it
+    * runs no job either. */
   def canonicalMap(accepted: Dataset[LinkMatch], catalogue: Dataset[Entity]): DataFrame = {
-    val spark = accepted.sparkSession
-    import spark.implicits._
-    def linkEdge(lm: LinkMatch) = ("m:" + lm.mention, "e:" + lm.entity_id)
-    if (accepted.isLocal && catalogue.isLocal) {
-      val edges = accepted.collect().toSeq.filter(_.accepted).map(linkEdge) ++
-        aliasEdgesLocal(catalogue.collect().toSeq).map { case (a, b) => ("e:" + a, "e:" + b) }
-      // from a case class: a toDF(names) Project would make the plan non-local
-      spark.createDataFrame(canonicalMapLocal(edges).map { case (m, c) => CanonEntry(m, c) })
-    } else {
-      val aliases = aliasEdges(catalogue)
-        .select(concat(lit("e:"), col("src")).as("src"), concat(lit("e:"), col("dst")).as("dst"))
-      canonicalMapDistributed(accepted.filter(_.accepted).map(linkEdge).toDF("src", "dst").union(aliases))
-    }
+    // filtered on the driver: a typed filter would make a LocalRelation run a job
+    val edges = accepted.collect().toSeq.filter(_.accepted)
+      .map(lm => ("m:" + lm.mention, "e:" + lm.entity_id)) ++
+      aliasEdgesLocal(catalogue.collect().toSeq).map { case (a, b) => ("e:" + a, "e:" + b) }
+    // from a case class: the plan is a bare LocalRelation (toDF(names) adds a Project)
+    accepted.sparkSession.createDataFrame(
+      canonicalMapLocal(edges).map { case (m, c) => CanonEntry(m, c) })
   }
 
-  /** Driver-local union-find + canonical pick over a small edge set. */
+  /** Driver-local union-find + canonical pick over an edge set. */
   def canonicalMapLocal(edges: Seq[(String, String)]): Seq[(String, String)] = {
     val roots = unionFind(edges)
     // root = min member, the canonical of an entity-free component
@@ -197,19 +167,5 @@ object Canonicalize {
       root -> (if (entityIds.nonEmpty) entityIds.min else root)
     }
     roots.map { case (m, root) => m -> canonical(root) }
-  }
-
-  /** Distributed CC + canonical aggregation (the big-graph path). */
-  def canonicalMapDistributed(edges: DataFrame): DataFrame = {
-    val cc = connectedComponents(edges, forceDistributed = true)
-    // canonical per component: min entity id if any entity member, else min member
-    val canon = cc.groupBy("component")
-      .agg(
-        min(when(col("vertex").startsWith("e:"), substring(col("vertex"), 3, 1000000))).as("canonEntity"),
-        min(col("vertex")).as("minMember"))
-      .select(col("component"),
-        coalesce(col("canonEntity"), col("minMember")).as("canonical"))
-    cc.join(canon, "component")
-      .select(col("vertex").as("member"), col("canonical"))
   }
 }

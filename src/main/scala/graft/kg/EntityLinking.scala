@@ -115,8 +115,9 @@ object EntityLinking {
   /** Full linking pass over a mention set: distributed dedup, then
     * adaptive scoring (driver-local below threshold — kills ~6 tiny
     * stages per run — identical math either way, spec-asserted). The
-    * pipeline's one small-path decision: the driver-held rows it then
-    * returns steer canonicalization and materialization (`isLocal`). */
+    * pipeline's one size decision: canonicalization collects the
+    * links once either way, and everything after it runs on the
+    * driver's map. */
   def link(mentions: Dataset[Mention], catalogue: Array[Entity]): Dataset[LinkMatch] = {
     val spark = mentions.sparkSession
     import spark.implicits._

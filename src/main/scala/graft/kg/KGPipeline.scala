@@ -1,7 +1,6 @@
 package graft.kg
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** End-to-end KG construction (SURVEY.md §7.0): transcripts →
   * ordered turns → batched mention scorer → parse → verify →
@@ -28,7 +27,8 @@ object KGPipeline {
       canonicalMap: DataFrame, // (member, canonical)
       triples: Dataset[Triple],
       extracted: Dataset[Extraction.TurnExtraction]) {
-    /** Release the pipeline's cached stages (extracted/links/canon). */
+    /** Release whatever of extracted/links/canon is cached: [[run]]
+      * caches the extraction rows, an audited run every stage. */
     def unpersistAll(): Unit = {
       extracted.unpersist()
       links.unpersist()
@@ -43,8 +43,6 @@ object KGPipeline {
           technique: PromptTechniques.Technique = PromptTechniques.Discussion,
           fewShotPool: Array[FewShots.ShotExample] = Array.empty,
           nbFewShots: Int = 0): Result = {
-    import spark.implicits._
-
     // 1-2. order is carried by (conv_id, turn_idx) keys; prompts with
     //      brace/empty/oversized drop semantics — optionally carrying
     //      a sentence-kNN few-shot block (the reference's headline
@@ -66,25 +64,21 @@ object KGPipeline {
 
     // 5. entity linking — path auto-selected by catalogue size
     //    (EntityLinking.BroadcastCatalogueThreshold) and distinct mention
-    //    count: few values → driver-held links, which steps 6-7 follow
+    //    count: few values are scored on the driver, more in mapPartitions
     val catalogue = Lexicon.catalogue.toArray
-    val links = cachedUnlessLocal(EntityLinking.linkAdaptive(verified, catalogue))
+    val links = EntityLinking.linkAdaptive(verified, catalogue)
 
-    // 6. canonicalization (CC over accepted links + catalogue aliases)
-    val canon = cachedUnlessLocal(Canonicalize.canonicalMap(links, TranscriptGen.entities(spark)))
+    // 6. canonicalization: the links are collected once and closed with
+    //    a driver union-find (CC over accepted links + catalogue
+    //    aliases); the map is a driver-held LocalRelation
+    val canon = Canonicalize.canonicalMap(links, TranscriptGen.entities(spark))
 
-    // 7. triple materialization: a driver-held canonical map rides a
-    //    broadcast variable through ONE narrow flatMap over the
-    //    extraction rows; a distributed one, broadcast joins
+    // 7. triple materialization: the canonical map rides a broadcast
+    //    variable through ONE narrow flatMap over the extraction rows
     val triples = materializeTriplesAdaptive(extracted, verified, relations, canon)
 
     Result(turns, prompts, mentions, verified, relations, links, canon, triples, extracted)
   }
-
-  /** A cached LocalRelation is read back through Spark jobs, so only
-    * distributed stages are cached. */
-  private def cachedUnlessLocal[T](ds: Dataset[T]): Dataset[T] =
-    if (ds.isLocal) ds else ds.cache()
 
   /** Detection under `technique`, then the fused per-turn chain. */
   def extract(prompts: Dataset[Prompt], cfg: TranscriptGen.Config,
@@ -115,25 +109,23 @@ object KGPipeline {
       e.relations.map { case (s, p, o) => Relation(e.conv_id, e.turn_idx, s, p, o) })
   }
 
-  /** Follows canonicalization's path (`isLocal`, no job): a driver-held
-    * canonical map is broadcast into ONE narrow flatMap + distinct (no
-    * joins, no union); any other map takes the [[materializeTriples]]
-    * broadcast joins. */
+  /** The canonical map's `m:` rows are collected into a driver `Map`
+    * and broadcast into ONE narrow flatMap + distinct over the
+    * extraction rows: no joins, no union. `verified` and `relations`
+    * are unused; they keep the signature its callers compile against. */
   def materializeTriplesAdaptive(extracted: Dataset[Extraction.TurnExtraction],
                                  verified: Dataset[Mention], relations: Dataset[Relation],
-                                 canon: DataFrame): Dataset[Triple] =
-    if (!canon.isLocal) materializeTriples(verified, relations, canon)
-    else {
-      val spark = extracted.sparkSession
-      import spark.implicits._
-      val map = canon.as[(String, String)].collect()
-        .collect { case (m, c) if m.startsWith("m:") => m.substring(2) -> c }.toMap
-      val bc = spark.sparkContext.broadcast(map)
-      extracted.flatMap(e => triplesOf(e, bc.value)).distinct()
-    }
+                                 canon: DataFrame): Dataset[Triple] = {
+    val spark = extracted.sparkSession
+    import spark.implicits._
+    val map = canon.as[(String, String)].collect()
+      .collect { case (m, c) if m.startsWith("m:") => m.substring(2) -> c }.toMap
+    val bc = spark.sparkContext.broadcast(map)
+    extracted.flatMap(e => triplesOf(e, bc.value)).distinct()
+  }
 
   /** The triple vocabulary of one extracted turn against a canonical
-    * surface map — the ONE definition shared by the batch narrow path
+    * surface map — the ONE definition shared by batch materialization
     * and the streaming lift (StreamingExtraction.tripleStream): a
     * change here changes both, so batch and stream can never drift. */
   def triplesOf(e: Extraction.TurnExtraction, m: Map[String, String]): Seq[Triple] = {
@@ -143,39 +135,5 @@ object KGPipeline {
     } ++ e.relations.map { case (s, p, o) =>
       Triple(m.getOrElse(s, s), p, m.getOrElse(o, o))
     }
-  }
-
-  /** Maps a surface form through the canonical map (members are
-    * prefixed "m:"); non-linked surfaces stay themselves. Broadcast
-    * join: the canonical map is |distinct linkable mentions| +
-    * |catalogue| rows — small relative to the mention stream. */
-  def materializeTriples(verified: Dataset[Mention], relations: Dataset[Relation],
-                         canon: DataFrame): Dataset[Triple] = {
-    val spark = verified.sparkSession
-    import spark.implicits._
-
-    val canonM = broadcast(
-      canon.filter(col("member").startsWith("m:"))
-        .select(expr("substring(member, 3)").as("surface"), col("canonical")))
-
-    val mentionTriples = verified.toDF()
-      .join(canonM, verified("mention") === canonM("surface"), "left_outer")
-      .select(
-        concat(col("conv_id"), lit("#"), col("turn_idx")).as("subj"),
-        concat(lit("mentions_"), col("tag")).as("pred"),
-        coalesce(col("canonical"), col("mention")).as("obj"))
-
-    val rel = relations.toDF()
-    val relTriples = rel
-      .join(canonM.withColumnRenamed("surface", "s_surface").withColumnRenamed("canonical", "s_canon"),
-        rel("subj") === col("s_surface"), "left_outer")
-      .join(canonM.withColumnRenamed("surface", "o_surface").withColumnRenamed("canonical", "o_canon"),
-        rel("obj") === col("o_surface"), "left_outer")
-      .select(
-        coalesce(col("s_canon"), rel("subj")).as("subj"),
-        rel("pred").as("pred"),
-        coalesce(col("o_canon"), rel("obj")).as("obj"))
-
-    mentionTriples.union(relTriples).distinct().as[Triple]
   }
 }

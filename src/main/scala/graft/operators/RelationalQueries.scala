@@ -550,9 +550,8 @@ object RelationalQueries {
     * the north rule's core graph op (kg/Canonicalize — SURVEY §7.0
     * step 6): a two-level star forest built portably from the events
     * table (user → decade hub → century hub, the mention↔entity↔alias
-    * shape), run through the REAL distributed hash-min label-
-    * propagation loop (forceDistributed — the big-graph path a
-    * cluster exercises), while DuckDB reaches the same (vertex,
+    * shape), run through the distributed hash-min label-propagation
+    * loop, while DuckDB reaches the same (vertex,
     * min-reachable-label) fixpoint with a recursive CTE. Until now
     * this family was spec-only. */
   def q35ConnectedComponents(spark: SparkSession, dir: String): DataFrame = {
@@ -563,7 +562,7 @@ object RelationalQueries {
     val e2 = u.select(
       concat(lit("c:"), floor(col("user_id") / 10).cast("long")).as("src"),
       concat(lit("C:"), floor(col("user_id") / 100).cast("long")).as("dst")).distinct()
-    graft.kg.Canonicalize.connectedComponents(e1.union(e2), forceDistributed = true)
+    graft.kg.Canonicalize.connectedComponents(e1.union(e2))
   }
 
   /** Text-quality scoring, oracle-grade shadow of the TextOps.profile

@@ -6,6 +6,8 @@ import graft.kg.{Canonicalize, Entity, KGPipeline, Lexicon, TranscriptGen}
 class CanonicalizeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
+  // On vertices without an `e:` prefix the union-find's canonical is
+  // the component's min member: an independent reference for the loop.
   test("local union-find and distributed hash-min agree on a random graph") {
     import spark.implicits._
     val rnd = new scala.util.Random(13)
@@ -13,10 +15,8 @@ class CanonicalizeSpec extends AnyFunSuite {
     val edges = (0 until 350).map { _ =>
       (vertices(rnd.nextInt(vertices.length)), vertices(rnd.nextInt(vertices.length)))
     }.filter { case (a, b) => a != b }
-    val df = edges.toDF("src", "dst")
-    val local = Canonicalize.connectedComponents(df)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val dist = Canonicalize.connectedComponents(df, forceDistributed = true)
+    val local = Canonicalize.canonicalMapLocal(edges).toMap
+    val dist = Canonicalize.connectedComponents(edges.toDF("src", "dst"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(local == dist)
     assert(local.nonEmpty)
@@ -28,28 +28,29 @@ class CanonicalizeSpec extends AnyFunSuite {
 
   test("chain graph: long diameter converges") {
     import spark.implicits._
-    val chain = (0 until 40).map(i => (f"c$i%02d", f"c${i + 1}%02d")).toDF("src", "dst")
-    val local = Canonicalize.connectedComponents(chain)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val edges = (0 until 40).map(i => (f"c$i%02d", f"c${i + 1}%02d"))
+    val local = Canonicalize.canonicalMapLocal(edges).toMap
     assert(local.values.toSet == Set("c00"))
-    val dist = Canonicalize.connectedComponents(chain, forceDistributed = true, maxIter = 50)
+    val dist = Canonicalize.connectedComponents(edges.toDF("src", "dst"), maxIter = 50)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(dist == local)
   }
 
-  test("canonicalMapLocal ≡ canonicalMapDistributed on a mixed graph") {
-    import spark.implicits._
+  test("canonicalMapLocal on a mixed graph: the canonical of every member") {
     val edges = Seq(
       ("m:Alice Jonson", "e:P0001"), ("e:P0001x", "e:P0001"),
       ("m:Acme", "e:O0002"), ("m:Lone Mention", "e:Zz"),
-      ("e:Q9", "e:Q8"), ("e:Q8", "e:Q7"))
-    val local = Canonicalize.canonicalMapLocal(edges).toMap
-    val distDf = Canonicalize.canonicalMapDistributed(edges.toDF("src", "dst"))
-    val dist = distDf.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(local == dist)
-    assert(local("e:P0001x") == "P0001")
-    assert(local("m:Alice Jonson") == "P0001")
-    assert(local("e:Q9") == "Q7")
+      ("e:Q9", "e:Q8"), ("e:Q8", "e:Q7"),
+      ("m:solo b", "m:solo a"))
+    val local = Canonicalize.canonicalMapLocal(edges)
+    assert(local.length == local.toMap.size, "one row per member")
+    assert(local.toMap == Map(
+      "m:Alice Jonson" -> "P0001", "e:P0001" -> "P0001", "e:P0001x" -> "P0001",
+      "m:Acme" -> "O0002", "e:O0002" -> "O0002",
+      "m:Lone Mention" -> "Zz", "e:Zz" -> "Zz",
+      "e:Q9" -> "Q7", "e:Q8" -> "Q7", "e:Q7" -> "Q7",
+      // an entity-free component keeps its min member
+      "m:solo b" -> "m:solo a", "m:solo a" -> "m:solo a"))
   }
 
   test("linkLocal ≡ distributed linking on the fixture catalogue") {
@@ -74,34 +75,43 @@ class CanonicalizeSpec extends AnyFunSuite {
     }
   }
 
-  test("driver alias edges ≡ aliasEdges on the fixture catalogue and on forced name duplicates") {
-    import spark.implicits._
+  test("driver alias edges on the fixture catalogue and on forced name duplicates") {
+    // the fixture duplicates entities under a middle-initial variant and an x-suffixed id
+    val fixture = Canonicalize.aliasEdgesLocal(Lexicon.catalogue)
+    val dupIds = Lexicon.catalogue.map(_.entity_id).filter(_.endsWith("x"))
+    assert(dupIds.nonEmpty)
+    assert(fixture.toSet == dupIds.map(id => id -> id.stripSuffix("x")).toSet)
     val forced = Seq(
       Entity("P2", "Alice J. Johnson", "Personne"), Entity("P1", "alice johnson", "Personne"),
       Entity("P3", "Alice Johnson!", "Personne"), Entity("P3", "Alice K. Johnson", "Personne"),
       Entity("O9", "ACME Industries", "Entreprise"), Entity("O10", "Acme  Industries.", "Entreprise"),
       Entity("O11", "Lone Org", "Entreprise"))
-    for (cat <- Seq(Lexicon.catalogue, forced)) {
-      val local = Canonicalize.aliasEdgesLocal(cat)
-      val dist = Canonicalize.aliasEdges(cat.toDS()).as[(String, String)].collect()
-      assert(local.toSet == dist.toSet)
-      assert(local.size == local.toSet.size && dist.length == dist.toSet.size, "no duplicate edges")
-      assert(local.nonEmpty)
-    }
-    assert(Canonicalize.aliasEdgesLocal(forced).toSet == Set("P2" -> "P1", "P3" -> "P1", "O9" -> "O10"))
+    val edges = Canonicalize.aliasEdgesLocal(forced)
+    for (es <- Seq(fixture, edges)) assert(es.size == es.toSet.size, "no duplicate edges")
+    assert(edges.toSet == Set("P2" -> "P1", "P3" -> "P1", "O9" -> "O10"))
   }
 
-  test("canonicalMap follows isLocal: driver-held inputs give a driver-held map equal to the distributed one") {
+  test("canonicalMap: driver-held and repartitioned inputs give one driver map") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     val r = KGPipeline.run(spark, TranscriptGen.Config(nConvs = 40))
     val catalogue = TranscriptGen.entities(spark)
-    assert(r.links.isLocal && catalogue.isLocal)
-    val local = Canonicalize.canonicalMap(r.links, catalogue)
-    val dist = Canonicalize.canonicalMap(r.links.repartition(2), catalogue.repartition(2))
-    assert(local.isLocal && !dist.isLocal)
-    val rows = local.collect().map(row => row.getString(0) -> row.getString(1))
-    assert(rows.exists(_._1.startsWith("m:")) && rows.exists(_._1.startsWith("e:")))
-    assert(rows.toSet == dist.collect().map(row => row.getString(0) -> row.getString(1)).toSet)
-    assert(rows.length == rows.toMap.size, "one canonical per member")
+    val fromLocal = Canonicalize.canonicalMap(r.links, catalogue)
+    val fromDist = Canonicalize.canonicalMap(r.links.repartition(2), catalogue.repartition(2))
+    for (m <- Seq(fromLocal, fromDist))
+      assert(m.queryExecution.logical.isInstanceOf[LocalRelation], m.queryExecution.logical)
+    val rows = fromLocal.collect().map(row => row.getString(0) -> row.getString(1))
+    assert(rows.toSet == fromDist.collect().map(row => row.getString(0) -> row.getString(1)).toSet)
+    val byMember = rows.toMap
+    assert(rows.length == byMember.size, "one canonical per member")
+    // a linked mention and both ids of a duplicated entity map to the base id
+    val links = r.links.collect()
+    val expected = links.filter(_.accepted).flatMap { l =>
+      val base = l.entity_id.stripSuffix("x")
+      Seq("m:" + l.mention -> base, "e:" + l.entity_id -> base, "e:" + base -> base)
+    }.toMap
+    assert(expected.exists(_._1.startsWith("m:")))
+    assert(expected.forall { case (m, c) => byMember.get(m).contains(c) }, expected)
+    assert(links.filter(!_.accepted).forall(l => !byMember.contains("m:" + l.mention)))
     r.unpersistAll()
   }
 

@@ -114,18 +114,21 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("bkey"), "join key must be the block key")
   }
 
-  test("triple materialization: adaptive narrow path ≡ broadcast-join path") {
+  test("triple materialization from repartitioned links: driver map, no join, same triples") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
     val result = KGPipeline.run(spark, TranscriptGen.Config(nConvs = 20))
-    // small canonical map → the pipeline takes the narrow path: no joins
-    val pNarrow = plan(result.triples.toDF())
-    assert(!pNarrow.contains("Join"), pNarrow.take(800))
-    // the general join path must broadcast, never go cartesian…
-    val joined = KGPipeline.materializeTriples(result.verified, result.relations, result.canonicalMap)
-    val pJoin = plan(joined.toDF())
-    assert(pJoin.contains("BroadcastHashJoin"), pJoin.take(800))
-    assert(!pJoin.contains("CartesianProduct"))
-    // …and produce the identical triple set
-    assert(joined.collect().toSet == result.triples.collect().toSet)
+    val canon = Canonicalize.canonicalMap(
+      result.links.repartition(2), TranscriptGen.entities(spark).repartition(2))
+    assert(canon.queryExecution.logical.isInstanceOf[LocalRelation], canon.queryExecution.logical)
+    assert(canon.collect().toSet == result.canonicalMap.collect().toSet)
+    val triples = KGPipeline.materializeTriplesAdaptive(
+      result.extracted, result.verified, result.relations, canon)
+    val joins = triples.queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.isEmpty, triples.queryExecution.optimizedPlan.toString)
+    val p = plan(triples.toDF())
+    assert(!p.contains("Join"), p.take(800))
+    assert(triples.collect().toSet == result.triples.collect().toSet)
+    assert(result.triples.count() > 0)
     result.unpersistAll()
   }
 
