@@ -143,8 +143,7 @@ object Canonicalize {
     * itself as canonical subject. Returns (member, canonical).
     *
     * Both inputs are collected once: a driver-held input
-    * ([[EntityLinking.link]]'s links up to
-    * [[EntityLinking.LocalValuesThreshold]] distinct values, the
+    * ([[EntityLinking.linkAdaptive]]'s links on either path, the
     * pipeline's catalogue) runs no job, a distributed one runs one job.
     * The map is a `LocalRelation` of [[CanonEntry]] rows, so reading it
     * runs no job either. */

@@ -17,13 +17,16 @@ import graft.functions.{Hashing, StringSim}
   * reference's full cross product). Before scoring, mentions are
   * deduplicated by string (`groupBy value` with provenance counts,
   * mirroring myMongoClient.py:62-75) — the hot-entity skew therefore
-  * collapses into ONE scored row per distinct string, and the global
-  * normalization is a 1-row aggregate joined back (the one
-  * intentional barrier, SURVEY §7.3).
+  * collapses into ONE scored row per distinct string. Each distinct
+  * string leaves its task as one summary row (top entity, s1, margin
+  * confidence, min proposal score); the summaries are collected and
+  * normalized once on the driver, where canonicalization reads the
+  * links anyway.
   *
   * For catalogues too big to broadcast, `candidateBlocks` gives the
   * blocking-key equi-join path of the north rule (normalized first
-  * char + length band + char-bigram band keys).
+  * char + length band + char-bigram band keys); its proposals reach
+  * the same summary and normalization through [[matches]].
   */
 object EntityLinking {
 
@@ -46,10 +49,16 @@ object EntityLinking {
   private val proposalOrder: Ordering[(Entity, Double)] =
     Ordering.by { case (e, s) => (-s, e.entity_id) }
 
+  /** One mention's NB_PROPOSITIONS best entities, best first, via a
+    * bounded heap (one pass, O(k) space — never a full catalogue
+    * sort+copy per mention). `ents` is sorted by entity_id. */
+  private def topProposals(mention: String, ents: Array[Entity]): Seq[(Entity, Double)] =
+    graft.functions.TopK.smallest(
+      ents.iterator.map(e => (e, StringSim.jaroWinkler(mention, e.display_name))),
+      NbPropositions)(proposalOrder)
+
   /** Broadcast top-k scoring: per distinct mention, Jaro-Winkler vs
-    * every catalogue entity, keep NB_PROPOSITIONS best via a bounded
-    * heap (one pass, O(k) space — never a full catalogue sort+copy
-    * per mention). */
+    * every catalogue entity, one row per kept proposal. */
   def proposals(values: Dataset[(String, Long)], catalogue: Array[Entity]): Dataset[LinkProposal] = {
     val spark = values.sparkSession
     import spark.implicits._
@@ -57,76 +66,77 @@ object EntityLinking {
     values.mapPartitions { it =>
       val ents = bc.value
       it.flatMap { case (mention, _) =>
-        val top = graft.functions.TopK.smallest(
-          ents.iterator.map(e => (e, StringSim.jaroWinkler(mention, e.display_name))),
-          NbPropositions)(proposalOrder)
-        top.zipWithIndex.map { case ((e, s), rank) =>
+        topProposals(mention, ents).zipWithIndex.map { case ((e, s), rank) =>
           LinkProposal(mention, e.entity_id, e.display_name, s, rank + 1)
         }
       }
     }
   }
 
-  /** Margin confidence + global min-max normalization + accept
-    * (entityMatching.py:82-94). Exact semantics:
-    *   conf   = 1 if s1 == 1 else 2*s1 − s2
+  /** One distinct mention's ranked proposals reduced to what the
+    * normalization needs: the top entity, its score s1, the margin
+    * confidence and the lowest proposal score. */
+  private[kg] final case class Scored(mention: String, entity_id: String, entity_name: String,
+                                      s1: Double, conf: Double, min_score: Double)
+
+  /** Margin confidence (entityMatching.py:87):
+    * conf = 1 if s1 == 1 else 2*s1 − s2, with s2 = 0 for a lone
+    * proposal. `ranked` is best first and non-empty. */
+  private def scored(mention: String, ranked: Seq[(String, String, Double)]): Scored = {
+    val (id, name, s1) = ranked.head
+    val s2 = if (ranked.length > 1) ranked(1)._3 else 0.0
+    Scored(mention, id, name, s1, if (s1 == 1.0) 1.0 else 2 * s1 - s2, ranked.map(_._3).min)
+  }
+
+  /** Global min-max normalization + accept on the driver
+    * (entityMatching.py:90-94):
     *   min_   = min over ALL proposal scores (all ranks)
     *   max_   = max over confidences
     *   norm   = 1 if conf == 1 else (conf − min_)/(max_ + 0.05 − min_)
     *   accept = norm > 0.6 (top-1 proposal only)
-    */
+    * Rows are sorted by mention; the result is a `LocalRelation`, so
+    * reading it runs no job. */
+  private def normalize(spark: SparkSession, rows: Array[Scored]): Dataset[LinkMatch] = {
+    import spark.implicits._
+    // lazy: an empty input has no min/max and needs none
+    lazy val min_ = rows.map(_.min_score).min
+    lazy val max_ = rows.map(_.conf).max
+    spark.createDataset(rows.sortBy(_.mention).toSeq.map { r =>
+      val norm = if (r.conf == 1.0) 1.0 else (r.conf - min_) / (max_ + 0.05 - min_)
+      LinkMatch(r.mention, r.entity_id, r.entity_name, r.s1, norm, norm > ConfidenceThresh)
+    })
+  }
+
+  /** Links from a proposal set (the blocked path's, or [[proposals]]'):
+    * each mention's proposals are grouped and reduced to one summary,
+    * which is collected and normalized on the driver. */
   def matches(props: Dataset[LinkProposal]): Dataset[LinkMatch] = {
     val spark = props.sparkSession
     import spark.implicits._
-
-    val perMention = props
+    normalize(spark, props
       .groupByKey(_.mention)
       .mapGroups { (mention, it) =>
-        val ps = it.toSeq.sortBy(_.rank)
-        val s1 = ps.head.jaro_score
-        val s2 = if (ps.length > 1) ps(1).jaro_score else 0.0
-        val conf = if (s1 == 1.0) 1.0 else 2 * s1 - s2
-        (mention, ps.head.entity_id, ps.head.entity_name, s1, conf,
-          ps.map(_.jaro_score).min)
+        scored(mention, it.toSeq.sortBy(_.rank).map(p => (p.entity_id, p.entity_name, p.jaro_score)))
       }
-      .toDF("mention", "entity_id", "entity_name", "jaro_score", "raw_conf", "min_prop_score")
-
-    // the intentional global barrier: 1-row aggregate, crossJoined back
-    val stats = perMention.agg(
-      min(col("min_prop_score")).as("min_"),
-      max(col("raw_conf")).as("max_"))
-
-    perMention.crossJoin(broadcast(stats))
-      .withColumn("confidence",
-        when(col("raw_conf") === 1.0, 1.0)
-          .otherwise((col("raw_conf") - col("min_")) / (col("max_") + 0.05 - col("min_"))))
-      .withColumn("accepted", col("confidence") > ConfidenceThresh)
-      .select("mention", "entity_id", "entity_name", "jaro_score", "confidence", "accepted")
-      .as[LinkMatch]
+      .collect())
   }
 
-  /** Distinct-mention count under which scoring + margin + global
-    * normalization happen driver-side in one pass (the distributed
-    * part — deduplicating the mention stream — still runs on the
-    * cluster; only the ~|distinct|×|catalogue| scoring localizes,
-    * mirroring the reference's own sequential loop exactly). */
-  val LocalValuesThreshold: Int = 20000
-
-  /** Full linking pass over a mention set: distributed dedup, then
-    * adaptive scoring (driver-local below threshold — kills ~6 tiny
-    * stages per run — identical math either way, spec-asserted). The
-    * pipeline's one size decision: canonicalization collects the
-    * links once either way, and everything after it runs on the
-    * driver's map. */
+  /** Full linking pass over a mention set against a broadcast
+    * catalogue: distributed dedup, then ONE mapPartitions that scores
+    * each distinct value and emits its summary, collected by one job
+    * and normalized on the driver. An empty catalogue gives no links. */
   def link(mentions: Dataset[Mention], catalogue: Array[Entity]): Dataset[LinkMatch] = {
     val spark = mentions.sparkSession
     import spark.implicits._
-    val values = valuesToMatch(mentions)
-    val head = values.map(_._1).limit(LocalValuesThreshold + 1).collect()
-    if (head.length > LocalValuesThreshold)
-      matches(proposals(values, catalogue))
-    else
-      spark.createDataset(linkLocal(head.toSeq, catalogue))
+    val bc = spark.sparkContext.broadcast(catalogue.sortBy(_.entity_id))
+    normalize(spark, valuesToMatch(mentions).mapPartitions { it =>
+      val ents = bc.value
+      it.flatMap { case (mention, _) =>
+        val top = topProposals(mention, ents)
+        Option.when(top.nonEmpty)(
+          scored(mention, top.map { case (e, s) => (e.entity_id, e.display_name, s) }))
+      }
+    }.collect())
   }
 
   /** Catalogue size above which the collect+broadcast full-scan
@@ -140,8 +150,8 @@ object EntityLinking {
   /** Full linking, the path selected by catalogue size (known
     * driver-side, so no count job): small → [[link]] (broadcast
     * catalogue, exact reference semantics); large → blocked equi-join
-    * candidates + identical margin/normalize/accept semantics
-    * downstream. Used by the pipeline. */
+    * candidates through [[matches]]. Either way the links are a
+    * driver-normalized `LocalRelation`. Used by the pipeline. */
   def linkAdaptive(mentions: Dataset[Mention], catalogue: Array[Entity]): Dataset[LinkMatch] = {
     if (catalogue.length <= BroadcastCatalogueThreshold) link(mentions, catalogue)
     else {
@@ -149,32 +159,6 @@ object EntityLinking {
       import spark.implicits._
       matches(proposalsBlocked(valuesToMatch(mentions),
         spark.createDataset(catalogue.toIndexedSeq)))
-    }
-  }
-
-  /** Driver-local scoring — literally the reference's control flow
-    * (entityMatching.py:82-94) over the deduped mention strings. */
-  def linkLocal(mentionStrings: Seq[String], catalogue: Array[Entity]): Seq[LinkMatch] = {
-    // empty catalogue → no matches, like the distributed path (top.head
-    // below would otherwise throw and make the two spec-equal paths
-    // diverge: one crashes, one degrades)
-    if (catalogue.isEmpty) return Seq.empty
-    val ents = catalogue.sortBy(_.entity_id)
-    val perMention = mentionStrings.sorted.map { mention =>
-      val top = graft.functions.TopK.smallest(
-        ents.iterator.map(e => (e, StringSim.jaroWinkler(mention, e.display_name))),
-        NbPropositions)(proposalOrder)
-      val s1 = top.head._2
-      val s2 = if (top.length > 1) top(1)._2 else 0.0
-      val conf = if (s1 == 1.0) 1.0 else 2 * s1 - s2
-      (mention, top.head._1, s1, conf, top.map(_._2).min)
-    }
-    if (perMention.isEmpty) return Seq.empty
-    val min_ = perMention.map(_._5).min
-    val max_ = perMention.map(_._4).max
-    perMention.map { case (mention, e, s1, conf, _) =>
-      val norm = if (conf == 1.0) 1.0 else (conf - min_) / (max_ + 0.05 - min_)
-      LinkMatch(mention, e.entity_id, e.display_name, s1, norm, norm > ConfidenceThresh)
     }
   }
 

@@ -140,10 +140,12 @@ object Experiments {
     * into StageMetric rows (north rule: every stage writes lineage +
     * metrics). The stages are the ones [[KGPipeline.run]] calls, in
     * its order, so the audited plan is the production plan. Each
-    * stage's output is cached and counted, and its wall includes that
-    * count — an extra action per stage, so use for audited runs, not
-    * the hot path. The prompts cache is released once extraction is
-    * materialized; [[KGPipeline.Result.unpersistAll]] releases the rest. */
+    * distributed stage's output is cached and counted, and its wall
+    * includes that count — an extra action per stage, so use for
+    * audited runs, not the hot path. The driver-held links and
+    * canonical map are counted from their collected rows: no job, no
+    * cache. The prompts cache is released once extraction is materialized;
+    * [[KGPipeline.Result.unpersistAll]] releases the extraction rows. */
   def runWithMetrics(spark: SparkSession, turns: Dataset[Turn],
                      cfg: TranscriptGen.Config, runId: String): (KGPipeline.Result, Dataset[StageMetric]) = {
     import spark.implicits._
@@ -158,6 +160,7 @@ object Experiments {
       (r, rowsOut)
     }
     def cachedCount[T](ds: Dataset[T]): (Dataset[T], Long) = { val c = ds.cache(); (c, c.count()) }
+    def localCount[T](ds: Dataset[T]): (Dataset[T], Long) = (ds, ds.collect().length.toLong)
 
     val nTurns = turns.count()
     val (prompts, nPrompts) = staged("prompts", nTurns) {
@@ -176,10 +179,10 @@ object Experiments {
     val (_, nVerified) = staged[Unit]("verify", sizes.getLong(0)) { ((), sizes.getLong(1)) }
     val nRelations = sizes.getLong(2)
     val (links, nLinks) = staged("link", nVerified) {
-      cachedCount(EntityLinking.linkAdaptive(verified, Lexicon.catalogue.toArray))
+      localCount(EntityLinking.linkAdaptive(verified, Lexicon.catalogue.toArray))
     }
     val (canon, _) = staged("canonicalize", nLinks) {
-      cachedCount(Canonicalize.canonicalMap(links, TranscriptGen.entities(spark)))
+      localCount(Canonicalize.canonicalMap(links, TranscriptGen.entities(spark)))
     }
     val (triples, _) = staged("materialize", nVerified + nRelations) {
       val t = KGPipeline.materializeTriplesAdaptive(extracted, verified, relations, canon)

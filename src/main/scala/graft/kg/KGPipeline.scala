@@ -27,13 +27,10 @@ object KGPipeline {
       canonicalMap: DataFrame, // (member, canonical)
       triples: Dataset[Triple],
       extracted: Dataset[Extraction.TurnExtraction]) {
-    /** Release whatever of extracted/links/canon is cached: [[run]]
-      * caches the extraction rows, an audited run every stage. */
-    def unpersistAll(): Unit = {
-      extracted.unpersist()
-      links.unpersist()
-      canonicalMap.unpersist()
-    }
+    /** Release the cached extraction rows, the one stage output that
+      * [[run]] and an audited run leave cached: links and the canonical
+      * map are driver-held `LocalRelation`s and never cached. */
+    def unpersistAll(): Unit = extracted.unpersist()
   }
 
   def run(spark: SparkSession, cfg: TranscriptGen.Config): Result =
@@ -62,9 +59,10 @@ object KGPipeline {
     val verified = verifiedOf(extracted)
     val relations = relationsOf(extracted)
 
-    // 5. entity linking — path auto-selected by catalogue size
-    //    (EntityLinking.BroadcastCatalogueThreshold) and distinct mention
-    //    count: few values are scored on the driver, more in mapPartitions
+    // 5. entity linking — path selected by catalogue size
+    //    (EntityLinking.BroadcastCatalogueThreshold): distinct values are
+    //    scored in executor tasks, and their summaries normalized once
+    //    on the driver into a LocalRelation
     val catalogue = Lexicon.catalogue.toArray
     val links = EntityLinking.linkAdaptive(verified, catalogue)
 

@@ -48,8 +48,12 @@ class BlockedLinkingSpec extends AnyFunSuite {
     val bigDs = spark.createDataset(big)
     val exact = EntityLinking.link(verified, big.toArray)
       .filter(_.accepted).collect().map(l => l.mention -> l.entity_id).toMap
-    val blocked = EntityLinking.matches(
+    val blockedLinks = EntityLinking.matches(
       EntityLinking.proposalsBlocked(EntityLinking.valuesToMatch(verified), bigDs))
+    // normalized on the driver, like the broadcast path's links
+    assert(blockedLinks.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val blocked = blockedLinks
       .filter(_.accepted).collect().map(l => l.mention -> l.entity_id).toMap
     assert(exact.nonEmpty)
     val hits = exact.count { case (m, e) => blocked.get(m).contains(e) }

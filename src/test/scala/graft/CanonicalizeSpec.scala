@@ -53,25 +53,26 @@ class CanonicalizeSpec extends AnyFunSuite {
       "m:solo b" -> "m:solo a", "m:solo a" -> "m:solo a"))
   }
 
-  test("linkLocal ≡ distributed linking on the fixture catalogue") {
+  test("link ≡ matches(proposals) on the fixture catalogue") {
     import spark.implicits._
     val cat = graft.kg.Lexicon.catalogue.toArray
     val mentions = Seq("Alice Johnson", "Alice J. Johnson", "Meridian Bank",
       "Tundra Robotics", "Bruno Keler").flatMap(m =>
       Seq(graft.kg.Mention("c", 0, m, "PERSON")))
     val ds = mentions.toDS()
-    val dist = graft.kg.EntityLinking.matches(
+    val grouped = graft.kg.EntityLinking.matches(
       graft.kg.EntityLinking.proposals(
         graft.kg.EntityLinking.valuesToMatch(ds), cat))
       .collect().map(l => l.mention -> l).toMap
-    val local = graft.kg.EntityLinking.linkLocal(mentions.map(_.mention).distinct, cat)
-      .map(l => l.mention -> l).toMap
-    assert(dist.keySet == local.keySet)
-    dist.foreach { case (m, d) =>
-      val l = local(m)
-      assert(d.entity_id == l.entity_id, m)
-      assert(math.abs(d.confidence - l.confidence) < 1e-12, m)
-      assert(d.accepted == l.accepted, m)
+    val scored = graft.kg.EntityLinking.link(ds, cat)
+      .collect().map(l => l.mention -> l).toMap
+    assert(grouped.keySet == scored.keySet)
+    assert(scored.keySet == mentions.map(_.mention).toSet)
+    grouped.foreach { case (m, g) =>
+      val l = scored(m)
+      assert(g.entity_id == l.entity_id, m)
+      assert(g.confidence == l.confidence, m)
+      assert(g.accepted == l.accepted, m)
     }
   }
 

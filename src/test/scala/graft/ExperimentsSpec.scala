@@ -107,6 +107,24 @@ class ExperimentsSpec extends AnyFunSuite {
     prod.unpersistAll()
   }
 
+  test("runWithMetrics counts the driver-held links and canonical map with no job and no cache") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.storage.StorageLevel
+    val cfg = TranscriptGen.Config(nConvs = 20)
+    val turns = TranscriptGen.transcripts(spark, cfg)
+    var result: KGPipeline.Result = null
+    val jobs = SparkTestBase.countJobs {
+      result = Experiments.runWithMetrics(spark, turns, cfg, "jobs-run")._1
+    }
+    info(s"${jobs.started} jobs: ${jobs.callSites.mkString(", ")}")
+    assert(jobs.started <= 15, jobs.callSites)
+    for (ds <- Seq(result.links, result.canonicalMap)) {
+      assert(ds.queryExecution.logical.isInstanceOf[LocalRelation], ds.queryExecution.logical)
+      assert(ds.storageLevel == StorageLevel.NONE)
+    }
+    result.unpersistAll()
+  }
+
   test("runWithMetrics: unpersistAll leaves no cached stage behind") {
     import org.apache.spark.storage.StorageLevel
     spark.catalog.clearCache()
