@@ -21,12 +21,7 @@ object SparkEntry {
   private val SmokeCfg = TranscriptGen.Config(nConvs = 40)
 
   /** Flagship: end-to-end KG triples. Driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame = {
-    val r = KGPipeline.run(spark, SmokeCfg)
-    val out = r.triples.toDF().localCheckpoint()
-    r.unpersistAll()
-    out
-  }
+  def entry(spark: SparkSession): DataFrame = kgQuery(spark, SmokeCfg)(_.triples.toDF())
 
   private def cfgFor(sfDir: String): TranscriptGen.Config = {
     // scale the synthetic corpus with the driver's sf directory
@@ -40,8 +35,8 @@ object SparkEntry {
     * from the pipeline's cached datasets (localCheckpoint), then
     * release the caches — repeated invocations in a shared session
     * (Verify, Bench) must not accumulate cached stages. */
-  private def kgQuery(s: SparkSession, dir: String)(pick: KGPipeline.Result => DataFrame): DataFrame = {
-    val r = KGPipeline.run(s, cfgFor(dir))
+  private def kgQuery(s: SparkSession, cfg: TranscriptGen.Config)(pick: KGPipeline.Result => DataFrame): DataFrame = {
+    val r = KGPipeline.run(s, cfg)
     val out = pick(r).localCheckpoint()
     r.unpersistAll()
     out
@@ -51,11 +46,11 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     graft.operators.RelationalQueries.all ++ Map(
     // ---- KG pipeline stages (rows-only checks; parity in tests) ----
-    "kg_triples" -> ((s, dir) => kgQuery(s, dir)(_.triples.toDF())),
+    "kg_triples" -> ((s, dir) => kgQuery(s, cfgFor(dir))(_.triples.toDF())),
     "kg_mentions" -> ((s, dir) => {
       val cfg = cfgFor(dir)
       val prompts = Extraction.buildPrompts(TranscriptGen.transcripts(s, cfg))
-      Extraction.parseMentions(Extraction.scoreMentions(prompts, cfg)).toDF()
+      PromptTechniques.detectMentions(prompts, PromptTechniques.Discussion, cfg).toDF()
     }),
     "kg_mentions_atat" -> ((s, dir) => {
       // the per-tag fan-out technique (pt_gpt_ner.py:28-38)
@@ -63,7 +58,7 @@ object SparkEntry {
       val prompts = Extraction.buildPrompts(TranscriptGen.transcripts(s, cfg))
       PromptTechniques.detectMentions(prompts, PromptTechniques.AtAt, cfg).toDF()
     }),
-    "kg_links" -> ((s, dir) => kgQuery(s, dir)(_.links.toDF())),
+    "kg_links" -> ((s, dir) => kgQuery(s, cfgFor(dir))(_.links.toDF())),
 
     "experiment_grid" -> ((s, dir) => {
       // classical_test grid (llm/LLMModel.py:144-203): seeded runs ×

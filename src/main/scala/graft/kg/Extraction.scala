@@ -12,12 +12,10 @@ import graft.functions.{Parsers, TextAnalytics}
   */
 object Extraction {
 
-  /** Prompt building + the oversized-prompt drop. The reference skips
-    * prompts over the context budget (pt_abstract.py:54-60) — an
-    * important drop semantic; dropped rows are COUNTED by the caller
-    * via the returned datasets, not silently lost. Also applies the
-    * brace filter the reference bakes into dataset cleaning
-    * (Conll2003Dataset.py:62-63) and drops empty texts. */
+  /** Prompt building under [[promptOf]]'s drop semantics (empty,
+    * brace and over-budget turns are skipped, pt_abstract.py:54-60);
+    * dropped rows are COUNTED by the caller via the returned datasets,
+    * not silently lost. */
   def buildPrompts(turns: Dataset[Turn]): Dataset[Prompt] =
     buildPromptsWithShots(turns, Array.empty, 0)
 
@@ -38,102 +36,115 @@ object Extraction {
     * rendered as EXAMPLE lines ahead of the input sentinel. Retrieval
     * is a narrow mapPartitions pass over the broadcast pool: no
     * shuffle, no driver loop, O(|pool|) per turn with a bounded pool.
-    * Keeps the reference's drop semantics: brace filter, empty-text
-    * drop, oversized-prompt drop (pt_abstract.py:54-60) — the length
-    * guard runs AFTER the shot block is attached, exactly like the
-    * reference counts the full assembled prompt. */
+    * Every turn goes through [[promptOf]], the one prompt guard. */
   def buildPromptsWithShots(turns: Dataset[Turn], pool: Array[FewShots.ShotExample],
                             k: Int, fst: String = FstSentence): Dataset[Prompt] = {
     val spark = turns.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(pool)
-    turns
-      .filter(t => t.text.nonEmpty && !t.text.contains("{"))
-      .mapPartitions { it =>
-        val shots = bc.value
-        // partition-constant index for the FstEntity arm — built once
-        // per partition, not per row (same hoist as Ann.planeMatrix)
-        lazy val entityIndex: Array[(Int, Array[Float])] =
-          shots.iterator.zipWithIndex.flatMap { case (ex, i) =>
-            ex.entityVecs.iterator.map(ev => (i, ev))
-          }.toArray
-        it.map { t =>
-          val block =
-            if (k <= 0 || shots.isEmpty) ""
-            else {
-              val chosen: Seq[FewShots.ShotExample] = fst match {
-                case FstRandom =>
-                  // seeded draws, deduped by index, first k
-                  val idxs = Iterator.from(0)
-                    .map(i => graft.functions.Hashing.bucket(
-                      graft.functions.Hashing.hash64(s"${t.conv_id}#${t.turn_idx}#rnd$i"), shots.length))
-                    .take(4 * k + 8).toSeq.distinct.take(k)
-                  idxs.map(shots(_))
-                case FstEntity =>
-                  // per query token: top-k vs ALL pool entity embeddings;
-                  // merge by score desc, dedup pool row keeping best,
-                  // truncate to k (FST_Entity, few_shots_techniques
-                  // .py:110-124 — the idx-dedup-after-sort semantics).
-                  // Bounded heaps throughout: O(k) space per token.
-                  val ord: Ordering[(Double, Int)] = Ordering.by { case (s, i) => (-s, i) }
-                  val qTokens = t.text.split("\\s+").filter(_.nonEmpty)
-                    .map(w => TextAnalytics.embedText(w))
-                  val merged = qTokens.iterator.flatMap { qv =>
-                    graft.functions.TopK.smallest(
-                      entityIndex.iterator.map { case (i, ev) =>
-                        (graft.functions.StringSim.cosine(qv, ev), i)
-                      }, k)(ord)
-                  }.toArray.sorted(ord)
-                  val seen = scala.collection.mutable.LinkedHashSet.empty[Int]
-                  merged.foreach { case (_, i) => seen += i }
-                  seen.take(k).toSeq.map(shots(_))
-                case _ => // sentence-kNN, ties by pool index (stable argsort)
-                  val qv = TextAnalytics.embedText(t.text)
-                  graft.functions.TopK.smallest(
-                    shots.iterator.zipWithIndex.map { case (ex, i) =>
-                      (graft.functions.StringSim.cosine(qv, ex.vec), i)
-                    }, k)(Ordering.by { case (s, i) => (-s, i) })
-                    .map { case (_, i) => shots(i) }.toSeq
-              }
-              "### ASSISTANT : Can you provide me examples ?\n" +
-                "### USER : There are examples :\n" +
-                chosen.map(ex => s"${Scorer.ExampleMarker}${ex.text} -> ${ex.output}").mkString("\n") + "\n"
-            }
-          val prompt = s"### SYSTEM : The task is to extract named entities in a sentence.\n" +
-            block +
-            s"### USER : <start_input> ${t.text} <end_input>\n### ASSISTANT : <start_output> ["
-          Prompt(t.conv_id, t.turn_idx, t.text, prompt, TextAnalytics.tokenCountWs(prompt))
+    turns.mapPartitions { it =>
+      val shots = bc.value
+      // partition-constant index for the FstEntity arm — built once
+      // per partition, not per row (same hoist as Ann.planeMatrix)
+      lazy val entityIndex: Array[(Int, Array[Float])] =
+        shots.iterator.zipWithIndex.flatMap { case (ex, i) =>
+          ex.entityVecs.iterator.map(ev => (i, ev))
+        }.toArray
+      def block(t: Turn): String =
+        if (k <= 0 || shots.isEmpty) ""
+        else {
+          val chosen: Seq[FewShots.ShotExample] = fst match {
+            case FstRandom =>
+              // seeded draws, deduped by index, first k
+              val idxs = Iterator.from(0)
+                .map(i => graft.functions.Hashing.bucket(
+                  graft.functions.Hashing.hash64(s"${t.conv_id}#${t.turn_idx}#rnd$i"), shots.length))
+                .take(4 * k + 8).toSeq.distinct.take(k)
+              idxs.map(shots(_))
+            case FstEntity =>
+              // per query token: top-k vs ALL pool entity embeddings;
+              // merge by score desc, dedup pool row keeping best,
+              // truncate to k (FST_Entity, few_shots_techniques
+              // .py:110-124 — the idx-dedup-after-sort semantics).
+              // Bounded heaps throughout: O(k) space per token.
+              val ord: Ordering[(Double, Int)] = Ordering.by { case (s, i) => (-s, i) }
+              val qTokens = t.text.split("\\s+").filter(_.nonEmpty)
+                .map(w => TextAnalytics.embedText(w))
+              val merged = qTokens.iterator.flatMap { qv =>
+                graft.functions.TopK.smallest(
+                  entityIndex.iterator.map { case (i, ev) =>
+                    (graft.functions.StringSim.cosine(qv, ev), i)
+                  }, k)(ord)
+              }.toArray.sorted(ord)
+              val seen = scala.collection.mutable.LinkedHashSet.empty[Int]
+              merged.foreach { case (_, i) => seen += i }
+              seen.take(k).toSeq.map(shots(_))
+            case _ => // sentence-kNN, ties by pool index (stable argsort)
+              val qv = TextAnalytics.embedText(t.text)
+              graft.functions.TopK.smallest(
+                shots.iterator.zipWithIndex.map { case (ex, i) =>
+                  (graft.functions.StringSim.cosine(qv, ex.vec), i)
+                }, k)(Ordering.by { case (s, i) => (-s, i) })
+                .map { case (_, i) => shots(i) }.toSeq
+          }
+          "### ASSISTANT : Can you provide me examples ?\n" +
+            "### USER : There are examples :\n" +
+            chosen.map(ex => s"${Scorer.ExampleMarker}${ex.text} -> ${ex.output}").mkString("\n") + "\n"
         }
-      }
-      .filter(_.prompt_tokens <= TranscriptGen.MaxPromptTokens)
-  }
-
-  /** Batched mention scorer: matcher built once per partition
-    * (replaces the reference's per-sentence model invocation,
-    * llm/LLMModel.py:87-91). */
-  def scoreMentions(prompts: Dataset[Prompt], cfg: TranscriptGen.Config): Dataset[Scored] = {
-    import prompts.sparkSession.implicits._
-    prompts.mapPartitions { it =>
-      val matcher = Scorer.newMatcher() // per-partition "model load"
-      it.map { p =>
-        Scored(p.conv_id, p.turn_idx, p.text,
-          Scorer.mentionResponse(matcher, p.conv_id, p.turn_idx, p.text, cfg,
-            Scorer.exampleBlockOf(p.prompt)))
-      }
+      it.flatMap(t => promptOf(t, block(t)))
     }
   }
 
-  /** Parse the discussion-format responses into mention rows
+  /** The reference's input cleaning (Conll2003Dataset.py:62-63): a
+    * text is kept only when it is non-empty and has no brace. */
+  private[kg] def cleanText(text: String): Boolean = text.nonEmpty && !text.contains("{")
+
+  /** The one prompt guard: a turn's prompt, or None when the reference
+    * would skip it — empty or brace text, or an assembled prompt (shot
+    * block included) over the context budget (pt_abstract.py:54-60).
+    * `block` is by name, so a turn dropped on its text pays no kNN. */
+  private[graft] def promptOf(t: Turn, block: => String): Option[Prompt] =
+    if (!cleanText(t.text)) None
+    else {
+      val prompt = s"### SYSTEM : The task is to extract named entities in a sentence.\n" +
+        block +
+        s"### USER : <start_input> ${t.text} <end_input>\n### ASSISTANT : <start_output> ["
+      val tokens = TextAnalytics.tokenCountWs(prompt)
+      if (tokens > TranscriptGen.MaxPromptTokens) None
+      else Some(Prompt(t.conv_id, t.turn_idx, t.text, prompt, tokens))
+    }
+
+  /** The mention scorer with its matcher built once per call — one
+    * "model load" per partition or thread (replaces the reference's
+    * per-sentence model invocation, llm/LLMModel.py:87-91). */
+  private def scorer(cfg: TranscriptGen.Config): Prompt => Scored = {
+    val matcher = Scorer.newMatcher()
+    p => Scored(p.conv_id, p.turn_idx, p.text,
+      Scorer.mentionResponse(matcher, p.conv_id, p.turn_idx, p.text, cfg,
+        Scorer.exampleBlockOf(p.prompt)))
+  }
+
+  /** Batched mention scorer, one matcher per partition. */
+  def scoreMentions(prompts: Dataset[Prompt], cfg: TranscriptGen.Config): Dataset[Scored] = {
+    import prompts.sparkSession.implicits._
+    prompts.mapPartitions(_.map(scorer(cfg)))
+  }
+
+  /** Prompt guard and scorer over the turns of one partition (or one
+    * thread), one matcher for all of them: each prompted turn with its
+    * scored row, for callers that carry a turn column (event time)
+    * past scoring. */
+  private[graft] def scoreTurns(turns: Iterator[Turn], cfg: TranscriptGen.Config): Iterator[(Turn, Scored)] = {
+    val score = scorer(cfg)
+    turns.flatMap(t => promptOf(t, "").map(p => (t, score(p))))
+  }
+
+  /** The discussion-format response parsed into (mention, tag) pairs
     * (pt_discussion.py:41-59 semantics, tag filter included). */
   val MentionTags: Set[String] = Set("PERSON", "ORG", "GPE")
 
-  def parseMentions(scored: Dataset[Scored]): Dataset[Mention] = {
-    import scored.sparkSession.implicits._
-    scored.flatMap { s =>
-      Parsers.parseTupleList(s.response, MentionTags)
-        .map { case (ne, tag) => Mention(s.conv_id, s.turn_idx, ne, tag) }
-    }
-  }
+  private[graft] def parsedOf(s: Scored): List[(String, String)] =
+    Parsers.parseTupleList(s.response, MentionTags)
 
   /** Everything the per-turn extraction chain produces in one narrow
     * pass: parsed mentions, verifier-surviving mentions, relations. */
@@ -156,42 +167,12 @@ object Extraction {
     * aggregation, canonicalization, final distinct). */
   def extractAll(scored: Dataset[Scored], cfg: TranscriptGen.Config): Dataset[TurnExtraction] = {
     import scored.sparkSession.implicits._
-    scored.mapPartitions { it =>
-      it.map { s =>
-        val parsed = Parsers.parseTupleList(s.response, MentionTags)
-        extractTurn(s, parsed, cfg)
-      }
-    }
+    scored.mapPartitions(_.map(extractRow(_, cfg)))
   }
 
-  /** Technique-parameterized variant: detection runs under any of the
-    * five prompt techniques (scoring + parsing fused, like the
-    * discussion path), then the shared verify/relations chain. */
-  def extractAllWith(prompts: Dataset[Prompt], tech: graft.kg.PromptTechniques.Technique,
-                     cfg: TranscriptGen.Config): Dataset[TurnExtraction] = {
-    import prompts.sparkSession.implicits._
-    prompts.mapPartitions { it =>
-      val m = Scorer.newMatcher()
-      it.map { p =>
-        val parsed = PromptTechniques.parse(tech,
-          PromptTechniques.respond(tech, m, p.conv_id, p.turn_idx, p.text, cfg,
-            Scorer.exampleBlockOf(p.prompt)))
-        extractTurn(Scored(p.conv_id, p.turn_idx, p.text, ""), parsed, cfg)
-      }
-    }
-  }
-
-  /** Single-turn extraction for per-row contexts (streaming state
-    * functions): score → parse → verify → relations on one turn. */
-  def extractTurnRow(matcher: Scorer.Matcher, convId: String, turnIdx: Int,
-                     text: String, cfg: TranscriptGen.Config): TurnExtraction = {
-    val parsed = Parsers.parseTupleList(
-      Scorer.mentionResponse(matcher, convId, turnIdx, text, cfg), MentionTags)
-    extractTurn(Scored(convId, turnIdx, text, ""), parsed, cfg)
-  }
-
-  private def extractTurn(s: Scored, parsed: List[(String, String)],
-                          cfg: TranscriptGen.Config): TurnExtraction = {
+  /** One scored turn through parse → verify → relations. */
+  private[graft] def extractRow(s: Scored, cfg: TranscriptGen.Config): TurnExtraction = {
+    val parsed = parsedOf(s)
     val verified = parsed.filter { case (ne, tag) =>
       val resp = Scorer.verifierResponse(s.conv_id, s.turn_idx, ne, tag, s.text, cfg)
       Parsers.verifierAnswer(resp).contains(true)

@@ -58,8 +58,8 @@ object FewShots {
         (key._1, key._2, body, spans.map(_._1))
       }
       .toDF("conv_id", "turn_idx", "output", "mentions")
-    train.toDF().select(col("conv_id"), col("turn_idx"), col("text"))
-      .filter(length(col("text")) > 0 && !col("text").contains("{"))
+    train.filter(t => Extraction.cleanText(t.text))
+      .select(col("conv_id"), col("turn_idx"), col("text"))
       .join(outputs, Seq("conv_id", "turn_idx"))
       .orderBy(xxhash64(col("conv_id"), col("turn_idx")), col("conv_id"), col("turn_idx"))
       .limit(poolSize)

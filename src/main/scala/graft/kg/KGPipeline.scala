@@ -37,7 +37,6 @@ object KGPipeline {
     run(spark, TranscriptGen.transcripts(spark, cfg), cfg)
 
   def run(spark: SparkSession, turns: Dataset[Turn], cfg: TranscriptGen.Config,
-          technique: PromptTechniques.Technique = PromptTechniques.Discussion,
           fewShotPool: Array[FewShots.ShotExample] = Array.empty,
           nbFewShots: Int = 0): Result = {
     // 1-2. order is carried by (conv_id, turn_idx) keys; prompts with
@@ -50,10 +49,8 @@ object KGPipeline {
     //      verify → relations) in one narrow pass — the reference's
     //      per-sentence run_prompt flow (pt_abstract.py:45-73). Only
     //      the compact extraction rows are cached; raw text/responses
-    //      never cross a shuffle. Any of the five prompt techniques
-    //      can drive detection (classical_test's grid axis,
-    //      llm/LLMModel.py:164-169).
-    val extracted = extract(prompts, cfg, technique).cache()
+    //      never cross a shuffle.
+    val extracted = extract(prompts, cfg).cache()
 
     val mentions = mentionsOf(extracted)
     val verified = verifiedOf(extracted)
@@ -78,15 +75,9 @@ object KGPipeline {
     Result(turns, prompts, mentions, verified, relations, links, canon, triples, extracted)
   }
 
-  /** Detection under `technique`, then the fused per-turn chain. */
-  def extract(prompts: Dataset[Prompt], cfg: TranscriptGen.Config,
-              technique: PromptTechniques.Technique = PromptTechniques.Discussion)
-      : Dataset[Extraction.TurnExtraction] = technique match {
-    case PromptTechniques.Discussion =>
-      Extraction.extractAll(Extraction.scoreMentions(prompts, cfg), cfg)
-    case other =>
-      Extraction.extractAllWith(prompts, other, cfg)
-  }
+  /** Mention scoring, then the fused per-turn chain. */
+  def extract(prompts: Dataset[Prompt], cfg: TranscriptGen.Config): Dataset[Extraction.TurnExtraction] =
+    Extraction.extractAll(Extraction.scoreMentions(prompts, cfg), cfg)
 
   /** The projections of the extraction rows — parsed mentions,
     * verifier-surviving mentions and relations — defined once for the

@@ -47,12 +47,14 @@ object PromptTechniques {
   /** Deterministic scorer responses for a turn under a technique.
     * `examples` is the prompt's few-shot block (Scorer.exampleBlockOf);
     * a demonstrated surface form repairs a would-be malformed
-    * generation (Scorer.demonstrated — the few-shot quality lever). */
+    * generation (Scorer.demonstrated — the few-shot quality lever).
+    * Discussion is `Scorer.mentionResponse`, which scans the turn
+    * itself; the other arms share one scan and one noise draw. */
   def respond(tech: Technique, m: Scorer.Matcher, convId: String, turnIdx: Int,
               text: String, cfg: TranscriptGen.Config,
               examples: String = ""): Seq[(String, String)] = {
-    val mentions = m.findMentions(text)
-    val malformed = noisy(convId, turnIdx, text, 0x1001, cfg) &&
+    lazy val mentions = m.findMentions(text)
+    lazy val malformed = noisy(convId, turnIdx, text, 0x1001, cfg) &&
       !Scorer.demonstrated(mentions, examples)
     tech match {
       case Discussion =>
@@ -120,8 +122,8 @@ object PromptTechniques {
   }
 
   /** Mention detection under any technique: batched scorer + parse in
-    * one narrow pass (prompt building/length guard shared with the
-    * main pipeline via Extraction.buildPrompts). */
+    * one narrow pass, no verifier (prompt building/length guard shared
+    * with the main pipeline via Extraction.buildPrompts). */
   def detectMentions(prompts: Dataset[Prompt], tech: Technique,
                      cfg: TranscriptGen.Config): Dataset[Mention] = {
     import prompts.sparkSession.implicits._

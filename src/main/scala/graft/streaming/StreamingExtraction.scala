@@ -8,8 +8,10 @@ import graft.kg.{Extraction, KGPipeline, LinkMatch, Mention, Triple, Turn, Trans
   * The per-turn chain is stateless once the scorer/few-shot index is
   * frozen, so the SAME fused operator (parse → verify → relations)
   * runs on a streaming Dataset[Turn] unchanged — `readStream` →
-  * transforms → `writeStream`. Windowed mention counts demonstrate
-  * watermark + event-time aggregation over the `ts` column.
+  * transforms → `writeStream`. Windowed counts of the parsed mentions
+  * of prompted turns demonstrate watermark + event-time aggregation
+  * over the `ts` column. Every path here prompts turns through the
+  * batch prompt guard, so dropped turns are dropped on both sides.
   * (The reference has no streaming — its Flask endpoint is a
   * mutex-serialized request/response server, app.py:63-68 — so this
   * is the documented optional extension, not a parity requirement.)
@@ -59,18 +61,25 @@ object StreamingExtraction {
     * `idleTimeoutMs` (no turn newer than watermark − timeout) emits a
     * final `expired = true` row and its state is REMOVED, so streaming
     * state cannot grow without bound. The watermark on `ts` gates both
-    * late data and expiry (GroupStateTimeout.EventTimeTimeout). */
+    * late data and expiry (GroupStateTimeout.EventTimeTimeout). Turns
+    * are prompted, scored and extracted per partition before grouping,
+    * so the counts are [[conversationState]]'s: the verified mentions
+    * of the turns the prompt guard keeps. */
   def conversationStateExpiring(turns: Dataset[Turn], cfg: TranscriptGen.Config,
                                 watermark: String = "10 seconds",
                                 idleTimeoutMs: Long = 30L * 60 * 1000): Dataset[ConvStateX] = {
     import turns.sparkSession.implicits._
     turns
-      .filter(t => t.text.nonEmpty && !t.text.contains("{"))
+      .mapPartitions(Extraction.scoreTurns(_, cfg).map { case (t, s) =>
+        (t.conv_id, t.turn_idx, t.ts, Extraction.extractRow(s, cfg).verified.size.toLong)
+      })
+      .toDF("conv_id", "turn_idx", "ts", "n_verified")
       .withWatermark("ts", watermark)
-      .groupByKey(_.conv_id)
+      .as[(String, Int, java.sql.Timestamp, Long)]
+      .groupByKey(_._1)
       .mapGroupsWithState[ConvStateX, ConvStateX](
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout) {
-        (convId: String, rows: Iterator[Turn],
+        (convId: String, rows: Iterator[(String, Int, java.sql.Timestamp, Long)],
          state: org.apache.spark.sql.streaming.GroupState[ConvStateX]) =>
           if (state.hasTimedOut) {
             val prev = state.get
@@ -78,20 +87,16 @@ object StreamingExtraction {
             prev.copy(expired = true)
           } else {
             val prev = state.getOption.getOrElse(ConvStateX(convId, 0L, -1, expired = false))
-            val matcher = graft.kg.Scorer.newMatcher()
             val batch = rows.toSeq
-            val nNew = batch.map(t =>
-              graft.kg.Extraction.extractTurnRow(matcher, t.conv_id, t.turn_idx, t.text, cfg)
-                .verified.size.toLong).sum
-            val next = ConvStateX(convId, prev.n_mentions + nNew,
-              math.max(prev.max_turn, if (batch.isEmpty) -1 else batch.map(_.turn_idx).max),
+            val next = ConvStateX(convId, prev.n_mentions + batch.map(_._4).sum,
+              math.max(prev.max_turn, if (batch.isEmpty) -1 else batch.map(_._2).max),
               expired = false)
             state.update(next)
             // expire once the watermark passes the last activity + idle
             // (empty batch — the case the max_turn guard above codes
             // for — must not .max an empty Seq)
             val lastActivity = math.max(
-              if (batch.isEmpty) Long.MinValue else batch.map(_.ts.getTime).max,
+              if (batch.isEmpty) Long.MinValue else batch.map(_._3.getTime).max,
               state.getCurrentWatermarkMs())
             state.setTimeoutTimestamp(lastActivity + idleTimeoutMs)
             next
@@ -160,23 +165,19 @@ object StreamingExtraction {
   }
 
   /** Event-time windowed mention counts per tag with a watermark —
-    * the aggregation shape a monitoring sink would run. Event time is
-    * carried through the fused map (no stream-stream join needed). */
+    * the aggregation shape a monitoring sink would run. The counts are
+    * the parsed mentions of prompted turns (the batch
+    * `KGPipeline.mentionsOf` rows); event time is carried through the
+    * per-partition scoring (no stream-stream join needed). */
   def windowedMentionCounts(turns: Dataset[Turn], cfg: TranscriptGen.Config,
                             window: String = "10 minutes",
                             watermark: String = "30 minutes"): DataFrame = {
     val spark = turns.sparkSession
     import spark.implicits._
     val tagged = turns
-      .filter(t => t.text.nonEmpty && !t.text.contains("{"))
-      .mapPartitions { it =>
-        val matcher = graft.kg.Scorer.newMatcher()
-        it.flatMap { t =>
-          val resp = graft.kg.Scorer.mentionResponse(matcher, t.conv_id, t.turn_idx, t.text, cfg)
-          graft.functions.Parsers.parseTupleList(resp, Extraction.MentionTags)
-            .map { case (_, tag) => (t.ts, tag) }
-        }
-      }
+      .mapPartitions(Extraction.scoreTurns(_, cfg).flatMap { case (t, s) =>
+        Extraction.parsedOf(s).map { case (_, tag) => (t.ts, tag) }
+      })
       .toDF("ts", "tag")
     tagged
       .withWatermark("ts", watermark)

@@ -1,24 +1,13 @@
 package graft.tools
 import graft.kg._
 object MicroBench {
+  /** Parsed mentions of conversations [convLo, convHi): the prompt
+    * guard and scorer of the batch path, one matcher per thread. */
   def work(convLo: Long, convHi: Long, cfg: TranscriptGen.Config): Long = {
-    val m = Scorer.newMatcher()
-    var acc = 0L
-    var c = convLo
-    while (c < convHi) {
-      var t = 0
-      val n = TranscriptGen.turnsFor(c, cfg)
-      while (t < n) {
-        val g = TranscriptGen.genTurn(c, t, cfg)
-        if (g.turn.text.nonEmpty && !g.turn.text.contains("{")) {
-          val resp = Scorer.mentionResponse(m, g.turn.conv_id, t, g.turn.text, cfg)
-          acc += graft.functions.Parsers.parseTupleList(resp, Extraction.MentionTags).length
-        }
-        t += 1
-      }
-      c += 1
+    val turns = (convLo until convHi).iterator.flatMap { c =>
+      Iterator.range(0, TranscriptGen.turnsFor(c, cfg)).map(TranscriptGen.genTurn(c, _, cfg).turn)
     }
-    acc
+    Extraction.scoreTurns(turns, cfg).map { case (_, s) => Extraction.parsedOf(s).length.toLong }.sum
   }
   def main(args: Array[String]): Unit = {
     val threads = args(0).toInt

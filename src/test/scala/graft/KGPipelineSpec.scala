@@ -109,6 +109,14 @@ class KGPipelineSpec extends AnyFunSuite {
     assert(logits.nonEmpty && rows("kg_mention_logits") == logits)
   }
 
+  test("driver kg_mentions rows equal the parsed mentions of KGPipeline.extract") {
+    val cfg40 = TranscriptGen.Config(nConvs = 40)
+    val parsed = KGPipeline.mentionsOf(KGPipeline.extract(
+      Extraction.buildPrompts(TranscriptGen.transcripts(spark, cfg40)), cfg40)).toDF().collect().toSet
+    val rows = SparkEntry.queries("kg_mentions")(spark, "sf0.001").collect().toSet
+    assert(parsed.nonEmpty && rows == parsed)
+  }
+
   /** Parquet files per directory under `d`. */
   private def parquetFiles(d: String): Map[String, Int] = {
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
@@ -294,6 +302,21 @@ class KGPipelineSpec extends AnyFunSuite {
     val d = Files.createDirectory(root.resolve("d"))
     fs.setPermission(new Path(d.toString), perm("1750"))
     assert(mode(d) == Integer.parseInt("1750", 8))
+  }
+
+  test("promptOf drops empty, brace and over-budget turns") {
+    val t = Turn("c", 0, "user", "Alice Johnson joined Acme Industries .", null, null)
+    var blocks = 0
+    def block(s: String) = { blocks += 1; s }
+    assert(Extraction.promptOf(t, block("")).map(_.text).contains(t.text))
+    assert(Extraction.promptOf(t.copy(text = ""), block("")).isEmpty)
+    assert(Extraction.promptOf(t.copy(text = "{ \"a\": 1 } Alice"), block("")).isEmpty)
+    assert(blocks == 1, "empty and brace turns must not build the shot block")
+    // the budget counts the assembled prompt, shot block included
+    val fits = Extraction.promptOf(t, "").get.prompt_tokens
+    val pad = "x " * (TranscriptGen.MaxPromptTokens - fits)
+    assert(Extraction.promptOf(t, pad).map(_.prompt_tokens).contains(TranscriptGen.MaxPromptTokens))
+    assert(Extraction.promptOf(t, pad + "x ").isEmpty)
   }
 
   test("oversized prompts are dropped (counted, not extracted)") {

@@ -10,6 +10,18 @@ class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val cfg = TranscriptGen.Config(nConvs = 10)
 
+  private def genTurns(c: Long) =
+    (0 until TranscriptGen.turnsFor(c, cfg)).map(TranscriptGen.genTurn(c, _, cfg))
+
+  /** Conversations 0-5 plus the first conversation holding an
+    * oversized turn with a real mention, which the prompt guard drops. */
+  private lazy val withOversized: Seq[Turn] = {
+    val big = Iterator.from(0).map(_.toLong).find(c => genTurns(c).exists(g =>
+      g.goldMentions.nonEmpty &&
+        graft.functions.TextAnalytics.tokenCountWs(g.turn.text) > TranscriptGen.MaxPromptTokens)).get
+    ((0L until 6L) :+ big).distinct.flatMap(genTurns).map(_.turn)
+  }
+
   test("streaming extraction equals batch extraction on the same turns") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -201,6 +213,43 @@ class StreamingSpec extends AnyFunSuite {
     assert(rows.nonEmpty)
     assert(rows.map(_.getString(1)).toSet.subsetOf(Set("PERSON", "ORG", "GPE")))
     assert(rows.map(_.getLong(2)).sum > 0)
+  }
+
+  test("expiring state counts the batch verified mentions, oversized turn in the stream") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[Turn]
+    val q = StreamingExtraction.conversationStateExpiring(stream.toDS(), cfg)
+      .writeStream.format("memory").queryName("conv_state_x_oversized")
+      .outputMode("update").start()
+    stream.addData(withOversized)
+    q.processAllAvailable()
+    q.stop()
+    val finalStates = spark.table("conv_state_x_oversized")
+      .groupBy("conv_id")
+      .agg(org.apache.spark.sql.functions.max("n_mentions").as("n_mentions"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val batch = graft.kg.KGPipeline.run(spark, withOversized.toDS(), cfg)
+      .verified.collect().groupBy(_.conv_id).view.mapValues(_.length.toLong).toMap
+    assert(batch.nonEmpty && finalStates.filter(_._2 > 0) == batch)
+  }
+
+  test("windowed counts per tag = batch parsed mentions, oversized turn in the stream") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[Turn]
+    stream.addData(withOversized)
+    val q = StreamingExtraction.windowedMentionCounts(stream.toDS(), cfg)
+      .writeStream.format("memory").queryName("stream_counts_oversized")
+      .outputMode("complete").trigger(Trigger.Once()).start()
+    q.awaitTermination(60000)
+    val perTag = spark.table("stream_counts_oversized")
+      .groupBy("tag").agg(org.apache.spark.sql.functions.sum("n_mentions"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val batch = graft.kg.KGPipeline.mentionsOf(graft.kg.KGPipeline.extract(
+      graft.kg.Extraction.buildPrompts(withOversized.toDS()), cfg))
+      .collect().groupBy(_.tag).view.mapValues(_.length.toLong).toMap
+    assert(batch.nonEmpty && perTag == batch)
   }
 
   test("streaming corpus clean matches the batch clean (kernel parity + watermark dedup)") {
