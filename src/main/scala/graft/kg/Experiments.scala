@@ -173,9 +173,11 @@ object Experiments {
     val mentions = KGPipeline.mentionsOf(extracted)
     val verified = KGPipeline.verifiedOf(extracted)
     val relations = KGPipeline.relationsOf(extracted)
-    // the three projection sizes in ONE job over the cached rows
-    lazy val sizes = extracted.select(Seq("parsed", "verified", "relations")
-      .map(c => coalesce(sum(size(col(c))), lit(0L))): _*).head()
+    // the three projection sizes in ONE job over the cached rows; the
+    // verified mentions are the parsed ones less the rejected
+    lazy val sizes = extracted.select(Seq(size(col("parsed")),
+      size(col("parsed")) - size(col("rejected")), size(col("relations")))
+      .map(c => coalesce(sum(c), lit(0L))): _*).head()
     val (_, nVerified) = staged[Unit]("verify", sizes.getLong(0)) { ((), sizes.getLong(1)) }
     val nRelations = sizes.getLong(2)
     val (links, nLinks) = staged("link", nVerified) {

@@ -147,13 +147,21 @@ object Extraction {
     Parsers.parseTupleList(s.response, MentionTags)
 
   /** Everything the per-turn extraction chain produces in one narrow
-    * pass: parsed mentions, verifier-surviving mentions, relations. */
+    * pass: the parsed mentions, the indices into `parsed` of the
+    * mentions the verifier rejected, and the relations. The verifier
+    * keeps almost every mention, so the rows store its outcome once as
+    * `rejected` instead of a second mention list; [[verified]] derives
+    * the surviving mentions, in parse order. */
   final case class TurnExtraction(
       conv_id: String,
       turn_idx: Int,
       parsed: Seq[(String, String)],
-      verified: Seq[(String, String)],
-      relations: Seq[(String, String, String)])
+      rejected: Seq[Int],
+      relations: Seq[(String, String, String)]) {
+    def verified: Seq[(String, String)] =
+      if (rejected.isEmpty) parsed
+      else parsed.zipWithIndex.collect { case (m, i) if !rejected.contains(i) => m }
+  }
 
   /** The fused per-turn extraction: parse the mention response, run
     * the verifier on each mention, then the stage-2 relation chain on
@@ -173,11 +181,12 @@ object Extraction {
   /** One scored turn through parse → verify → relations. */
   private[graft] def extractRow(s: Scored, cfg: TranscriptGen.Config): TurnExtraction = {
     val parsed = parsedOf(s)
-    val verified = parsed.filter { case (ne, tag) =>
-      val resp = Scorer.verifierResponse(s.conv_id, s.turn_idx, ne, tag, s.text, cfg)
-      Parsers.verifierAnswer(resp).contains(true)
+    val rejected = parsed.zipWithIndex.collect { case ((ne, tag), i)
+      if !Parsers.verifierAnswer(
+        Scorer.verifierResponse(s.conv_id, s.turn_idx, ne, tag, s.text, cfg)).contains(true) => i
     }
-    val ordered = verified.sortBy { case (m, _) =>
+    val e = TurnExtraction(s.conv_id, s.turn_idx, parsed, rejected, Nil)
+    val ordered = e.verified.sortBy { case (m, _) =>
       val i = s.text.indexOf(m); if (i < 0) Int.MaxValue else i
     }
     val relResp = Scorer.relationResponse(s.conv_id, s.turn_idx, s.text, ordered, cfg)
@@ -186,7 +195,7 @@ object Extraction {
       if (arrow < 0) Nil
       else List((pair.substring(0, arrow), pred, pair.substring(arrow + 4)))
     }
-    TurnExtraction(s.conv_id, s.turn_idx, parsed, verified, rels)
+    e.copy(relations = rels)
   }
 
   /** One verified mention with its confidence level and numeric score

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 import graft.kg.Triple
@@ -18,7 +18,11 @@ import graft.kg.Triple
   * the checkpoint unit.
   *
   * Commit protocol ([[writeTriples]]): one partitioned write job lays
-  * out every range the manifest lacks under `outDir/.staging`. Then,
+  * out every range the manifest lacks under `outDir/.staging`. The
+  * rows of each range are counted by an `Observation` on that write
+  * (one `count_if(range = r)` per missing range), so no aggregate job
+  * runs and nothing is cached; a range whose count was not observed
+  * fails the call before the first commit. Then,
   * range by range, `.staging/range=R` is swapped into `range=R` by
   * rename ([[swapIn]], the swap [[compactTriples]] also uses) and the
   * range is recorded in `_manifest.json` via write-temp + atomic
@@ -35,9 +39,9 @@ import graft.kg.Triple
   * of their time waiting on those forks.
   *
   * A fresh write is one parquet file per `range=R/pred=P/bucket=B`
-  * leaf. One task writes each leaf, so a hot (pred, bucket) leaf is
-  * one task's work; [[compactTriples]] already accepts the same bound,
-  * and `graft.Bench` does not drive this sink. Compaction stays the
+  * leaf. One task writes each leaf ([[byLeaf]]), so a hot (pred,
+  * bucket) leaf is one task's work; [[compactTriples]] already accepts
+  * the same bound, and `graft.Bench` does not drive this sink. Compaction stays the
   * maintenance op for tables written before the one-file-per-leaf
   * layout or appended to by other writers.
   */
@@ -80,15 +84,26 @@ object TableIO {
   private val SinkSchema =
     Encoders.product[Triple].schema.add("range", IntegerType).add("bucket", IntegerType)
 
-  private def withPartitionCols(triples: Dataset[Triple]): DataFrame =
-    triples.toDF()
-      .withColumn("bucket", pmod(xxhash64(col("subj")), lit(NBuckets)).cast("int"))
-      .withColumn("range", pmod(col("bucket"), lit(NRanges)))
+  private def bucketOf(subj: Column): Column = pmod(xxhash64(subj), lit(NBuckets)).cast("int")
 
-  /** One task owns each (pred, bucket) leaf, so a partitioned write
-    * emits exactly one file per leaf. */
-  private def byLeaf(df: DataFrame): DataFrame =
-    df.repartition(col("pred"), col("bucket"))
+  /** The leaf partitioning, defined once for materialization
+    * (`KGPipeline.materializeTriplesAdaptive`) and the sink: rows are
+    * hash-partitioned on (pred, bucket), the bucket written as its
+    * expression on `subj`, and the `bucket` column is added. One task
+    * then owns each (pred, bucket) leaf, so a partitioned write emits
+    * exactly one file per leaf, and identical triples meet in one task.
+    *
+    * The partition count is explicit, the session's
+    * `spark.sql.shuffle.partitions`: AQE coalesces a by-column
+    * repartition of a few MB into ONE task, which then dedups and
+    * writes every leaf alone, but leaves a by-number one alone. A frame
+    * that already carries this partitioning (the materialized triples)
+    * is not shuffled again: `EnsureRequirements` drops a repartition
+    * its child's partitioning already satisfies. */
+  def byLeaf(df: DataFrame): DataFrame = {
+    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    df.repartition(n, col("pred"), bucketOf(col("subj"))).withColumn("bucket", bucketOf(col("subj")))
+  }
 
   /** `df.write` through [[NioLocalFileSystem]]. Hadoop caches the
     * `file:` filesystem by scheme, not by conf, so this write's conf
@@ -105,10 +120,11 @@ object TableIO {
       .parquet(ranges.map(r => s"$outDir/range=$r"): _*)
 
   /** Resumable write: skips ranges already in the manifest. The missing
-    * ranges' rows go through one (pred, bucket) shuffle ([[byLeaf]]),
-    * one aggregate job counts every range's rows and ONE write job lays
-    * them all out under `.staging`. Then each range is swapped into
-    * place ([[swapIn]]) and committed to the manifest, one at a time.
+    * ranges' rows go through [[byLeaf]] (no shuffle when the input is
+    * already leaf-partitioned) into ONE write job that lays them all out
+    * under `.staging`; each range's row count is observed on that write,
+    * so no other job runs. Then each range is swapped into place
+    * ([[swapIn]]) and committed to the manifest, one at a time.
     * `failAfterRanges` injects a crash before the commit of range
     * number `failAfterRanges` of this call, for the resume tests. */
   def writeTriples(triples: Dataset[Triple], outDir: String,
@@ -118,21 +134,26 @@ object TableIO {
     var manifest = readManifest(outDir)
     val todo = (0 until NRanges).filterNot(manifest.contains)
     if (todo.isEmpty) return manifest
-    val cached =
-      byLeaf(withPartitionCols(triples).filter(col("range").isin(todo: _*))).cache()
-    try {
-      val rowsByRange = cached.groupBy("range").count().collect()
-        .map(row => row.getInt(0) -> row.getLong(1)).toMap
-      writer(cached).partitionBy("range", "pred", "bucket").parquet(staging.toString)
-      todo.zipWithIndex.foreach { case (r, written) =>
-        if (written >= failAfterRanges)
-          throw new RuntimeException(s"injected failure before range $r")
-        // a range with no rows has no staged dir; commit it empty
-        swapIn(outDir, r, Files.createDirectories(staging.resolve(s"range=$r")))
-        manifest += r -> RangeEntry(r, rowsByRange.getOrElse(r, 0L), System.currentTimeMillis())
-        writeManifest(outDir, manifest)
-      }
-    } finally cached.unpersist()
+    val rows = Observation()
+    val counts = todo.map(r => count_if(col("range") === r).as(r.toString))
+    val leaves = byLeaf(triples.toDF())
+      .withColumn("range", pmod(col("bucket"), lit(NRanges)))
+      .filter(col("range").isin(todo: _*))
+      .observe(rows, counts.head, counts.tail: _*)
+    writer(leaves).partitionBy("range", "pred", "bucket").parquet(staging.toString)
+    val observed = rows.get
+    val rowsByRange = todo.map { r =>
+      r -> observed.getOrElse(r.toString,
+        throw new IllegalStateException(s"no row count observed for range $r")).asInstanceOf[Long]
+    }.toMap
+    todo.zipWithIndex.foreach { case (r, written) =>
+      if (written >= failAfterRanges)
+        throw new RuntimeException(s"injected failure before range $r")
+      // a range with no rows has no staged dir; commit it empty
+      swapIn(outDir, r, Files.createDirectories(staging.resolve(s"range=$r")))
+      manifest += r -> RangeEntry(r, rowsByRange(r), System.currentTimeMillis())
+      writeManifest(outDir, manifest)
+    }
     deleteRecursively(staging)
     manifest
   }

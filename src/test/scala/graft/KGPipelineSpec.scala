@@ -9,6 +9,17 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.fs.permission.FsPermission
 import scala.jdk.CollectionConverters._
 
+object KGPipelineSpec {
+  /** An extraction row that stores the verifier's outcome as a second
+    * mention list, the shape the storage spec compares against. */
+  final case class ParsedVerifiedRow(
+      conv_id: String,
+      turn_idx: Int,
+      parsed: Seq[(String, String)],
+      verified: Seq[(String, String)],
+      relations: Seq[(String, String, String)])
+}
+
 class KGPipelineSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val cfg = TranscriptGen.Config(nConvs = 60)
@@ -91,7 +102,55 @@ class KGPipelineSpec extends AnyFunSuite {
     info(s"${jobs.started} jobs: ${jobs.callSites.mkString(", ")}")
     assert(jobs.started <= 6, jobs.callSites)
     assert(r.links.isLocal && r.canonicalMap.isLocal)
+    // link's collect filled the extraction cache, so everything from the
+    // cache scan to the committed files is the sink's: ONE shuffle of the
+    // triples into the leaf partitioning, and one write job (the other
+    // job is that shuffle's map stage), with no count job
+    val sink = SparkTestBase.countJobs(TableIO.writeTriples(r.triples, SparkTestBase.scratchDir("graft-triples-500")))
+    info(s"sink: ${sink.started} jobs: ${sink.callSites.mkString(", ")}; ${sink.shuffleStages} shuffle stages")
+    assert(sink.shuffleStages == 1, sink)
+    assert(sink.writing == 1 && sink.started <= 2, sink)
+    assert(!sink.callSites.exists(s => s.startsWith("collect") || s.startsWith("count")), sink.callSites)
+    val src = new String(Files.readAllBytes(Paths.get("src/main/scala/graft/sources/TableIO.scala")), "UTF-8")
+    assert(!src.contains(".cache()") && !src.contains(".persist("), "TableIO caches no frame")
     r.unpersistAll()
+  }
+
+  /** Bytes the block manager holds for `ds` once it is cached: the one
+    * cached RDD that appears while it is counted. */
+  private def cachedBytes(ds: org.apache.spark.sql.Dataset[_]): Long = {
+    val before = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    ds.cache().count()
+    val fresh = spark.sparkContext.getRDDStorageInfo.filterNot(i => before(i.id))
+    assert(fresh.length == 1, fresh.toSeq)
+    fresh.head.memSize
+  }
+
+  test("extraction rows store the verifier outcome once: >= 30% fewer cached bytes, verified = the verifier filter") {
+    import spark.implicits._
+    val cfg500 = TranscriptGen.Config(nConvs = 500)
+    val prompts = Extraction.buildPrompts(TranscriptGen.transcripts(spark, cfg500))
+    val extracted = KGPipeline.extract(prompts, cfg500)
+    val pairs = extracted.map(e =>
+      KGPipelineSpec.ParsedVerifiedRow(e.conv_id, e.turn_idx, e.parsed, e.verified, e.relations))
+    val (once, twice) = (cachedBytes(extracted), cachedBytes(pairs))
+    info(s"cached extraction: $once B with rejected indices, $twice B with a verified list")
+    assert(once <= 0.7 * twice, s"$once B is not 30% under $twice B")
+
+    val scored = Extraction.scoreMentions(prompts, cfg500).collect()
+      .map(s => (s.conv_id, s.turn_idx) -> s).toMap
+    val rows = extracted.collect()
+    assert(rows.length == scored.size)
+    rows.foreach { e =>
+      val s = scored((e.conv_id, e.turn_idx))
+      val kept = Extraction.parsedOf(s).filter { case (ne, tag) =>
+        graft.functions.Parsers.verifierAnswer(
+          Scorer.verifierResponse(s.conv_id, s.turn_idx, ne, tag, s.text, cfg500)).contains(true)
+      }
+      assert(e.parsed == Extraction.parsedOf(s) && e.verified == kept, e)
+    }
+    assert(rows.exists(_.rejected.nonEmpty), "the fixture must exercise the verifier's rejects")
+    extracted.unpersist(); pairs.unpersist()
   }
 
   test("driver kg_mention_confidence / kg_mention_logits rows equal the spelled-out extraction chain") {

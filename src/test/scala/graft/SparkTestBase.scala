@@ -27,9 +27,10 @@ object SparkTestBase {
     f.delete(): Unit
   }
 
-  /** Spark jobs started while a block ran (their call sites), and how
-    * many of them wrote records to files. */
-  final case class Jobs(callSites: Seq[String], writing: Int) {
+  /** Spark jobs started while a block ran (their call sites), how many
+    * of them wrote records to files, and how many stages wrote shuffle
+    * records. */
+  final case class Jobs(callSites: Seq[String], writing: Int, shuffleStages: Int) {
     def started: Int = callSites.size
   }
 
@@ -41,6 +42,7 @@ object SparkTestBase {
       val jobs = scala.collection.mutable.ArrayBuffer.empty[String]
       val jobOfStage = scala.collection.mutable.Map.empty[Int, Int]
       val writers = scala.collection.mutable.Set.empty[Int]
+      val shufflers = scala.collection.mutable.Set.empty[Int]
       override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
         jobs += e.stageInfos.maxBy(_.stageId).name // the result stage: the action's call site
         e.stageIds.foreach(jobOfStage(_) = e.jobId)
@@ -48,12 +50,14 @@ object SparkTestBase {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
         if (e.taskMetrics != null && e.taskMetrics.outputMetrics.recordsWritten > 0)
           jobOfStage.get(e.stageId).foreach(writers += _)
+        if (e.taskMetrics != null && e.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          shufflers += e.stageId
       }
     }
     ListenerBusDrain(sc)
     sc.addSparkListener(listener)
     try { f; ListenerBusDrain(sc) } finally sc.removeSparkListener(listener)
-    listener.synchronized(Jobs(listener.jobs.toSeq, listener.writers.size))
+    listener.synchronized(Jobs(listener.jobs.toSeq, listener.writers.size, listener.shufflers.size))
   }
 
   lazy val spark: SparkSession = {
