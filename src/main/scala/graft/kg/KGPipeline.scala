@@ -69,10 +69,7 @@ object KGPipeline {
     val canon = Canonicalize.canonicalMap(links, TranscriptGen.entities(spark))
 
     // 7. triple materialization: the canonical map rides a broadcast
-    //    variable through ONE narrow flatMap over the extraction rows,
-    //    then ONE shuffle into the sink's (pred, bucket) leaf
-    //    partitioning and a partition-local dedup; TableIO.writeTriples
-    //    reuses that partitioning instead of shuffling again
+    //    variable through ONE narrow flatMap over the extraction rows
     val triples = materializeTriplesAdaptive(extracted, verified, relations, canon)
 
     Result(turns, prompts, mentions, verified, relations, links, canon, triples, extracted)
@@ -102,14 +99,13 @@ object KGPipeline {
   }
 
   /** The canonical map's `m:` rows are collected into a driver `Map`
-    * and broadcast into ONE narrow flatMap over the extraction rows: no
-    * joins, no union. The triples then take the one shuffle they need,
-    * into the sink's leaf partitioning ([[graft.sources.TableIO.byLeaf]]),
-    * and are deduplicated inside each partition: the grouping keys
-    * include the bucket, so the dedup adds no exchange, and the sink
-    * writes from this partitioning without another. `verified` and
-    * `relations` are unused; they keep the signature its callers
-    * compile against. */
+    * and broadcast into ONE narrow flatMap + distinct over the
+    * extraction rows: no joins, no union. The distinct hashes the whole
+    * row, not the sink's (pred, bucket) leaf: that key has at most
+    * #preds x 16 values, which caps the dedup's parallelism, and a
+    * dedup after a user repartition loses the map-side combine.
+    * `verified` and `relations` are unused; they keep the signature its
+    * callers compile against. */
   def materializeTriplesAdaptive(extracted: Dataset[Extraction.TurnExtraction],
                                  verified: Dataset[Mention], relations: Dataset[Relation],
                                  canon: DataFrame): Dataset[Triple] = {
@@ -118,8 +114,7 @@ object KGPipeline {
     val map = canon.as[(String, String)].collect()
       .collect { case (m, c) if m.startsWith("m:") => m.substring(2) -> c }.toMap
     val bc = spark.sparkContext.broadcast(map)
-    graft.sources.TableIO.byLeaf(extracted.flatMap(e => triplesOf(e, bc.value)).toDF())
-      .distinct().select("subj", "pred", "obj").as[Triple]
+    extracted.flatMap(e => triplesOf(e, bc.value)).distinct()
   }
 
   /** The triple vocabulary of one extracted turn against a canonical

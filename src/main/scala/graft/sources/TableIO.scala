@@ -1,9 +1,11 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
 import graft.kg.Triple
 
 /** Thin table facade: partitioned parquet + JSON manifest emulating
@@ -21,8 +23,9 @@ import graft.kg.Triple
   * out every range the manifest lacks under `outDir/.staging`. The
   * rows of each range are counted by an `Observation` on that write
   * (one `count_if(range = r)` per missing range), so no aggregate job
-  * runs and nothing is cached; a range whose count was not observed
-  * fails the call before the first commit. Then,
+  * runs and nothing is cached; a range whose count was not observed,
+  * or an observation not completed within [[ObservedWithin]], fails
+  * the call before the first commit. Then,
   * range by range, `.staging/range=R` is swapped into `range=R` by
   * rename ([[swapIn]], the swap [[compactTriples]] also uses) and the
   * range is recorded in `_manifest.json` via write-temp + atomic
@@ -84,25 +87,39 @@ object TableIO {
   private val SinkSchema =
     Encoders.product[Triple].schema.add("range", IntegerType).add("bucket", IntegerType)
 
-  private def bucketOf(subj: Column): Column = pmod(xxhash64(subj), lit(NBuckets)).cast("int")
-
-  /** The leaf partitioning, defined once for materialization
-    * (`KGPipeline.materializeTriplesAdaptive`) and the sink: rows are
-    * hash-partitioned on (pred, bucket), the bucket written as its
-    * expression on `subj`, and the `bucket` column is added. One task
-    * then owns each (pred, bucket) leaf, so a partitioned write emits
-    * exactly one file per leaf, and identical triples meet in one task.
-    *
-    * The partition count is explicit, the session's
+  /** The sink's leaf partitioning: the `bucket` column is added and
+    * rows are hash-partitioned on (pred, bucket). One task then owns
+    * each leaf, so a partitioned write emits exactly one file per
+    * leaf. The partition count is explicit, the session's
     * `spark.sql.shuffle.partitions`: AQE coalesces a by-column
-    * repartition of a few MB into ONE task, which then dedups and
-    * writes every leaf alone, but leaves a by-number one alone. A frame
-    * that already carries this partitioning (the materialized triples)
-    * is not shuffled again: `EnsureRequirements` drops a repartition
-    * its child's partitioning already satisfies. */
-  def byLeaf(df: DataFrame): DataFrame = {
+    * repartition of a few MB into ONE task, which then writes every
+    * leaf alone, but leaves a by-number one alone. */
+  private def byLeaf(df: DataFrame): DataFrame = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    df.repartition(n, col("pred"), bucketOf(col("subj"))).withColumn("bucket", bucketOf(col("subj")))
+    df.withColumn("bucket", pmod(xxhash64(col("subj")), lit(NBuckets)).cast("int"))
+      .repartition(n, col("pred"), col("bucket"))
+  }
+
+  /** How long [[writeTriples]] waits, once its write job has returned,
+    * for the observed counts. Spark completes an `Observation` from a
+    * query listener, after the action; `Observation.get` waits forever
+    * if that never happens. */
+  private val ObservedWithin = 60.seconds
+
+  /** Each range's row count from an observation of `count_if(range =
+    * r)` columns named by the range. A count that is missing, or an
+    * observation not completed within `within`, throws: the manifest
+    * never records a guessed count. */
+  private[graft] def observedRows(rows: Observation, ranges: Seq[Int],
+                                    within: FiniteDuration = ObservedWithin): Map[Int, Long] = {
+    val row = try Await.result(rows.future, within)
+    catch { case e: TimeoutException =>
+      throw new IllegalStateException(s"no row counts observed within $within", e) }
+    ranges.map { r =>
+      val i = row.schema.fieldNames.indexOf(r.toString)
+      if (i < 0 || row.isNullAt(i)) throw new IllegalStateException(s"no row count observed for range $r")
+      r -> row.getLong(i)
+    }.toMap
   }
 
   /** `df.write` through [[NioLocalFileSystem]]. Hadoop caches the
@@ -120,10 +137,10 @@ object TableIO {
       .parquet(ranges.map(r => s"$outDir/range=$r"): _*)
 
   /** Resumable write: skips ranges already in the manifest. The missing
-    * ranges' rows go through [[byLeaf]] (no shuffle when the input is
-    * already leaf-partitioned) into ONE write job that lays them all out
-    * under `.staging`; each range's row count is observed on that write,
-    * so no other job runs. Then each range is swapped into place
+    * ranges' rows go through ONE shuffle ([[byLeaf]]) into ONE write
+    * job that lays them all out under `.staging`; each range's row
+    * count is observed on that write ([[observedRows]]), so no other
+    * job runs and nothing is cached. Then each range is swapped into place
     * ([[swapIn]]) and committed to the manifest, one at a time.
     * `failAfterRanges` injects a crash before the commit of range
     * number `failAfterRanges` of this call, for the resume tests. */
@@ -141,11 +158,7 @@ object TableIO {
       .filter(col("range").isin(todo: _*))
       .observe(rows, counts.head, counts.tail: _*)
     writer(leaves).partitionBy("range", "pred", "bucket").parquet(staging.toString)
-    val observed = rows.get
-    val rowsByRange = todo.map { r =>
-      r -> observed.getOrElse(r.toString,
-        throw new IllegalStateException(s"no row count observed for range $r")).asInstanceOf[Long]
-    }.toMap
+    val rowsByRange = observedRows(rows, todo)
     todo.zipWithIndex.foreach { case (r, written) =>
       if (written >= failAfterRanges)
         throw new RuntimeException(s"injected failure before range $r")

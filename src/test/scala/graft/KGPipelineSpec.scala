@@ -102,17 +102,18 @@ class KGPipelineSpec extends AnyFunSuite {
     info(s"${jobs.started} jobs: ${jobs.callSites.mkString(", ")}")
     assert(jobs.started <= 6, jobs.callSites)
     assert(r.links.isLocal && r.canonicalMap.isLocal)
-    // link's collect filled the extraction cache, so everything from the
-    // cache scan to the committed files is the sink's: ONE shuffle of the
-    // triples into the leaf partitioning, and one write job (the other
-    // job is that shuffle's map stage), with no count job
-    val sink = SparkTestBase.countJobs(TableIO.writeTriples(r.triples, SparkTestBase.scratchDir("graft-triples-500")))
+    // the sink on the materialized triples: ONE shuffle into the leaf
+    // partitioning and one write job (the other job is that shuffle's
+    // map stage); the range counts are observed on the write, so no
+    // count job runs and no frame is cached
+    val triples = r.triples.cache()
+    triples.count()
+    val sink = SparkTestBase.countJobs(TableIO.writeTriples(triples, SparkTestBase.scratchDir("graft-triples-500")))
     info(s"sink: ${sink.started} jobs: ${sink.callSites.mkString(", ")}; ${sink.shuffleStages} shuffle stages")
     assert(sink.shuffleStages == 1, sink)
     assert(sink.writing == 1 && sink.started <= 2, sink)
-    assert(!sink.callSites.exists(s => s.startsWith("collect") || s.startsWith("count")), sink.callSites)
-    val src = new String(Files.readAllBytes(Paths.get("src/main/scala/graft/sources/TableIO.scala")), "UTF-8")
-    assert(!src.contains(".cache()") && !src.contains(".persist("), "TableIO caches no frame")
+    assert(sink.cachedRdds == 0, sink)
+    triples.unpersist()
     r.unpersistAll()
   }
 
@@ -337,6 +338,20 @@ class KGPipelineSpec extends AnyFunSuite {
     assert(TableIO.readTriples(spark, dir).collect().toSet == want)
     TableIO.compactTriples(spark, dir)
     assert(TableIO.readTriples(spark, dir).collect().toSet == want)
+  }
+
+  test("sink: a range count that was not observed throws instead of committing a guess") {
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions.{col, count_if, lit}
+    import scala.concurrent.duration._
+    val never = Observation()
+    intercept[IllegalStateException](TableIO.observedRows(never, Seq(0), 100.millis))
+    val range0 = Observation()
+    spark.range(10).withColumn("range", lit(0))
+      .observe(range0, count_if(col("range") === 0).as("0")).collect()
+    assert(TableIO.observedRows(range0, Seq(0)) == Map(0 -> 10L))
+    val missing = intercept[IllegalStateException](TableIO.observedRows(range0, Seq(0, 1)))
+    assert(missing.getMessage.contains("range 1"), missing)
   }
 
   test("sink: files and dirs get the permissions of a plain parquet write of the same frame") {

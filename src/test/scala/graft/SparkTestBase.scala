@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Shared local SparkSession for all specs (one JVM, forked by sbt). */
@@ -28,9 +28,9 @@ object SparkTestBase {
   }
 
   /** Spark jobs started while a block ran (their call sites), how many
-    * of them wrote records to files, and how many stages wrote shuffle
-    * records. */
-  final case class Jobs(callSites: Seq[String], writing: Int, shuffleStages: Int) {
+    * of them wrote records to files, how many stages wrote shuffle
+    * records, and how many RDDs stored cached blocks. */
+  final case class Jobs(callSites: Seq[String], writing: Int, shuffleStages: Int, cachedRdds: Int) {
     def started: Int = callSites.size
   }
 
@@ -43,6 +43,7 @@ object SparkTestBase {
       val jobOfStage = scala.collection.mutable.Map.empty[Int, Int]
       val writers = scala.collection.mutable.Set.empty[Int]
       val shufflers = scala.collection.mutable.Set.empty[Int]
+      val cached = scala.collection.mutable.Set.empty[Int]
       override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
         jobs += e.stageInfos.maxBy(_.stageId).name // the result stage: the action's call site
         e.stageIds.foreach(jobOfStage(_) = e.jobId)
@@ -53,11 +54,16 @@ object SparkTestBase {
         if (e.taskMetrics != null && e.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
           shufflers += e.stageId
       }
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = synchronized {
+        val info = e.blockUpdatedInfo
+        if (info.storageLevel.isValid) info.blockId.asRDDId.foreach(cached += _.rddId)
+      }
     }
     ListenerBusDrain(sc)
     sc.addSparkListener(listener)
     try { f; ListenerBusDrain(sc) } finally sc.removeSparkListener(listener)
-    listener.synchronized(Jobs(listener.jobs.toSeq, listener.writers.size, listener.shufflers.size))
+    listener.synchronized(
+      Jobs(listener.jobs.toSeq, listener.writers.size, listener.shufflers.size, listener.cached.size))
   }
 
   lazy val spark: SparkSession = {
