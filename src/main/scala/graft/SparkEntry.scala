@@ -141,11 +141,6 @@ object SparkEntry {
         .withColumn("confidence", org.apache.spark.sql.functions.lit(1.0))
         .withColumn("model", org.apache.spark.sql.functions.lit("user"))
         .withColumn("created_on", org.apache.spark.sql.functions.lit(new java.sql.Timestamp(0L)))
-      // r6: the query's output is the score FRAME only — evaluate()'s
-      // eagerly-computed Scores scalars (an extra .head() job plus the
-      // anti-join diagnostics branch) were discarded here, so this now
-      // runs the frame-only path (2 jobs instead of 5; results
-      // identical, evaluate() itself unchanged for the spec gates)
       operators.LabelEval.scoreFrame(lvs, gold)
     }),
     "multimodal_features" -> ((s, dir) => {

@@ -52,16 +52,6 @@ object Confidence {
   /** raw logits — :107. */
   def transparent(logits: Array[Double]): Array[Double] = logits
 
-  /** All six, keyed by the reference's names (confidence_functions
-    * dict, :101-107). */
-  val All: Map[String, Array[Double] => Array[Double]] = Map(
-    "softmax" -> softmax,
-    "softmax_min" -> softmaxMin,
-    "softmax_max" -> softmaxMax,
-    "proba_direct" -> probaDirect,
-    "proba_centered" -> probaCentered,
-    "transparent" -> transparent)
-
   def sigmoid(x: Double): Double = 1.0 / (1.0 + math.exp(-x))
 
   /** Logistic calibration scoring: sigmoid(w·logits + b) with a

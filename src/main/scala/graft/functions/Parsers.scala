@@ -49,11 +49,6 @@ object Parsers {
     "person" -> "PER", "organization" -> "ORG", "location" -> "LOC",
     "miscellaneous" -> "MISC")
 
-  /** prompts.py:335 */
-  val MappingTagWords: Map[String, String] = Map(
-    "PER" -> "person", "ORG" -> "organization", "LOC" -> "location",
-    "MISC" -> "miscellaneous")
-
   /** Python-slice semantics: `s[from:until]` never throws — a window
     * whose close delimiter precedes its open delimiter (real LLM
     * output: "x)] then [('A','PER')") yields "" and the caller's
@@ -105,19 +100,6 @@ object Parsers {
       val tag = m.group(1)
       (m.group(2), MappingStringAbbr.getOrElse(tag, tag))
     }.toList
-
-  /** Get-entities parser — pt_get_entities.py:46-61: append `]`,
-    * slice first `[`..`]`, literal-eval to a list of strings. */
-  def parseStringList(response0: String): List[String] = {
-    val response = response0 + "]"
-    val start = response.indexOf('[')
-    val end = response.indexOf(']')
-    val window = if (start != -1 && end != -1) sliceClamped(response, start, end + 1) else "[]"
-    PyLiteral.parse(window) match {
-      case Some(Py.Seq_(items)) => items.toList.collect { case Py.S(s) => s }
-      case _ => Nil
-    }
-  }
 
   /** Tagger parser — pt_tagger.py:93-112: append `}`, slice `{..}`,
     * literal-eval dict, map single-char values to tags.

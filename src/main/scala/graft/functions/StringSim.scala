@@ -1,8 +1,8 @@
 package graft.functions
 
 /** String-similarity kernels for entity-link scoring, matching the
-  * functions the reference pulls from the `jaro` and `Levenshtein`
-  * pip packages (ketl/mongo/entityMatching.py:49-67). Pure, branchy
+  * functions the reference pulls from the `jaro` pip package
+  * (ketl/mongo/entityMatching.py:49-67). Pure, branchy
   * Scala — used both as plain functions inside typed maps and wrapped
   * in a column function for DataFrame joins.
   */
@@ -89,52 +89,6 @@ object StringSim {
     val max = math.min(4, math.min(s1.length, s2.length))
     while (prefix < max && s1.charAt(prefix) == s2.charAt(prefix)) prefix += 1
     j + prefix * 0.1 * (1.0 - j)
-  }
-
-  /** Plain Levenshtein distance (unit costs). */
-  def levenshtein(s1: String, s2: String): Int = {
-    val l1 = s1.length
-    val l2 = s2.length
-    if (l1 == 0) return l2
-    if (l2 == 0) return l1
-    var prev = Array.tabulate(l2 + 1)(identity)
-    var cur = new Array[Int](l2 + 1)
-    var i = 1
-    while (i <= l1) {
-      cur(0) = i
-      var j = 1
-      while (j <= l2) {
-        val cost = if (s1.charAt(i - 1) == s2.charAt(j - 1)) 0 else 1
-        cur(j) = math.min(math.min(cur(j - 1) + 1, prev(j) + 1), prev(j - 1) + cost)
-        j += 1
-      }
-      val t = prev; prev = cur; cur = t
-      i += 1
-    }
-    prev(l2)
-  }
-
-  /** `Levenshtein.ratio` (entityMatching.py:50): indel-style ratio,
-    * (len1+len2 − dist₂)/(len1+len2) where substitutions cost 2. */
-  def levenshteinRatio(s1: String, s2: String): Double = {
-    val l1 = s1.length
-    val l2 = s2.length
-    if (l1 + l2 == 0) return 1.0
-    var prev = Array.tabulate(l2 + 1)(identity)
-    var cur = new Array[Int](l2 + 1)
-    var i = 1
-    while (i <= l1) {
-      cur(0) = i
-      var j = 1
-      while (j <= l2) {
-        val cost = if (s1.charAt(i - 1) == s2.charAt(j - 1)) 0 else 2
-        cur(j) = math.min(math.min(cur(j - 1) + 1, prev(j) + 1), prev(j - 1) + cost)
-        j += 1
-      }
-      val t = prev; prev = cur; cur = t
-      i += 1
-    }
-    (l1 + l2 - prev(l2)).toDouble / (l1 + l2)
   }
 
   /** Cosine similarity over float vectors (few_shots_techniques.py:75). */

@@ -23,11 +23,10 @@ object TextAnalytics {
     count
   }
 
-  /** BPE-ish subword-friendly tokenizer: letter runs, digit runs,
+  /** BPE-ish subword-friendly token count: letter runs, digit runs,
     * single other non-space chars — a cheap proxy for byte-pair token
     * counts on ASCII-heavy corpora. */
   private val BpeIshRe = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]".r
-  def tokenizeBpeIsh(text: String): List[String] = BpeIshRe.findAllIn(text).toList
   def tokenCountBpeIsh(text: String): Int = BpeIshRe.findAllIn(text).length
 
   /** Word tokens (lowercased letter runs) for langid / quality —
@@ -216,8 +215,6 @@ object TextAnalytics {
     while (b < 64) { if (counts(b) > 0) out |= (1L << b); b += 1 }
     out
   }
-
-  def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
   /** Winnowing fingerprints (Schleimer, Wilkerson, Aiken, SIGMOD'03):
     * rolling hashes of char k-grams, min per window of size w (rightmost

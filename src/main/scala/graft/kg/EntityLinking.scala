@@ -163,77 +163,6 @@ object EntityLinking {
   }
 
   // ------------------------------------------------------------------
-  // Human review loop (entityMatching.py:170-430): the styled Excel
-  // workbook becomes a CSV sink of proposal rows; the filled-workbook
-  // parser (process_excel_filled, :392-430) becomes a CSV source of
-  // decisions folded back into the catalogue.
-  // ------------------------------------------------------------------
-
-  /** Proposal rows → review CSV (the workbook's Matches sheet,
-    * entityMatching.py:170-389, minus styling): one row per
-    * (mention, rank) candidate with the mention's provenance count.
-    * Header on; deterministic order not required (the review tool
-    * sorts). */
-  def proposalsCsvSink(props: Dataset[LinkProposal], values: Dataset[(String, Long)],
-                       path: String): Unit = {
-    val spark = props.sparkSession
-    import spark.implicits._
-    val occ = values.toDF("mention", "n_occurrences")
-    props.toDF()
-      .join(broadcast(occ), Seq("mention"), "left_outer")
-      .select("mention", "rank", "entity_id", "entity_name", "jaro_score", "n_occurrences")
-      .write.mode("overwrite").option("header", "true").csv(path)
-  }
-
-  /** One reviewed decision, as parsed back from the filled review file
-    * (process_excel_filled output columns, entityMatching.py:427-430):
-    * empty answer_id ⇒ the reviewer asked to CREATE a new entity named
-    * `answer_name` (the can_create_entity branch); ignored mentions
-    * simply have no row (the reference drops them before writing). */
-  final case class ReviewDecision(
-      value: String,
-      answer_id: String, // nullable/empty → create new entity
-      answer_name: String,
-      entity_type: String)
-
-  def readReviewCsv(spark: SparkSession, path: String): Dataset[ReviewDecision] = {
-    import spark.implicits._
-    spark.read.option("header", "true")
-      .schema("value string, answer_id string, answer_name string, entity_type string")
-      .csv(path)
-      .na.fill("", Seq("answer_id"))
-      .as[ReviewDecision]
-  }
-
-  /** Deterministic id for a reviewer-created entity (content-derived —
-    * stable across reruns, unlike Mongo ObjectIds). */
-  def newEntityId(name: String): String =
-    f"N${Hashing.hash64("new-entity:" + name) & 0x7FFFFFFFFFFFFFFFL}%016x"
-
-  /** Fold accepted review decisions back into the linking state
-    * (the reference's accepted-matchings CSV → catalogue update):
-    * create-entity decisions append new catalogue rows (deduped by
-    * id); every decision becomes a human-confirmed LinkMatch
-    * (confidence 1.0, accepted) against the resolved entity id —
-    * ready to feed [[graft.kg.Canonicalize.canonicalMap]]. */
-  def applyReview(decisions: Dataset[ReviewDecision],
-                  catalogue: Dataset[Entity]): (Dataset[Entity], Dataset[LinkMatch]) = {
-    val spark = decisions.sparkSession
-    import spark.implicits._
-    val created = decisions
-      .filter(d => d.answer_id == null || d.answer_id.isEmpty)
-      .map(d => Entity(newEntityId(d.answer_name), d.answer_name, d.entity_type))
-      .dropDuplicates("entity_id")
-    val updated = catalogue.unionByName(created).dropDuplicates("entity_id")
-    val links = decisions.map { d =>
-      val id = if (d.answer_id == null || d.answer_id.isEmpty) newEntityId(d.answer_name)
-        else d.answer_id
-      LinkMatch(d.value, id, d.answer_name, 1.0, 1.0, accepted = true)
-    }
-    (updated, links)
-  }
-
-  // ------------------------------------------------------------------
   // Blocking-key candidate generation (north rule) for catalogues too
   // large to broadcast: a mention and an entity are candidates iff
   // they share ≥1 block key. Keys: normalized first char, length band,

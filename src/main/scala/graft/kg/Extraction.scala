@@ -179,7 +179,7 @@ object Extraction {
   }
 
   /** One scored turn through parse → verify → relations. */
-  private[graft] def extractRow(s: Scored, cfg: TranscriptGen.Config): TurnExtraction = {
+  private def extractRow(s: Scored, cfg: TranscriptGen.Config): TurnExtraction = {
     val parsed = parsedOf(s)
     val rejected = parsed.zipWithIndex.collect { case ((ne, tag), i)
       if !Parsers.verifierAnswer(

@@ -81,7 +81,7 @@ object KGPipeline {
 
   /** The projections of the extraction rows — parsed mentions,
     * verifier-surviving mentions and relations — defined once for the
-    * batch, audited and streaming paths. */
+    * batch and audited paths. */
   def mentionsOf(extracted: Dataset[Extraction.TurnExtraction]): Dataset[Mention] = {
     import extracted.sparkSession.implicits._
     extracted.flatMap(e => e.parsed.map { case (m, t) => Mention(e.conv_id, e.turn_idx, m, t) })
@@ -118,9 +118,7 @@ object KGPipeline {
   }
 
   /** The triple vocabulary of one extracted turn against a canonical
-    * surface map — the ONE definition shared by batch materialization
-    * and the streaming lift (StreamingExtraction.tripleStream): a
-    * change here changes both, so batch and stream can never drift. */
+    * surface map: the turn's verified mentions and its relations. */
   def triplesOf(e: Extraction.TurnExtraction, m: Map[String, String]): Seq[Triple] = {
     val subjTurn = s"${e.conv_id}#${e.turn_idx}"
     e.verified.map { case (ne, tag) =>

@@ -28,17 +28,6 @@ object PromptTechniques {
   case object Filing extends Technique { val name = "filing" }
   case object AtAt extends Technique { val name = "@@##" }
 
-  val All: Seq[Technique] = Seq(Discussion, Wrapper, GetEntitiesTagger, Filing, AtAt)
-
-  /** One turn's scorer output: one (tagArg, response) per issued
-    * prompt — single-prompt techniques carry tagArg "None" exactly
-    * like get_prompts_runnable returns [(prompt, "None")]. */
-  final case class ScoredMulti(
-      conv_id: String,
-      turn_idx: Int,
-      text: String,
-      responses: Seq[(String, String)])
-
   private def pyStr(s: String): String = graft.functions.Parsers.pyStr(s)
 
   private def noisy(convId: String, turnIdx: Int, text: String, salt: Long, cfg: TranscriptGen.Config): Boolean =

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * pretraining pipeline runs them:
   *
   *   1. repetition gate   (TextOps.repetitionProfile, q41 semantics)
-  *   2. quality gate      (TextOps.qualityFilter, q36 formula)
+  *   2. quality gate      (TextAnalytics.quality, q36 formula)
   *   3. PII redaction     (Privacy.redacted, q43 semantics)
   *   4. exact dedup       (md5 groupBy, min-id representative; q13)
   *   5. decontamination   (TextOps broadcast shingle anti-join, q42)
@@ -26,29 +26,15 @@ object CleanCorpus {
     * survive all five stages.
     *
     * The two text gates (repetition + quality) run fused in ONE typed
-    * pass over (id, text) — the same pure kernels the streaming lift
-    * uses — feeding a single left-semi join; the full TextOps.profile
-    * (winnowing, simhash, langid) is deliberately NOT computed here,
-    * the gates only need the repetition signals and the quality
-    * score. Measured on sf0.1: fusing the gates and skipping the
-    * profile roughly halves the q47 wall. */
+    * pass over (id, text), feeding a single left-semi join; the full
+    * TextOps.profile (winnowing, simhash, langid) is deliberately NOT
+    * computed here, the gates only need the repetition signals and
+    * the quality score. Measured on sf0.1: fusing the gates and
+    * skipping the profile roughly halves the q47 wall. */
   def clean(docs: DataFrame, benchmark: DataFrame,
             idCol: String, textCol: String,
             minQuality: Double = 0.3, minWords: Int = 5,
-            shingleN: Int = 8): DataFrame =
-    cleanPipeline(docs, benchmark, idCol, textCol, minQuality, minWords,
-      shingleN, piiFlag = false)
-
-  /** The shared five-stage DAG. With `piiFlag`, a `__had_pii` long
-    * column (1 when the RAW text matched any PII pattern, measured
-    * BEFORE redaction — a doc legitimately containing the literal
-    * `<EMAIL>` tag does not count) rides through the pipeline for
-    * [[cleanObserved]]'s metric; plain [[clean]] skips the extra
-    * regexp_counts entirely. */
-  private def cleanPipeline(docs: DataFrame, benchmark: DataFrame,
-                            idCol: String, textCol: String,
-                            minQuality: Double, minWords: Int,
-                            shingleN: Int, piiFlag: Boolean): DataFrame = {
+            shingleN: Int = 8): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val keepIds = docs.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
@@ -61,10 +47,6 @@ object CleanCorpus {
         }
       }).toDF("__keep_id")
     val gated = docs.join(keepIds, docs(idCol).cast("long") === col("__keep_id"), "left_semi")
-    val flagged = if (!piiFlag) gated else gated.withColumn("__had_pii",
-      when(regexp_count(col(textCol), lit(Privacy.EmailRe))
-        + regexp_count(col(textCol), lit(Privacy.PhoneRe))
-        + regexp_count(col(textCol), lit(Privacy.Ipv4Re)) > 0, 1L).otherwise(0L))
     // r6: materialize the gated+redacted corpus ONCE. `scrubbed` has
     // two consumers (the dedup-representative aggregate and the
     // semi-join's stream side), and without the barrier each branch
@@ -75,7 +57,7 @@ object CleanCorpus {
     // production pipeline persists before dedup; recomputing the
     // regexes is strictly worse than one materialization of rows that
     // are about to be written anyway.
-    val scrubbed = flagged.withColumn(textCol, Privacy.redacted(col(textCol)))
+    val scrubbed = gated.withColumn(textCol, Privacy.redacted(col(textCol)))
       .localCheckpoint()
     // exact dedup on the REDACTED text, min-id representative
     val reps = scrubbed
@@ -85,56 +67,5 @@ object CleanCorpus {
     val deduped = scrubbed.join(reps,
       scrubbed(idCol).cast("long") === col("__rep_id"), "left_semi")
     TextOps.decontaminate(deduped, benchmark, idCol, textCol, shingleN)
-  }
-
-  /** [[clean]] with in-flight metrics via `Dataset.observe`: the
-    * survivor count, redaction hits and output char volume are
-    * accumulated DURING whatever single action the caller runs on the
-    * returned frame (a parquet write, typically) — zero extra scans,
-    * unlike [[funnel]] which forces one job per stage. At 100 TB this
-    * is the only affordable way to get per-batch pipeline telemetry.
-    * Read the metrics after the action:
-    * `observation.get("n_docs"| "n_redacted" | "sum_chars")`. */
-  def cleanObserved(docs: DataFrame, benchmark: DataFrame,
-                    idCol: String, textCol: String,
-                    observation: org.apache.spark.sql.Observation,
-                    minQuality: Double = 0.3, minWords: Int = 5,
-                    shingleN: Int = 8): DataFrame =
-    cleanPipeline(docs, benchmark, idCol, textCol, minQuality, minWords,
-      shingleN, piiFlag = true)
-      .observe(observation,
-        count(lit(1)).as("n_docs"),
-        // surviving docs whose RAW text contained PII (flag computed
-        // upstream of redaction — see cleanPipeline; counting the
-        // literal tags post-hoc would also count docs that legitimately
-        // contained '<EMAIL>' and measures docs-touched either way)
-        sum(col("__had_pii")).as("n_redacted"),
-        sum(length(col(textCol)).cast("long")).as("sum_chars"))
-      .drop("__had_pii")
-
-  /** Per-stage survivor counts — the funnel diagnostic a pipeline
-    * logs per batch. Runs one job per stage (counts force the DAG),
-    * so call it on samples, not the 100-TB corpus. */
-  def funnel(docs: DataFrame, benchmark: DataFrame,
-             idCol: String, textCol: String,
-             minQuality: Double = 0.3, minWords: Int = 5,
-             shingleN: Int = 8): Seq[(String, Long)] = {
-    val nonRep = docs.join(
-      TextOps.repetitionProfile(docs, idCol, textCol).toDF()
-        .filter(col("repetitive") === 0).select(col("doc_id").as("__k")),
-      docs(idCol).cast("long") === col("__k"), "left_semi")
-    val gated = TextOps.qualityFilter(nonRep, idCol, textCol, minQuality, minWords)
-    val scrubbed = gated.withColumn(textCol, Privacy.redacted(col(textCol)))
-    val deduped = scrubbed.join(
-      scrubbed.select(col(idCol).cast("long").as("__id"), md5(col(textCol)).as("__h"))
-        .groupBy("__h").agg(min("__id").as("__rep_id")).select("__rep_id"),
-      scrubbed(idCol).cast("long") === col("__rep_id"), "left_semi")
-    val decon = TextOps.decontaminate(deduped, benchmark, idCol, textCol, shingleN)
-    Seq(
-      "input" -> docs.count(),
-      "repetition_gate" -> nonRep.count(),
-      "quality_gate" -> gated.count(),
-      "exact_dedup" -> deduped.count(),
-      "decontaminated" -> decon.count())
   }
 }

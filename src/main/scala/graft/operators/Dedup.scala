@@ -1,28 +1,22 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.functions.{Hashing, TextAnalytics}
+import graft.functions.TextAnalytics
 
-/** Deduplication operators for the training-data pipeline: exact,
-  * MinHash+LSH, SimHash and n-gram-Jaccard near-dup detection.
-  * Generalizes the reference's dedup-by-text
-  * (ner/Datasets/utils.py:33-45) to web-scale semantics.
+/** Near-duplicate sketching for the training-data pipeline: one
+  * word-3-shingle MinHash signature plus a SimHash per document, and
+  * MinHash-band clusters over them. Generalizes the reference's
+  * dedup-by-text (ner/Datasets/utils.py:33-45).
   *
-  * Scale design: every variant is
-  *   sketch (narrow map) → band keys (explode) → equi-join on band →
-  *   verify (exact measure on the candidate pair only).
-  * No all-pairs work ever happens; the only shuffles are the band-key
-  * join and the final distinct. Sketches are computed in one
-  * mapPartitions pass per doc (no per-pair text access — texts are
-  * re-joined only for the candidates that survive banding).
+  * No all-pairs work ever happens: documents meet only through the
+  * band keys of their signatures, and sketches are computed in one
+  * mapPartitions pass per doc.
   */
 object Dedup {
 
   final case class DocSketch(doc_id: Long, minhash: Array[Long], simhash: Long, nShingles: Int)
   final case class BandKey(band: Int, key: Long, doc_id: Long)
-  final case class CandidatePair(a: Long, b: Long)
-  final case class ScoredPair(a: Long, b: Long, score: Double)
 
   val NumHashes = 64
   val RowsPerBand = 4 // 16 bands → catches jaccard ≳ 0.5 w.h.p.
@@ -40,247 +34,6 @@ object Dedup {
             TextAnalytics.simhash64(if (text == null) "" else text), sh.size)
         }
       }
-  }
-
-  /** A band bucket larger than this is dropped from candidate
-    * generation (with a logged count — never silently): an N-member
-    * bucket yields N²/2 pairs, and duplicate-heavy web corpora
-    * routinely put 100k near-identical docs in one bucket. Exact
-    * copies must be collapsed FIRST ([[collapseExact]] /
-    * [[minhashNearDupsScaled]]) so the cap only ever trims
-    * pathological residue, not recall. */
-  val MaxBandBucket: Long = 256L
-
-  /** Candidate pairs sharing ≥1 LSH band. Join is equi on (band, key);
-    * pair orientation a<b + distinct dedups multi-band hits. Buckets
-    * over `maxBucket` members are dropped and LOGGED (the "no silent
-    * caps" rule): the stats pass runs on the per-bucket aggregate
-    * (one row per bucket), not the raw band rows. */
-  def minhashCandidates(sketches: Dataset[DocSketch],
-                        maxBucket: Long = MaxBandBucket): Dataset[CandidatePair] = {
-    val spark = sketches.sparkSession
-    import spark.implicits._
-    val bands = sketches.flatMap { s =>
-      TextAnalytics.lshBandKeys(s.minhash, RowsPerBand).zipWithIndex.map {
-        case (k, b) => BandKey(b, k, s.doc_id)
-      }
-    }
-    cappedPairJoin(bands.toDF("band", "key", "id"), maxBucket)
-  }
-
-  /** Shared capped pair generation over (band, key, id) bucket rows:
-    * ONE shuffle (groupByKey on the bucket key) computes the upstream
-    * sketch pipeline exactly once — the previous self-join shape
-    * recomputed it four times (size pass, kept-filter join, both join
-    * sides). Per-bucket memory is bounded: at most `maxBucket`+1 ids
-    * are buffered, overflow is counted and the bucket dropped + LOGGED
-    * (never silently). The bounded bucket frame is localCheckpoint-ed
-    * so the drop-stats action and the pair emission both read the
-    * materialized buckets instead of re-running the sketch. */
-  private def cappedPairJoin(bands: DataFrame, maxBucket: Long): Dataset[CandidatePair] = {
-    val spark = bands.sparkSession
-    import spark.implicits._
-    val cap = maxBucket.toInt
-    val buckets = bands.select(col("band"), col("key"), col("id"))
-      .as[(Int, Long, Long)]
-      .groupByKey(t => (t._1, t._2))
-      .mapGroups { (_: (Int, Long), it: Iterator[(Int, Long, Long)]) =>
-        val ids = new scala.collection.mutable.ArrayBuffer[Long](16)
-        var sz = 0L
-        it.foreach { t => sz += 1; if (ids.length <= cap) ids += t._3 }
-        (ids.toArray, sz)
-      }
-      .localCheckpoint()
-    val over = buckets.filter(_._2 > maxBucket).toDF("ids", "sz")
-      .agg(count(lit(1)).as("nBuckets"), coalesce(sum("sz"), lit(0L)).as("nRows"))
-      .head()
-    if (over.getLong(0) > 0)
-      System.err.println(s"[graft.Dedup] dropped ${over.getLong(0)} band buckets " +
-        s"(> $maxBucket members, ${over.getLong(1)} rows) from candidate generation — " +
-        "collapse exact duplicates first (minhashNearDupsScaled) to keep recall")
-    buckets.filter(b => b._2 <= maxBucket && b._1.length >= 2)
-      .flatMap { case (ids: Array[Long], _: Long) =>
-        // distinct: duplicate doc_id rows in the input would otherwise
-        // put the same id twice in a bucket and emit an (x,x) pair the
-        // old a<b join shape structurally excluded
-        val s = ids.sorted.distinct
-        for {
-          i <- s.indices.iterator
-          j <- (i + 1 until s.length).iterator
-        } yield CandidatePair(s(i), s(j))
-      }
-      .distinct()
-  }
-
-  /** Shared exact-verify stage: join candidate pairs back to their
-    * texts (twice, by pair side) and score each pair with `measure`.
-    * Null text degrades to "" — matching sketch()'s tolerance; null-
-    * text docs sketch to the empty shingle set, share every band key
-    * and WILL appear as candidates, so the verify side must not NPE. */
-  private def verifyPairs(cands: DataFrame, texts: DataFrame)
-                         (measure: (String, String) => Double): Dataset[ScoredPair] = {
-    val spark = cands.sparkSession
-    import spark.implicits._
-    cands
-      .join(texts.withColumnRenamed("id", "a").withColumnRenamed("text", "ta"), "a")
-      .join(texts.withColumnRenamed("id", "b").withColumnRenamed("text", "tb"), "b")
-      .as[(Long, Long, String, String)]
-      .map { case (b, a, ta, tb) => // after the two key-joins: (b, a, ta, tb)
-        ScoredPair(a, b, measure(if (ta == null) "" else ta, if (tb == null) "" else tb))
-      }
-  }
-
-  private def wordJaccard(ta: String, tb: String): Double =
-    TextAnalytics.jaccard(
-      TextAnalytics.shingles(ta, ShingleK).toSet,
-      TextAnalytics.shingles(tb, ShingleK).toSet)
-
-  /** MinHash near-dup pairs with EXACT Jaccard verification ≥ τ:
-    * candidates → join texts back (twice) → exact shingle Jaccard. */
-  def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-                      threshold: Double): Dataset[ScoredPair] = {
-    val texts = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-    val cands = minhashCandidates(sketch(docs, idCol, textCol)).toDF()
-    verifyPairs(cands, texts)(wordJaccard).filter(_.score >= threshold)
-  }
-
-  /** SimHash near-dups: 4×16-bit band buckets (any hamming-≤3 pair
-    * shares at least one intact band by pigeonhole), verified by
-    * exact hamming distance. Hot buckets capped + logged like the
-    * minhash path. */
-  def simhashNearDups(sketches: Dataset[DocSketch], maxHamming: Int = 3,
-                      maxBucket: Long = MaxBandBucket): Dataset[ScoredPair] = {
-    val spark = sketches.sparkSession
-    import spark.implicits._
-    require(maxHamming <= 3, "4-band pigeonhole covers hamming ≤ 3")
-    val bands = sketches.flatMap { s =>
-      (0 until 4).map { b =>
-        BandKey(b, (s.simhash >>> (b * 16)) & 0xFFFFL, s.doc_id)
-      }
-    }
-    val sigs = sketches.select(col("doc_id"), col("simhash"))
-    cappedPairJoin(bands.toDF("band", "key", "id"), maxBucket).toDF()
-      .join(sigs.withColumnRenamed("doc_id", "a").withColumnRenamed("simhash", "sa"), "a")
-      .join(sigs.withColumnRenamed("doc_id", "b").withColumnRenamed("simhash", "sb"), "b")
-      .as[(Long, Long, Long, Long)]
-      .map { case (b, a, sa, sb) =>
-        ScoredPair(a, b, TextAnalytics.hamming64(sa, sb).toDouble)
-      }
-      .filter(_.score <= maxHamming)
-  }
-
-  /** n-gram Jaccard near-dups: same banding for candidates, verify on
-    * character n-grams instead of word shingles (robust for short /
-    * no-whitespace strings, e.g. entity names). */
-  def ngramJaccardNearDups(docs: DataFrame, idCol: String, textCol: String,
-                           n: Int, threshold: Double): Dataset[ScoredPair] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val texts = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-    val grams = texts.as[(Long, String)].mapPartitions { it =>
-      it.map { case (id, t) =>
-        val g = TextAnalytics.charNgrams(if (t == null) "" else t.toLowerCase, n).toSet
-        DocSketch(id, TextAnalytics.minHashSignature(g, NumHashes), 0L, g.size)
-      }
-    }
-    val cands = minhashCandidates(grams).toDF()
-    verifyPairs(cands, texts) { (ta, tb) =>
-      TextAnalytics.jaccard(
-        TextAnalytics.charNgrams(ta.toLowerCase, n).toSet,
-        TextAnalytics.charNgrams(tb.toLowerCase, n).toSet)
-    }.filter(_.score >= threshold)
-  }
-
-  /** Embedding near-dups: MULTI-TABLE random-hyperplane LSH
-    * (deterministic seeded planes; `tables` independent plane sets of
-    * `planesPerTable` bits each), exact cosine verification ≥ τ.
-    *
-    * Each vector emits exactly `tables` bucket rows (its own bucket
-    * per table) — replacing round 1's both-sides 1-bit multi-probe,
-    * which emitted planes+1 (=13) rows per vector and compounded with
-    * hot buckets into a fanout×blowup at web scale. Recall comes from
-    * table independence instead of probing: a cosine-τ pair collides
-    * in one table w.p. (1 − θ/π)^planesPerTable, so with 4×10 tables a
-    * 0.95-cosine pair is caught w.p. ≈ 1−(1−0.6)⁴ ≈ 0.97 while the
-    * per-vector row cost drops 13 → 4. */
-  def embeddingNearDups(embeddings: DataFrame, idCol: String, vecCol: String,
-                        threshold: Double, tables: Int = 4, planesPerTable: Int = 10,
-                        seed: Long = 42L): Dataset[ScoredPair] = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    // localCheckpoint, not cache(): three consumers (buckets + both
-    // verify joins) read the materialized vectors, and the blocks are
-    // GC-reclaimed with the Dataset instead of leaking in a shared
-    // session until someone calls unpersist
-    val vecs = embeddings.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .as[(Long, Seq[Float])]
-      .map { case (id, v) => (id, v.toArray) }
-      .toDF("id", "vec").as[(Long, Array[Float])].localCheckpoint()
-
-    // per-table hyperplane matrices built once per PARTITION (dim is
-    // only known from the data), not per row — same hoist as Ann.lshTopK
-    val buckets = vecs.mapPartitions { it =>
-      var mats: Array[Array[Array[Double]]] = null
-      it.flatMap { case (id, v) =>
-        if (mats == null)
-          mats = Array.tabulate(tables)(t =>
-            Ann.planeMatrix(planesPerTable, v.length, seed + 7919L * t))
-        (0 until tables).map(t => (t, Ann.bucketOf(v, mats(t)), id))
-      }
-    }.toDF("band", "key", "id")
-
-    cappedPairJoin(buckets, MaxBandBucket).toDF()
-      .join(vecs.toDF("a", "va"), "a")
-      .join(vecs.toDF("b", "vb"), "b")
-      .as[(Long, Long, Array[Float], Array[Float])]
-      .map { case (b, a, va, vb) =>
-        ScoredPair(a, b, graft.functions.StringSim.cosine(va, vb))
-      }
-      .filter(_.score >= threshold)
-  }
-
-  /** Exact-duplicate pre-collapse by content hash (the q13 groupBy as
-    * an operator): returns
-    *  - `reps`: one representative row (min doc_id) per distinct text;
-    *  - `groups`: (doc_id, rep_id, group_size) membership map.
-    * Run this BEFORE any banding on duplicate-heavy corpora: a
-    * 100k-copy cluster collapses to ONE representative, so band
-    * buckets never see the N²/2 exact-dup pair explosion. */
-  def collapseExact(docs: DataFrame, idCol: String, textCol: String): (DataFrame, DataFrame) = {
-    // 128-bit md5, not xxhash64: at the module's 10^12-doc target a
-    // 64-bit key expects ~N²/2^65 silent false merges (tens of
-    // thousands); 128 bits puts the collision mass below 10^-13
-    val byHash = docs
-      .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-      .withColumn("h", md5(col("text")))
-    val groups0 = byHash
-      .groupBy("h")
-      .agg(min("id").as("rep_id"), count(lit(1)).as("group_size"))
-    val groups = byHash.select(col("id").as("doc_id"), col("h"))
-      .join(groups0, "h")
-      .select("doc_id", "rep_id", "group_size")
-    val reps = byHash.join(groups0, "h")
-      .filter(col("id") === col("rep_id"))
-      .select(col("id").as(idCol), col("text").as(textCol))
-    (reps, groups)
-  }
-
-  /** Scale path for near-dup detection on duplicate-heavy corpora:
-    * collapse exact duplicates first, band + verify ONLY the
-    * representatives (with the hot-bucket cap as a logged backstop for
-    * residual pathological buckets), and return the near-dup pairs
-    * between representatives together with the exact-group membership
-    * map. Pair expansion to all group members is deliberately NOT
-    * materialized — it is quadratic by construction; consumers join
-    * through `groups` (rep-level pairs + membership carry the same
-    * information in O(N) rows). */
-  def minhashNearDupsScaled(docs: DataFrame, idCol: String, textCol: String,
-                            threshold: Double, maxBucket: Long = MaxBandBucket)
-      : (Dataset[ScoredPair], DataFrame) = {
-    val (reps, groups) = collapseExact(docs, idCol, textCol)
-    val texts = reps.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-    val cands = minhashCandidates(sketch(reps, idCol, textCol), maxBucket).toDF()
-    (verifyPairs(cands, texts)(wordJaccard).filter(_.score >= threshold), groups)
   }
 
   /** Per-doc candidate-cluster id: min doc_id over docs sharing any

@@ -6,12 +6,11 @@ import org.apache.spark.sql.expressions.Window
 import graft.kg.LabelVersion
 
 /** Document-label evaluation pipeline reproducing
-  * ketl/mongo/testingLLMperformance.py end to end (SURVEY §3.3):
-  * model filter → max-confidence row per (doc,label,model) →
-  * date normalization → gold union with anti-join diagnostics →
-  * meta-label drop → per-(doc,label) user-vs-model containment check
-  * with the reference's two domain special cases → field-level and
-  * doc-level mean-of-means scores with wrong-document-type exclusion.
+  * ketl/mongo/testingLLMperformance.py (SURVEY §3.3) up to the score
+  * frame: model filter → max-confidence row per (doc,label,model) →
+  * date normalization → gold union → meta-label drop →
+  * per-(doc,label) user-vs-model containment check with the
+  * reference's two domain special cases.
   */
 object LabelEval {
 
@@ -58,15 +57,6 @@ object LabelEval {
     lv.filter(!col("label_name").contains("-") &&
       !col("label_name").isin("language", "description document"))
 
-  /** Doc ids present on only one side (anti-joins both ways,
-    * testingLLMperformance.py:69-71). */
-  def docsNotInBoth(a: DataFrame, b: DataFrame): DataFrame = {
-    val aIds = a.select("doc_id").distinct()
-    val bIds = b.select("doc_id").distinct()
-    aIds.join(bIds, Seq("doc_id"), "left_anti")
-      .union(bIds.join(aIds, Seq("doc_id"), "left_anti"))
-  }
-
   /** check_label_value (testingLLMperformance.py:28-48) per
     * (doc_id, label_name): 1 iff the user's value appears among model
     * values, with two special cases that award 1 when the LLM stayed
@@ -96,44 +86,6 @@ object LabelEval {
           .when(array_contains(coalesce(col("model_values"), array()), col("user_value")), 1)
           .otherwise(0))
       .select("doc_id", "label_name", "output")
-  }
-
-  /** get_results_by_label_name (testingLLMperformance.py:86-92). */
-  def resultsByLabel(scoreDf: DataFrame): DataFrame =
-    scoreDf.groupBy("label_name")
-      .agg(avg("output").as("mean_output"), count(lit(1)).as("count_values"))
-      .orderBy(col("count_values").desc)
-
-  final case class Scores(byFields: Double, byDocuments: Double, nFields: Long)
-
-  /** get_score_for_asked_fields (testingLLMperformance.py:104-112):
-    * drop never-compared docs, drop non-(client|document type) fields
-    * of docs whose 'document type' answer was wrong, then field mean
-    * and doc-level mean of per-doc means. Field mean, doc mean and
-    * row count all come out of ONE two-level aggregation job (round-1
-    * bench showed action count, not shuffle volume, dominating
-    * label_eval's wall). */
-  def scores(scoreDf: DataFrame, noCompareDocs: DataFrame): Scores = {
-    val docWrongType = scoreDf
-      .filter(col("label_name") === "document type" && col("output") === 0)
-      .select("doc_id").distinct()
-    val s2 = scoreDf
-      .join(noCompareDocs, Seq("doc_id"), "left_anti")
-      .join(docWrongType.withColumnRenamed("doc_id", "wrong_doc"),
-        col("doc_id") === col("wrong_doc"), "left_outer")
-      .filter(col("wrong_doc").isNull ||
-        col("label_name").isin("client", "document type"))
-      .drop("wrong_doc")
-    val row = s2.groupBy("doc_id")
-      .agg(sum("output").cast("double").as("s"), count(lit(1)).as("c"))
-      .agg(
-        coalesce(sum("s"), lit(0.0)).as("sumOutput"),
-        coalesce(sum("c"), lit(0L)).as("n"),
-        avg(col("s") / col("c")).as("byDocs"))
-      .head()
-    val n = row.getLong(1)
-    if (n == 0) Scores(0.0, 0.0, 0L)
-    else Scores(row.getDouble(0) / n, row.getDouble(2), n)
   }
 
   /** Deterministic synthetic label_versions table (FIXTURES.md §6
@@ -225,35 +177,19 @@ object LabelEval {
       .as[LabelVersion]
   }
 
-  /** Just the per-(doc,label) score frame — the pipeline through
-    * [[checkLabelValues]] WITHOUT the [[scores]] scalar aggregation
-    * (its own eager `.head()` job) and without the anti-join
-    * diagnostics that only the scalars consume. The bench/driver
-    * `label_eval` query returns this frame alone, so computing the
-    * discarded scalars was a wasted action + branch (guide §1.2:
-    * "don't compute things you throw away"). `cleaned` is materialized
-    * once: the three checkLabelValues branches would otherwise each
-    * re-run the max-conf WINDOW + union. */
+  /** The per-(doc,label) score frame (get_LLM_performance,
+    * testingLLMperformance.py:50-84, through [[checkLabelValues]]):
+    * model filter, max-confidence row, date normalization, gold union
+    * and meta-label drop. The reference's scalar field/doc means and
+    * its not-in-both diagnostics are not computed: the `label_eval`
+    * query returns this frame alone. `cleaned` is materialized once:
+    * the three checkLabelValues branches would otherwise each re-run
+    * the max-conf WINDOW + union. */
   def scoreFrame(lv: Dataset[LabelVersion], gold: DataFrame): DataFrame = {
     val filtered = maxConfPerGroup(filterModels(lv)).toDF()
     val normalized = normalizeDates(filtered)
     val unioned = normalized.unionByName(gold, allowMissingColumns = true)
     val cleaned = dropMetaLabels(unioned).localCheckpoint()
     checkLabelValues(cleaned)
-  }
-
-  /** Full pipeline (get_LLM_performance, testingLLMperformance.py:50-84).
-    * `normalized` is materialized once (localCheckpoint): it feeds the
-    * anti-join diagnostics, the gold union and (through it) the three
-    * checkLabelValues branches — recomputing the max-conf WINDOW per
-    * branch dominated the label_eval wall before this. */
-  def evaluate(lv: Dataset[LabelVersion], gold: DataFrame): (Scores, DataFrame) = {
-    val filtered = maxConfPerGroup(filterModels(lv)).toDF()
-    val normalized = normalizeDates(filtered).localCheckpoint()
-    val noCompare = docsNotInBoth(normalized, gold)
-    val unioned = normalized.unionByName(gold, allowMissingColumns = true)
-    val cleaned = dropMetaLabels(unioned)
-    val scoreDf = checkLabelValues(cleaned).localCheckpoint()
-    (scores(scoreDf, noCompare), scoreDf)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing
 
@@ -76,22 +76,6 @@ object Multimodal {
       if (partitions > 0) media.repartition(partitions, col("media_id"))
       else media.repartition(col("media_id"))
     repartitioned.mapPartitions(rows => decoder.decodeBatch(rows))
-  }
-
-  /** Video frame sampling stub: emits one row per sampled frame with
-    * the byte-range a real implementation would decode; deterministic
-    * frame positions. */
-  def sampleFrames(media: Dataset[MediaRow], framesPerVideo: Int): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.filter(_.modality == "video").flatMap { r =>
-      val n = r.content.length
-      (0 until framesPerVideo).map { i =>
-        val off = if (framesPerVideo == 1) 0 else (n.toLong * i / framesPerVideo).toInt
-        (r.media_id, i, off, math.min(n - off, n / math.max(1, framesPerVideo)),
-          Hashing.hash64(r.media_id * 31L + i, 7L))
-      }
-    }.toDF("media_id", "frame_idx", "byte_offset", "byte_len", "frame_sig")
   }
 
   /** Deterministic synthetic media table for tests/bench. */

@@ -39,16 +39,6 @@ object Privacy {
   def redacted(text: Column): Column =
     passes.foldLeft(text) { case (c, (re, tag)) => regexp_replace(c, re, tag) }
 
-  private lazy val compiledPasses =
-    passes.map { case (re, tag) => (java.util.regex.Pattern.compile(re), tag) }
-
-  /** Pure JVM twin of [[redacted]] (same pattern strings, same order;
-    * Spark's `regexp_replace` is Java-regex replaceAll, so the two
-    * are byte-identical) — for typed/streaming paths. */
-  def redactString(s: String): String =
-    if (s == null) null
-    else compiledPasses.foldLeft(s) { case (t, (p, tag)) => p.matcher(t).replaceAll(tag) }
-
   /** Per-document PII stats + redacted text: counts are taken BEFORE
     * redaction so overlapping categories report what the raw text
     * contained. One narrow projection over the input. */

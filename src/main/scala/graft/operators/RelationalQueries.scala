@@ -373,13 +373,11 @@ object RelationalQueries {
       .distinct()
   }
 
-  /** MinHash-LSH candidate generation + exact-Jaccard verify
-    * (Dedup.minhashCandidates/verify's oracle-grade shadow): 8
+  /** MinHash-LSH candidate generation + exact-Jaccard verify: 8
     * md5-seeded minhashes → 2 bands of 4 → band-key equi self-join →
     * exact word-3-gram Jaccard on each candidate pair. Never all
-    * pairs: only pairs agreeing on a full band are scored — the exact
-    * LSH shape the production dedup uses, with a hash DuckDB can
-    * reproduce bit-for-bit. */
+    * pairs: only pairs agreeing on a full band are scored, with a hash
+    * DuckDB can reproduce bit-for-bit. */
   def q29LshJaccard(spark: SparkSession, dir: String): DataFrame = {
     def mh(j: Int): Column =
       array_min(transform(col("gs"), g => md5(concat(lit(s"$j:"), g))))
@@ -1721,7 +1719,7 @@ object RelationalQueries {
     * item): a prefix-term bucket of b docs emits O(b²) pairs inside
     * one task's lambda, so a pathological corpus (one token in every
     * doc's prefix window) must be dropped-and-logged, never silently
-    * ground through — the Dedup.cappedPairJoin contract. The cap sits
+    * ground through. The cap sits
     * above this corpus's natural max bucket (951 at sf0.1), so the
     * oracle rows are unchanged. */
   val Q94MaxBucket = 4096
@@ -1751,7 +1749,7 @@ object RelationalQueries {
     val pre = ordered.select(col("doc_id"), size(col("ts")).as("n"),
       explode(expr("slice(ts, 1, cast(size(ts) - ceil(0.9 * size(ts)) + 1 as int))")).as("term"))
     // bucket frame materialized once: the oversized-bucket audit and
-    // the pair emission both read it (Dedup.cappedPairJoin shape)
+    // the pair emission both read it
     val buckets = pre.groupBy("term")
       .agg(sort_array(collect_list(struct(col("doc_id").as("d"), col("n")))).as("ds"))
       .filter(size(col("ds")) >= 2)
@@ -1792,8 +1790,7 @@ object RelationalQueries {
 
   /** Sessionization via Spark's NATIVE session_window (gap 600 s) —
     * the built-in operator form of q17's hand-rolled lag/flag
-    * sessionizer, and the batch twin of the streaming session
-    * aggregation. Semantics: an event extends its session iff it
+    * sessionizer. Semantics: an event extends its session iff it
     * starts strictly before prev_ts + gap, so a gap of EXACTLY 600 s
     * opens a new session (q17's `> 600` convention differs by that
     * boundary — both are pinned by their oracles); session end =

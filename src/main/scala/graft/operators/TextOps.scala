@@ -58,17 +58,6 @@ object TextOps {
       }
   }
 
-  /** Quality-gated corpus filter (the cleaning pass a training-data
-    * pipeline runs before extraction): keep docs above a quality
-    * score with sane length. */
-  def qualityFilter(docs: DataFrame, idCol: String, textCol: String,
-                    minQuality: Double = 0.3, minWords: Int = 5): DataFrame = {
-    val p = profile(docs, idCol, textCol).toDF()
-    docs.join(p.filter(col("quality") >= minQuality && col("n_words") >= minWords)
-      .select(col("doc_id").as("__keep_id")),
-      docs(idCol).cast("long") === col("__keep_id"), "left_semi")
-  }
-
   /** Document fingerprint postings (winnowing): one row per (doc,
     * fingerprint) — self-join on fingerprint finds copied passages. */
   def fingerprintPostings(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
@@ -126,8 +115,9 @@ object TextOps {
   private def r6(d: Double): Double =
     BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Pure per-text repetition kernel — the single definition both the
-    * batch operator and the streaming clean share. */
+  /** Pure per-text repetition kernel — the single definition both
+    * [[repetitionProfile]] and the fused gates of `CleanCorpus.clean`
+    * share. */
   def repetitionOf(id: Long, text0: String): RepetitionProfile = {
     val ws = TextAnalytics.pipelineWords(if (text0 == null) "" else text0).toArray
     val nw = ws.length

@@ -25,15 +25,14 @@ import graft.kg.Triple
   * (one `count_if(range = r)` per missing range), so no aggregate job
   * runs and nothing is cached; a range whose count was not observed,
   * or an observation not completed within [[ObservedWithin]], fails
-  * the call before the first commit. Then,
-  * range by range, `.staging/range=R` is swapped into `range=R` by
-  * rename ([[swapIn]], the swap [[compactTriples]] also uses) and the
-  * range is recorded in `_manifest.json` via write-temp + atomic
-  * rename. Readers list only manifest-listed ranges, and Spark's file
-  * listing skips dot-prefixed dirs, so a crash anywhere leaves
-  * uncommitted data invisible; resume deletes a stale `.staging` and
-  * rewrites only the missing ranges — per-partition lineage,
-  * exactly-once output.
+  * the call before the first commit. Then, range by range,
+  * `.staging/range=R` is swapped into `range=R` by rename
+  * ([[swapIn]]) and the range is recorded in `_manifest.json` via
+  * write-temp + atomic rename. Readers list only manifest-listed
+  * ranges, and Spark's file listing skips dot-prefixed dirs, so a
+  * crash anywhere leaves uncommitted data invisible; resume deletes a
+  * stale `.staging` and rewrites only the missing ranges —
+  * per-partition lineage, exactly-once output.
   *
   * Every write goes through [[NioLocalFileSystem]] ([[writer]]):
   * without libhadoop, Hadoop's local filesystem forks a `chmod`
@@ -41,12 +40,9 @@ import graft.kg.Triple
   * kg_batch sink pass), and the write tasks spent about two thirds
   * of their time waiting on those forks.
   *
-  * A fresh write is one parquet file per `range=R/pred=P/bucket=B`
-  * leaf. One task writes each leaf ([[byLeaf]]), so a hot (pred,
-  * bucket) leaf is one task's work; [[compactTriples]] already accepts
-  * the same bound, and `graft.Bench` does not drive this sink. Compaction stays the
-  * maintenance op for tables written before the one-file-per-leaf
-  * layout or appended to by other writers.
+  * A write is one parquet file per `range=R/pred=P/bucket=B` leaf.
+  * One task writes each leaf ([[byLeaf]]), so a hot (pred, bucket)
+  * leaf is one task's work; `graft.Bench` does not drive this sink.
   */
 object TableIO {
 
@@ -184,10 +180,9 @@ object TableIO {
     * dir (if any) moves to `.range-<r>-old`, then `staged` moves in.
     * A real Iceberg commit swaps a metadata pointer; the facade makes
     * the single-writer assumption its manifest commits already make.
-    * A crash between the renames leaves the old data in
-    * `.range-<r>-old`, which [[repairRange]] restores for a committed
-    * range; an uncommitted range is rewritten by the next
-    * [[writeTriples]] anyway. */
+    * [[writeTriples]] swaps only ranges the manifest lacks, so a crash
+    * between the renames leaves an uncommitted range, which the next
+    * [[writeTriples]] rewrites. */
   private def swapIn(outDir: String, r: Int, staged: java.nio.file.Path): Unit = {
     val dst = Paths.get(outDir, s"range=$r")
     val old = Paths.get(outDir, s".range-$r-old")
@@ -195,43 +190,6 @@ object TableIO {
     if (Files.exists(dst)) Files.move(dst, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(staged, dst, StandardCopyOption.ATOMIC_MOVE)
     deleteRecursively(old)
-  }
-
-  /** Compact committed ranges: rewrite each manifest-listed range so
-    * every (pred, bucket) partition holds ONE file. [[writeTriples]]
-    * already writes that layout; an appender that writes from many
-    * tasks adds task-count files per partition and readers pay
-    * per-file open cost — compaction is the standing maintenance op
-    * (Iceberg's rewrite_data_files, through this facade). Per range:
-    * rewrite into a temp dir, verify the row count against the
-    * manifest, then [[swapIn]]. A crash before the swap leaves the
-    * old range intact (stale temp dirs are cleaned on the next run); a
-    * crash between the swap's two renames is restored by
-    * [[repairRange]] before the next compaction proceeds, so every
-    * crash point is recoverable. */
-  def compactTriples(spark: SparkSession, outDir: String): Unit = {
-    val manifest = readManifest(outDir)
-    manifest.toSeq.sortBy(_._1).foreach { case (r, entry) =>
-      val tmp = Paths.get(outDir, s".range-$r-compacting")
-      repairRange(outDir, r) // crash between the two swap renames
-      deleteRecursively(tmp) // stale temp from a crashed compaction
-      writer(byLeaf(readRanges(spark, outDir, Seq(r)).drop("range")))
-        .partitionBy("pred", "bucket").parquet(tmp.toString)
-      val rows = spark.read.schema(SinkSchema).parquet(tmp.toString).count()
-      require(rows == entry.rows,
-        s"compaction row drift in range $r: $rows != ${entry.rows}")
-      swapIn(outDir, r, tmp)
-    }
-  }
-
-  /** Restore a range whose swap crashed between the two renames: the
-    * manifest-listed directory is missing but its `.range-<r>-old`
-    * sibling exists. No-op otherwise. */
-  def repairRange(outDir: String, r: Int): Unit = {
-    val src = Paths.get(outDir, s"range=$r")
-    val old = Paths.get(outDir, s".range-$r-old")
-    if (!Files.exists(src) && Files.exists(old))
-      Files.move(old, src, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Metrics-table sink (the north star's "Iceberg metrics table",

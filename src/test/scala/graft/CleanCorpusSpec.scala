@@ -21,8 +21,9 @@ class CleanCorpusSpec extends AnyFunSuite {
       (1L, prose("went home to sleep quietly under warm blankets tonight")),
       // repetition gate: looping bigram
       (2L, "go stop go stop go stop go stop go stop go stop go stop go stop"),
-      // quality gate: too few words
+      // quality gate: too few words, and a digit wall
       (3L, "tiny doc"),
+      (7L, "9934 1123 4455 9982 3141 5926 8979 3238 4626 4338"),
       // PII twins: identical after redaction → dedup keeps min id (4)
       (4L, prose("mailed a@b.co about the plan for tomorrow evening meal")),
       (5L, prose("mailed c@d.io about the plan for tomorrow evening meal")),
@@ -38,6 +39,10 @@ class CleanCorpusSpec extends AnyFunSuite {
     assert(t4.contains("<EMAIL>") && !t4.contains("a@b.co"))
     // non-text columns flow through
     assert(out.columns.contains("lang"))
+    // nothing planted to drop: every stage keeps every document
+    val plain = (1 to 20).map(i => (i.toLong, prose(s"unique tail number $i keeps the document alive")))
+      .toDF("doc_id", "text")
+    assert(CleanCorpus.clean(plain, bench, "doc_id", "text").count() == 20L)
   }
 
   test("clean's plan: decontamination broadcasts the benchmark, no cartesian product") {
@@ -48,36 +53,5 @@ class CleanCorpusSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast decon join in:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"unexpected cartesian in:\n$plan")
-  }
-
-  test("cleanObserved collects metrics during ONE action, matching funnel's final counts") {
-    import spark.implicits._
-    val bench = Seq((100L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"))
-      .toDF("doc_id", "text")
-    val docs = Seq(
-      (1L, prose("went home to sleep quietly under warm blankets tonight")),
-      (2L, "go stop go stop go stop go stop go stop go stop go stop go stop"),
-      (4L, prose("mailed a@b.co about the plan for tomorrow evening meal")),
-      (5L, prose("mailed c@d.io about the plan for tomorrow evening meal"))).toDF("doc_id", "text")
-    val obs = org.apache.spark.sql.Observation("clean_metrics")
-    val out = CleanCorpus.cleanObserved(docs, bench, "doc_id", "text", obs,
-      minQuality = 0.3, minWords = 5, shingleN = 8)
-    val n = out.count() // the single action; metrics ride along
-    assert(n == 2) // doc 1 + one of the PII twins
-    assert(obs.get("n_docs") == 2L)
-    assert(obs.get("n_redacted") == 1L) // the surviving twin's RAW text had PII
-    assert(!out.columns.contains("__had_pii")) // metric column does not leak
-    assert(obs.get("sum_chars").asInstanceOf[Long] > 0L)
-  }
-
-  test("funnel counts shrink monotonically and name every stage") {
-    import spark.implicits._
-    val bench = Seq((9L, "omicron pi rho sigma tau upsilon phi chi psi omega")).toDF("doc_id", "text")
-    val docs = (1 to 20).map(i => (i.toLong, prose(s"unique tail number $i keeps the document alive")))
-      .toDF("doc_id", "text")
-    val f = CleanCorpus.funnel(docs, bench, "doc_id", "text", minQuality = 0.3, minWords = 5)
-    assert(f.map(_._1) == Seq("input", "repetition_gate", "quality_gate", "exact_dedup", "decontaminated"))
-    assert(f.map(_._2).sliding(2).forall { case Seq(a, b) => b <= a })
-    assert(f.head._2 == 20L && f.last._2 == 20L) // nothing planted to drop
   }
 }

@@ -20,8 +20,9 @@ class ConfidenceSpec extends AnyFunSuite {
   test("six confidence functions match the reference's numpy math exactly") {
     // fixture values computed with numpy from the reference's lambdas
     val sm = Array(0.836472704867, 0.025259286991, 0.138268008142)
-    Seq("softmax", "softmax_min", "softmax_max").foreach { k =>
-      val got = Confidence.All(k)(logits)
+    Seq("softmax" -> Confidence.softmax _, "softmax_min" -> Confidence.softmaxMin _,
+        "softmax_max" -> Confidence.softmaxMax _).foreach { case (k, f) =>
+      val got = f(logits)
       sm.indices.foreach(i => assert(approx(got(i), sm(i), 1e-9), s"$k[$i]"))
     }
     val direct = Array(1.136363636364, -0.454545454545, 0.318181818182)

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import graft.operators.Dedup
-import graft.functions.TextAnalytics
 
 class DedupSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -34,132 +33,21 @@ class DedupSpec extends AnyFunSuite {
     corpus.toDF("doc_id", "text")
   }
 
-  private def trueJaccardPairs(threshold: Double): Set[(Long, Long)] =
-    (for {
-      (a, ta) <- corpus
-      (b, tb) <- corpus
-      if a < b
-      sa = TextAnalytics.shingles(ta, Dedup.ShingleK).toSet
-      sb = TextAnalytics.shingles(tb, Dedup.ShingleK).toSet
-      if TextAnalytics.jaccard(sa, sb) >= threshold
-    } yield (a, b)).toSet
-
-  test("minhash near-dups: exact precision, high recall vs brute force") {
-    val found = Dedup.minhashNearDups(docsDF, "doc_id", "text", 0.6)
-      .collect().map(p => (p.a, p.b)).toSet
-    val truth = trueJaccardPairs(0.6)
-    assert(truth.nonEmpty)
-    // precision exact by construction (verified scores)
-    assert(found.subsetOf(truth))
-    // banding recall on ≥0.6 pairs
-    val recall = found.intersect(truth).size.toDouble / truth.size
-    info(s"minhash recall=$recall over ${truth.size} true pairs")
-    assert(recall >= 0.9, s"recall $recall")
-    // exact copies must always be found (identical signatures)
-    assert(corpus.collect { case (id, _) if id >= 1000L && id < 2000L => (id - 1000L, id) }
-      .forall(found.contains))
-  }
-
-  test("simhash near-dups: pigeonhole banding is exact for hamming ≤ 3") {
+  test("null-text documents sketch to the empty shingle set and cluster together") {
     import spark.implicits._
-    val sketches = Dedup.sketch(docsDF, "doc_id", "text").cache()
-    val found = Dedup.simhashNearDups(sketches, 3)
-      .collect().map(p => (p.a, p.b)).toSet
-    val sigs = sketches.collect().map(s => s.doc_id -> s.simhash).toMap
-    val truth = (for {
-      (a, sa) <- sigs; (b, sb) <- sigs
-      if a < b && TextAnalytics.hamming64(sa, sb) <= 3
-    } yield (a, b)).toSet
-    assert(truth.nonEmpty) // exact copies have hamming 0
-    assert(found == truth) // banding is EXACT for hamming ≤ 3
-  }
-
-  test("ngram jaccard near-dups catch entity-name typos") {
-    import spark.implicits._
-    val names = Seq(
-      (1L, "Alice Johnson"), (2L, "Alice Jonson"), (3L, "Alice J. Johnson"),
-      (4L, "Meridian Bank"), (5L, "Meridian Bankk"), (6L, "Zephyr Airlines"))
-      .toDF("doc_id", "text")
-    val found = Dedup.ngramJaccardNearDups(names, "doc_id", "text", n = 2, threshold = 0.5)
-      .collect().map(p => (p.a, p.b)).toSet
-    assert(found.contains((1L, 2L)))
-    assert(found.contains((4L, 5L)))
-    assert(!found.exists { case (a, b) => b == 6L || a == 6L })
-  }
-
-  test("embedding near-dups: noisy copies found, scores are exact cosine") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    def randVec() = Array.fill(32)(rnd.nextGaussian().toFloat)
-    val base = (0 until 40).map(i => (i.toLong, randVec()))
-    val copies = base.take(15).map { case (id, v) =>
-      (100L + id, v.map(x => x + 0.02f * rnd.nextGaussian().toFloat))
-    }
-    val df = (base ++ copies).map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
-    val found = Dedup.embeddingNearDups(df, "vec_id", "embedding", threshold = 0.95)
-      .collect()
-    val foundPairs = found.map(p => (p.a, p.b)).toSet
-    val expected = (0 until 15).map(i => (i.toLong, 100L + i)).toSet
-    val recall = foundPairs.intersect(expected).size.toDouble / expected.size
-    info(s"embedding near-dup recall=$recall")
-    assert(recall >= 0.8, s"recall $recall; found=$foundPairs")
-    assert(found.forall(_.score >= 0.95)) // exact verification
-  }
-
-  test("duplicate-heavy corpus: exact pre-collapse + capped buckets bound the pairs") {
-    import spark.implicits._
-    // a 3000-copy exact-dup cluster — the web-corpus case where naive
-    // banding would enqueue ~4.5M candidate pairs from ONE bucket
-    val clusterDoc = "massive duplicated boilerplate page about spark joins tables and queries"
-    val heavy = corpus ++ (0 until 3000).map(i => (10000L + i, clusterDoc))
-    val df = heavy.toDF("doc_id", "text")
-
-    val (pairs, groups) = Dedup.minhashNearDupsScaled(df, "doc_id", "text", 0.6)
-    val found = pairs.collect().map(p => (p.a, p.b)).toSet
-    assert(found.size < 1000, s"rep-level pairs must stay bounded, got ${found.size}")
-
-    // the exact-group map covers the whole cluster under one representative
-    val g = groups.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val cluster = g.filter(_._1 >= 10000L)
-    assert(cluster.length == 3000)
-    assert(cluster.forall(c => c._2 == 10000L && c._3 == 3000L))
-    // regular exact copies collapse onto their originals too
-    assert(g.filter(x => x._1 >= 1000L && x._1 < 2000L).forall(x => x._2 == x._1 - 1000L))
-
-    // recall on non-degenerate pairs UNCHANGED: the uncapped operator's
-    // pairs on the plain corpus, mapped through representatives, equal
-    // the scaled operator's rep-level pairs (identical texts share
-    // identical signatures → identical banding)
-    val repOf = g.map(x => x._1 -> x._2).toMap
-    val uncapped = Dedup.minhashNearDups(docsDF, "doc_id", "text", 0.6)
-      .collect().map(p => (p.a, p.b)).toSet
-    val mapped = uncapped.map { case (a, b) =>
-      val (ra, rb) = (repOf(a), repOf(b)); (math.min(ra, rb), math.max(ra, rb))
-    }.filter { case (a, b) => a != b }
-    assert(found == mapped,
-      s"extra=${(found -- mapped).take(3)} missing=${(mapped -- found).take(3)}")
-
-    // and the WHY: capping WITHOUT pre-collapse silently loses the
-    // cluster's exact-dup pairs (the hot bucket is dropped) — which is
-    // exactly what minhashNearDupsScaled prevents
-    val cappedRaw = Dedup.minhashCandidates(Dedup.sketch(df, "doc_id", "text"))
-      .collect().map(p => (p.a, p.b)).toSet
-    assert(!cappedRaw.contains((10000L, 10001L)))
-    assert(cappedRaw.size < 5000)
-  }
-
-  test("null-text documents degrade to empty-shingle docs, never NPE the verify stage") {
-    import spark.implicits._
-    // nulls sketch to the empty set, share every band key and DO reach
-    // the verify join — it must score them, not crash
+    // nulls sketch to the empty set: same signature, every band key
+    // shared, so both land in one cluster and never NPE the sketch
     val docs = Seq((1L, null: String), (2L, null: String), (3L, "the quick brown fox jumps"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.minhashNearDups(docs, "doc_id", "text", 0.0)
-      .collect().map(p => (p.a, p.b)).toSet
-    assert(pairs.contains((1L, 2L)), s"null-text pair must surface: $pairs")
-    val ngram = Dedup.ngramJaccardNearDups(docs, "doc_id", "text", 3, 0.0)
-      .collect().map(p => (p.a, p.b)).toSet
-    assert(ngram.contains((1L, 2L)))
+    val sk = Dedup.sketch(docs, "doc_id", "text").collect().map(s => s.doc_id -> s).toMap
+    assert(sk(1L).nShingles == 0 && sk(2L).nShingles == 0)
+    assert(sk(1L).minhash.sameElements(sk(2L).minhash))
+    assert(sk(1L).simhash == sk(2L).simhash)
+    val clusters = Dedup.minhashClusters(docs, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(clusters.size == 3)
+    assert(clusters(1L) == 1L && clusters(2L) == 1L, s"null-text docs must share a cluster: $clusters")
+    assert(clusters(3L) == 3L)
   }
 
   test("minhash clusters assign one row per doc, copies share clusters") {

@@ -101,6 +101,11 @@ class KGPipelineSpec extends AnyFunSuite {
     }
     info(s"${jobs.started} jobs: ${jobs.callSites.mkString(", ")}")
     assert(jobs.started <= 6, jobs.callSites)
+    // every job is named by its action, the query-stage jobs AQE runs
+    // included: link's collect and the count, no other
+    assert(jobs.callSites.count(_.startsWith("count at KGPipelineSpec.scala")) >= 2, jobs.callSites)
+    assert(jobs.callSites.forall(s =>
+      s.startsWith("collect at EntityLinking.scala") || s.startsWith("count at KGPipelineSpec.scala")), jobs.callSites)
     assert(r.links.isLocal && r.canonicalMap.isLocal)
     // the sink on the materialized triples: ONE shuffle into the leaf
     // partitioning and one write job (the other job is that shuffle's
@@ -223,44 +228,6 @@ class KGPipelineSpec extends AnyFunSuite {
     val back = TableIO.readTriples(spark, dir).collect().toSet
     assert(back == result.triples.collect().toSet)
     assertManifestMatchesDirs(dir)
-    // compaction of a fresh write is a no-op on rows and on files per dir
-    TableIO.compactTriples(spark, dir)
-    assert(parquetFiles(dir) == files)
-    assert(TableIO.readTriples(spark, dir).collect().toSet == back)
-  }
-
-  test("compaction: one file per partition, identical rows, manifest intact") {
-    val dir = java.nio.file.Files.createTempDirectory("triples_compact").toString
-    TableIO.writeTriples(result.triples, dir)
-    // a fresh write is already one file per leaf, so lay each committed
-    // range out as a 24-task appender would: MANY small files per leaf
-    TableIO.readManifest(dir).keys.foreach { r =>
-      spark.read.parquet(s"$dir/range=$r").repartition(24).localCheckpoint()
-        .write.mode("overwrite").partitionBy("pred", "bucket").parquet(s"$dir/range=$r")
-    }
-    val before = TableIO.readTriples(spark, dir).collect().toSet
-    assert(before == result.triples.collect().toSet)
-    assert(parquetFiles(dir).values.exists(_ > 1), "fixture must start with small files")
-    val manifestBefore = TableIO.readManifest(dir)
-    TableIO.compactTriples(spark, dir)
-    assert(parquetFiles(dir).values.forall(_ == 1), s"files per dir: ${parquetFiles(dir).values.max}")
-    assert(TableIO.readTriples(spark, dir).collect().toSet == before)
-    assert(TableIO.readManifest(dir).view.mapValues(_.rows).toMap ==
-      manifestBefore.view.mapValues(_.rows).toMap)
-    // resume after compaction is a no-op (manifest complete)
-    val again = TableIO.writeTriples(result.triples, dir)
-    assert(again.keySet == manifestBefore.keySet)
-    assert(TableIO.readTriples(spark, dir).collect().toSet == before)
-    // crash WINDOW between the two swap renames: src gone, data parked
-    // in .range-<r>-old — the next compaction must restore and proceed
-    val r0 = manifestBefore.keySet.min
-    val src = java.nio.file.Paths.get(dir, s"range=$r0")
-    val old = java.nio.file.Paths.get(dir, s".range-$r0-old")
-    java.nio.file.Files.move(src, old)
-    assert(!java.nio.file.Files.exists(src))
-    TableIO.compactTriples(spark, dir)
-    assert(java.nio.file.Files.exists(src) && !java.nio.file.Files.exists(old))
-    assert(TableIO.readTriples(spark, dir).collect().toSet == before)
   }
 
   /** POSIX permissions under `d` by kind: dirs by depth, then parquet
@@ -320,8 +287,6 @@ class KGPipelineSpec extends AnyFunSuite {
     assert(manifest.keySet == (0 until TableIO.NRanges).toSet)
     assert(manifest.values.forall(_.rows == 0), manifest)
     assert(TableIO.readTriples(spark, dir).count() == 0)
-    TableIO.compactTriples(spark, dir)
-    assert(TableIO.readTriples(spark, dir).count() == 0)
   }
 
   test("sink: an input whose rows all land in one range commits the others empty") {
@@ -335,8 +300,6 @@ class KGPipelineSpec extends AnyFunSuite {
     val manifest = TableIO.writeTriples(oneRange, dir)
     assert(manifest.view.mapValues(_.rows).toMap ==
       Map(0 -> want.size.toLong) ++ (1 until TableIO.NRanges).map(_ -> 0L))
-    assert(TableIO.readTriples(spark, dir).collect().toSet == want)
-    TableIO.compactTriples(spark, dir)
     assert(TableIO.readTriples(spark, dir).collect().toSet == want)
   }
 

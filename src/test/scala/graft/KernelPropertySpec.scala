@@ -88,7 +88,6 @@ class KernelPropertySpec extends AnyFunSuite {
       // malformed row at 100 TB must not abort the job)
       Parsers.parseTupleList(s)
       Parsers.parseWrapped(s)
-      Parsers.parseStringList(s)
       Parsers.parseTagJson(s)
       Parsers.parseFilingJson(s)
       Parsers.parseAtAt(s, "PER")

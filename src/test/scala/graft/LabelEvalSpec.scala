@@ -66,7 +66,7 @@ class LabelEvalSpec extends AnyFunSuite {
       "d5" -> 1, "d6" -> 0, "d7" -> 0))
   }
 
-  test("end-to-end evaluate with gold union and wrong-doc-type exclusion") {
+  test("end-to-end scoreFrame with gold union and meta-label drop") {
     import spark.implicits._
     val lvs = Seq(
       lv("d1", "document type", "invoice", 1.0, "user"),
@@ -77,21 +77,21 @@ class LabelEvalSpec extends AnyFunSuite {
       lv("d2", "document type", "invoice", 1.0, "user"),
       lv("d2", "document type", "receipt", 0.9, "llm - openai azure"), // wrong type
       lv("d2", "amount", "50", 1.0, "user"),
-      lv("d2", "amount", "99", 0.9, "llm - openai azure") // excluded (wrong type)
+      lv("d2", "amount", "99", 0.9, "llm - openai azure"),
+      lv("d3", "amount", "7", 0.9, "llm - openai azure") // no user row
     ).toDS()
-    // gold marks which docs were adjudicated; its rows here use a meta
-    // label (contains '-') so they are dropped before scoring but keep
-    // the docs out of the not-in-both exclusion
+    // gold rows here use a meta label (contains '-'), so they are
+    // dropped before scoring; gold-only label names never score
     val gold = Seq(
       lv("d1", "gold-marker", "x", 1.0, "user"),
-      lv("d2", "gold-marker", "x", 1.0, "user")).toDS().toDF()
-    val (scores, scoreDf) = LabelEval.evaluate(lvs, gold)
-    // kept rows: d1 doctype=1, d1 amount=1, d2 doctype=0 (d2 amount excluded)
-    assert(scores.nFields == 3)
-    assert(math.abs(scores.byFields - 2.0 / 3.0) < 1e-9)
-    // doc means: d1 = 1.0, d2 = 0.0 → mean 0.5
-    assert(math.abs(scores.byDocuments - 0.5) < 1e-9)
-    assert(!scoreDf.collect().exists(_.getString(1).contains("-")))
+      lv("d2", "gold-marker", "x", 1.0, "user"),
+      lv("d4", "client", "acme", 1.0, "user")).toDS().toDF()
+    val rows = LabelEval.scoreFrame(lvs, gold).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getInt(2)).toMap
+    assert(rows == Map(
+      ("d1", "document type") -> 1, ("d1", "amount") -> 1,
+      ("d2", "document type") -> 0, ("d2", "amount") -> 0,
+      ("d3", "amount") -> 0, ("d4", "client") -> 0))
   }
 
   test("date normalization") {
@@ -130,7 +130,6 @@ class LabelEvalSpec extends AnyFunSuite {
       .withColumn("confidence", org.apache.spark.sql.functions.lit(1.0))
       .withColumn("model", org.apache.spark.sql.functions.lit("user"))
       .withColumn("created_on", org.apache.spark.sql.functions.lit(new java.sql.Timestamp(0L)))
-    val (scores, scoreDf) = LabelEval.evaluate(inboxOnly, gold)
-    assert(scoreDf.count() > 0 && scores.nFields > 0)
+    assert(LabelEval.scoreFrame(inboxOnly, gold).count() > 0)
   }
 }

@@ -21,15 +21,4 @@ class MultimodalSpec extends AnyFunSuite {
     assert(feats.map(_.content_sha).toSeq == feats2.map(_.content_sha).toSeq)
     assert(feats.map(_.feature.toSeq).toSeq == feats2.map(_.feature.toSeq).toSeq)
   }
-
-  test("frame sampling: per-video frames with byte ranges") {
-    val media = Multimodal.syntheticMedia(spark, 30)
-    val frames = Multimodal.sampleFrames(media, framesPerVideo = 4).collect()
-    val videos = media.collect().count(_.modality == "video")
-    assert(frames.length == videos * 4)
-    frames.foreach { r =>
-      assert(r.getInt(1) >= 0 && r.getInt(1) < 4)
-      assert(r.getInt(2) >= 0) // byte_offset
-    }
-  }
 }

@@ -55,7 +55,6 @@ class ParsersSpec extends AnyFunSuite {
     // close delimiter BEFORE open delimiter — python's response[start:end+2]
     // yields '' and the eval falls back to []/{}: real LLM output shape
     assert(Parsers.parseTupleList("x)] y [('A','PER')") == Nil)
-    assert(Parsers.parseStringList("x] then ['a', 'b'") == List())
     assert(Parsers.parseTagJson("} then {'Bob': 'P'") == Nil)
     assert(Parsers.parseFilingJson("} oops {'ORG': ['Acme']") == Nil)
     assert(Parsers.parseConfidenceJson("} bad {'Bob': 'high'", List(("Bob", "PER"))) ==
@@ -69,13 +68,6 @@ class ParsersSpec extends AnyFunSuite {
       List(("Alice Johnson", "PER"), ("Paris", "LOC"), ("Acme", "ORG")))
     // backreference must match: mismatched close tag is skipped
     assert(Parsers.parseWrapped("<person>Bob</location>") == Nil)
-  }
-
-  // ---- get-entities parser (pt_get_entities.py:46-61) ----
-  test("parseStringList appends bracket and slices") {
-    assert(Parsers.parseStringList("['Alice', 'Acme'") == List("Alice", "Acme"))
-    assert(Parsers.parseStringList("junk") == Nil)
-    assert(Parsers.parseStringList("['a', 'b'] trailing") == List("a", "b"))
   }
 
   // ---- tagger parser (pt_tagger.py:93-112) ----

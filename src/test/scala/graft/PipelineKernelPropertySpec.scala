@@ -5,7 +5,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.operators.{BpeTrainer, Privacy, TextOps}
 
-/** Property gates for the round-4 pure pipeline kernels: redaction
+/** Property gates for the round-4 pipeline kernels: redaction
   * idempotency and containment, repetition-signal ranges, and BPE
   * encode totality. Fixed-seed ScalaCheck sampling (same convention
   * as KernelPropertySpec — the scalatestplus bridge is not cached).
@@ -28,10 +28,16 @@ class PipelineKernelPropertySpec extends AnyFunSuite {
     Gen.chooseNum(0, 30).flatMap(n =>
       Gen.listOfN(n, Gen.frequency(8 -> wordGen, 2 -> piiGen)).map(_.mkString(" ")))
 
-  test("redactString is idempotent and never reintroduces PII") {
-    samples(textGen, 300).foreach { t =>
-      val once = Privacy.redactString(t)
-      assert(Privacy.redactString(once) == once, s"not idempotent on: $t")
+  test("redacted is idempotent and never reintroduces PII") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val rows = samples(textGen, 300).toDF("t")
+      .select(col("t"), Privacy.redacted(col("t")).as("once"),
+        Privacy.redacted(Privacy.redacted(col("t"))).as("twice"))
+      .as[(String, String, String)].collect()
+    rows.foreach { case (t, once, twice) =>
+      assert(twice == once, s"not idempotent on: $t")
       assert(!once.matches(s".*${Privacy.EmailRe}.*"), s"email survives in: $once")
       assert(!once.matches(s".*${Privacy.PhoneRe}.*"), s"phone survives in: $once")
       assert(!once.matches(s".*${Privacy.Ipv4Re}.*"), s"ip survives in: $once")

@@ -6,11 +6,13 @@ import graft.kg._
 class PromptTechniquesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val cfg = TranscriptGen.Config(nConvs = 40)
+  import PromptTechniques._
+  private val techniques = Seq(Discussion, Wrapper, GetEntitiesTagger, Filing, AtAt)
 
   test("all five techniques extract the identical mention set") {
     import spark.implicits._
     val prompts = Extraction.buildPrompts(TranscriptGen.transcripts(spark, cfg)).cache()
-    val results = PromptTechniques.All.map { tech =>
+    val results = techniques.map { tech =>
       tech.name -> PromptTechniques.detectMentions(prompts, tech, cfg)
         .collect().map(m => (m.conv_id, m.turn_idx, m.mention, m.tag)).toSet
     }.toMap
@@ -59,7 +61,7 @@ class PromptTechniquesSpec extends AnyFunSuite {
   }
 
   test("malformed responses degrade to empty across techniques") {
-    PromptTechniques.All.foreach { tech =>
+    techniques.foreach { tech =>
       val junk = Seq(("None", "{[(<"), ("stage1", "xx"), ("stage2", "yy"),
         ("PERSON", "@@never closed"))
       assert(PromptTechniques.parse(tech, junk).isEmpty, tech.name)

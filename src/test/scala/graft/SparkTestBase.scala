@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Shared local SparkSession for all specs (one JVM, forked by sbt). */
 object SparkTestBase {
@@ -29,7 +31,12 @@ object SparkTestBase {
 
   /** Spark jobs started while a block ran (their call sites), how many
     * of them wrote records to files, how many stages wrote shuffle
-    * records, and how many RDDs stored cached blocks. */
+    * records, and how many RDDs stored cached blocks. A job inside an
+    * SQL execution is named by that execution's description, the
+    * action's call site (`count at KGPipelineSpec.scala:101`) unless a
+    * job description was set: under AQE the result stage of every
+    * query-stage job reads `CompletableFuture.java`. Any other job is
+    * named by its result stage. */
   final case class Jobs(callSites: Seq[String], writing: Int, shuffleStages: Int, cachedRdds: Int) {
     def started: Int = callSites.size
   }
@@ -40,12 +47,19 @@ object SparkTestBase {
     val sc = spark.sparkContext
     val listener = new SparkListener {
       val jobs = scala.collection.mutable.ArrayBuffer.empty[String]
+      val executions = scala.collection.mutable.Map.empty[Long, String]
       val jobOfStage = scala.collection.mutable.Map.empty[Int, Int]
       val writers = scala.collection.mutable.Set.empty[Int]
       val shufflers = scala.collection.mutable.Set.empty[Int]
       val cached = scala.collection.mutable.Set.empty[Int]
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => synchronized(executions(s.executionId) = s.description)
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-        jobs += e.stageInfos.maxBy(_.stageId).name // the result stage: the action's call site
+        val execution = Option(e.properties).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        jobs += execution.flatMap(id => executions.get(id.toLong))
+          .getOrElse(e.stageInfos.maxBy(_.stageId).name)
         e.stageIds.foreach(jobOfStage(_) = e.jobId)
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {

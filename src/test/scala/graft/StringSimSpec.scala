@@ -44,15 +44,6 @@ class StringSimSpec extends AnyFunSuite {
     }
   }
 
-  test("levenshtein and python-Levenshtein ratio") {
-    assert(levenshtein("kitten", "sitting") == 3)
-    assert(levenshtein("", "abc") == 3)
-    // Levenshtein.ratio('kitten','sitting') = (13-5)/13 with sub cost 2
-    assert(approx(levenshteinRatio("kitten", "sitting"), 8.0 / 13.0))
-    assert(levenshteinRatio("abc", "abc") == 1.0)
-    assert(levenshteinRatio("", "") == 1.0)
-  }
-
   test("cosine") {
     assert(approx(cosine(Array(1f, 0f), Array(1f, 0f)), 1.0))
     assert(approx(cosine(Array(1f, 0f), Array(0f, 1f)), 0.0))

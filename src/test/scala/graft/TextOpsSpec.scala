@@ -52,22 +52,11 @@ class TextOpsSpec extends AnyFunSuite {
     assert(row.simhash_hex.length == 16)
   }
 
-  test("qualityFilter keeps good docs, drops digit walls") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "The quarterly report shows the teams have improved their results with better planning and the work was done."),
-      (2L, "9934 1123 4455 9982 3141 5926 8979 3238 4626 4338"),
-      (3L, "ok")).toDF("doc_id", "text")
-    val kept = TextOps.qualityFilter(docs, "doc_id", "text")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept == Set(1L))
-  }
-
   test("token counters: ws vs bpe-ish") {
     assert(TextAnalytics.tokenCountWs("a b  c") == 3)
     assert(TextAnalytics.tokenCountWs("") == 0)
-    assert(TextAnalytics.tokenizeBpeIsh("don't stop123!") ==
-      List("don", "'", "t", "stop", "123", "!"))
+    // don ' t stop 123 !
+    assert(TextAnalytics.tokenCountBpeIsh("don't stop123!") == 6)
   }
 
   test("repetitionProfile: hand-computed fixtures") {
