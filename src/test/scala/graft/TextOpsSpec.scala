@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.TextOps
+import graft.operators.{CleanCorpus, TextOps}
 import graft.functions.TextAnalytics
 
 class TextOpsSpec extends AnyFunSuite {
@@ -50,6 +50,21 @@ class TextOpsSpec extends AnyFunSuite {
     assert(row.n_chars > 0 && row.tok_ws > 0 && row.quality > 0)
     // deterministic simhash formatting
     assert(row.simhash_hex.length == 16)
+  }
+
+  test("qualityFilter keeps good docs, drops digit walls") {
+    import spark.implicits._
+    // the quality gate as CleanCorpus.clean runs it; the benchmark
+    // shares no 8-gram with the docs, so only the gates can drop one
+    val bench = Seq((100L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"))
+      .toDF("doc_id", "text")
+    val docs = Seq(
+      (1L, "The quarterly report shows the teams have improved their results with better planning and the work was done."),
+      (2L, "9934 1123 4455 9982 3141 5926 8979 3238 4626 4338"),
+      (3L, "ok")).toDF("doc_id", "text")
+    val kept = CleanCorpus.clean(docs, bench, "doc_id", "text")
+      .select("doc_id").as[Long].collect().toSet
+    assert(kept == Set(1L))
   }
 
   test("token counters: ws vs bpe-ish") {
