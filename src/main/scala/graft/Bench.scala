@@ -144,7 +144,7 @@ object Bench {
   private def measuredRun(cores: Int, dir: String,
                           maxRuns: Int = 6, tol: Double = 1.2,
                           bigCorpus: Boolean = false,
-                          budgetSec: Double = Double.MaxValue,
+                          budgetSec: Double,
                           minRuns: Int = 2,
                           guaranteeRuns: Int = 1,
                           onRep: (List[Double], Long) => Unit = (_, _) => ()): (List[Double], Long) = {
@@ -441,7 +441,7 @@ object Bench {
     // SPARK_GRAFT_BENCH_FILTER: comma-separated query names run in the
     // GIVEN order (repeats allowed) — for isolating one query's cost
     // from session warm-up.
-    var spark = session(cpus)
+    val spark = session(cpus)
     // untimed warm-up: the session's first action pays ~8-10 s of JIT,
     // codegen-compiler and encoder initialization (measured via an
     // ordered-filter run: the same query costs 10.8 s first, 0.9 s

@@ -49,11 +49,6 @@ object Parsers {
     "person" -> "PER", "organization" -> "ORG", "location" -> "LOC",
     "miscellaneous" -> "MISC")
 
-  /** prompts.py:335 */
-  val MappingTagWords: Map[String, String] = Map(
-    "PER" -> "person", "ORG" -> "organization", "LOC" -> "location",
-    "MISC" -> "miscellaneous")
-
   /** Python-slice semantics: `s[from:until]` never throws — a window
     * whose close delimiter precedes its open delimiter (real LLM
     * output: "x)] then [('A','PER')") yields "" and the caller's

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Experiment bookkeeping: the Spark re-expression of the reference's
@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
 object Experiments {
 
   /** One experiment run's score row (what a ResultInstance pickle
-    * holds after re-scoring, ResultInstance.py:32-61). `fst` is the
-    * few-shot technique arm (sentence / random / no-shots —
+    * holds after re-scoring, ResultInstance.py:32-61): weighted
+    * P/R/F1 of one grid arm on one seeded run. `fst` is the few-shot
+    * technique arm (sentence / entity / random / no-shots —
     * few_shots_techniques.py). */
   final case class RunScore(
       model: String,
@@ -22,11 +23,6 @@ object Experiments {
       f1: Double,
       precision: Double,
       recall: Double,
-      // OVERLAPPED wall time: arms (and, since r6, runs) evaluate
-      // concurrently, so this includes scheduler contention from
-      // co-running arms — comparable within one grid invocation only,
-      // not across protocol changes (ADVICE r5)
-      elapsed_sec: Double,
       fst: String = "sentence")
 
   /** Leaderboard with Student-t 95% CIs per config, sorted by mean F1
@@ -69,70 +65,76 @@ object Experiments {
     * parallelism, and disjointness/coverage are structural. Returns
     * (train, test). */
   def seededSplit[T](ds: Dataset[T], keyCol: String, testPct: Int, seed: Long): (Dataset[T], Dataset[T]) = {
-    val bucket = pmod(xxhash64(col(keyCol), lit(seed)), lit(100))
+    val bucket = splitBucket(col(keyCol), lit(seed))
     (ds.filter(bucket >= testPct), ds.filter(bucket < testPct))
   }
+
+  /** [[seededSplit]] for every seed at once, in one plan: each row once
+    * per run on the side that run's seed puts it, tagged with the run's
+    * index into `seeds` as `run`. */
+  private[kg] def seededSplits(df: DataFrame, keyCol: String, testPct: Int,
+                               seeds: Seq[Long]): (DataFrame, DataFrame) = {
+    val bucket = splitBucket(col(keyCol), col("seed"))
+    val tagged = df.select(col("*"), posexplode(typedLit(seeds)).as(Seq("run", "seed")))
+    (tagged.filter(bucket >= testPct), tagged.filter(bucket < testPct))
+  }
+
+  private def splitBucket(key: Column, seed: Column): Column = pmod(xxhash64(key, seed), lit(100))
 
   /** One arm of the classical_test grid (llm/LLMModel.py:144-203):
     * prompt technique × few-shot technique × shot count. */
   final case class Arm(technique: PromptTechniques.Technique, fst: String, nbFewShots: Int)
 
   /** The classical_test experiment harness (llm/LLMModel.py:144-203):
-    * for each grid arm and each of `nbRuns` seeded runs — split the
+    * for each of `nbRuns` seeded runs and each grid arm — split the
     * corpus into train/test by conversation (seed from RunSeeds),
     * freeze a bounded few-shot pool from the TRAIN gold, build
     * few-shot prompts for the TEST turns, detect mentions under the
     * arm's prompt technique, align against gold and score weighted
-    * P/R/F1 (process_results.py:95-116) → one RunScore per run.
-    * The config grid is a tiny driver-side loop (exactly the
-    * reference's triple-nested loop); every run's heavy work is a
-    * distributed plan. Feed the result to [[leaderboard]]. */
+    * P/R/F1 (process_results.py:95-116) → one RunScore per (run, arm).
+    * The whole grid is one plan: one collect for every run's pool, one
+    * narrow pass over the run-tagged test turns for every arm's
+    * prompts and mentions, one cogroup with the run-tagged test gold,
+    * and one grouped count of (run, arm, y_true, y_pred) scored on the
+    * driver. Feed the result to [[leaderboard]]. */
   def classicalTest(spark: SparkSession, cfg: TranscriptGen.Config,
                     arms: Seq[Arm], nbRuns: Int = 3, testPct: Int = 20,
                     poolSize: Int = 240): Dataset[RunScore] = {
     import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
+    val seeds = (0 until nbRuns).map(run => RunSeeds(run % RunSeeds.length))
     val turns = TranscriptGen.transcripts(spark, cfg).cache()
     val gold = TranscriptGen.goldMentions(spark, cfg).cache()
     try {
-      // materialize the two shared caches up front (concurrently) so
-      // the per-run jobs below never race on filling them
-      Await.result(Future.sequence(Seq(
-        Future(turns.count()), Future(gold.count()))), Duration.Inf)
-      // r6: RUNS evaluate concurrently too, not just the arms within a
-      // run (guide §2.6 "overlap independent jobs"): each run's pool
-      // build + arm evaluations are independent jobs over the shared
-      // caches, so run 1's arms back-fill the executor slots run 0's
-      // stragglers leave idle. Scores don't interact and
-      // Future.sequence preserves (run, arm) order — the produced
-      // Dataset is row-identical to the sequential loop's.
-      val scores = Await.result(Future.sequence((0 until nbRuns).map { run => Future {
-        val seed = RunSeeds(run % RunSeeds.length)
-        val (trainT, testT) = seededSplit(turns, "conv_id", testPct, seed)
-        val (trainG, testG) = seededSplit(gold, "conv_id", testPct, seed)
-        val pool = FewShots.buildPool(trainT, trainG, poolSize)
-        val testGoldCached = testG.cache()
-        // arms evaluate CONCURRENTLY (Spark job submission is
-        // thread-safe; each arm's action is an independent job over
-        // the shared cached test split, so their stages interleave
-        // and fill the 32 local slots a single small job leaves idle
-        // — measured 7.9 s → 4.2 s on the 2-run × 3-arm grid).
-        val armScores = Await.result(Future.sequence(arms.map { arm => Future {
-          val t0 = System.nanoTime()
-          val prompts = Extraction.buildPromptsWithShots(
-            testT, if (arm.nbFewShots > 0) pool else Array.empty, arm.nbFewShots, arm.fst)
-          val mentions = PromptTechniques.detectMentions(prompts, arm.technique, cfg)
-          val prf = Metrics.weightedPRF(Metrics.align(mentions, testGoldCached))
-          RunScore("deterministic-scorer", arm.technique.name, arm.nbFewShots, run,
-            prf.f1, prf.precision, prf.recall, (System.nanoTime() - t0) / 1e9,
-            if (arm.nbFewShots > 0) arm.fst else Extraction.FstNone)
-        } }), Duration.Inf)
-        testGoldCached.unpersist()
-        armScores
-      } }), Duration.Inf).flatten
-      spark.createDataset(scores)
+      val pools = spark.sparkContext.broadcast(
+        FewShots.buildPools(turns, gold, seeds, testPct, poolSize).toArray)
+      def testSide(ds: Dataset[_]): DataFrame = seededSplits(ds.toDF(), "conv_id", testPct, seeds)._2
+        .select(col("run").as("_1"), struct(ds.columns.map(col).toIndexedSeq: _*).as("_2"))
+      val detected = testSide(turns).as[(Int, Turn)].mapPartitions { it =>
+        val m = Scorer.newMatcher()
+        val blocks = pools.value.map(pool => arms.map(a => Extraction.shotBlock(pool, a.nbFewShots, a.fst)))
+        it.flatMap { case (run, t) =>
+          arms.indices.flatMap { a =>
+            Extraction.promptOf(t, blocks(run)(a)(t))
+              .map(p => (run, t.conv_id, t.turn_idx, a, PromptTechniques.detect(arms(a).technique, m, p, cfg)))
+          }
+        }
+      }
+      val aligned = detected.groupByKey(d => (d._1, d._2, d._3))
+        .cogroup(testSide(gold).as[(Int, Mention)].groupByKey { case (run, g) => (run, g.conv_id, g.turn_idx) }) {
+          case ((run, _, _), ps, gs) =>
+            val pred = ps.map(d => d._4 -> d._5).toMap
+            val goldL = gs.map { case (_, g) => (g.mention, g.tag) }.toSeq
+            arms.indices.iterator.flatMap { a =>
+              Metrics.alignTurn(pred.getOrElse(a, Nil), goldL).map { case (t, p) => (run, a, t, p) }
+            }
+        }
+      val counts = aligned.groupByKey(identity).count().collect()
+        .groupMap { case ((run, a, _, _), _) => (run, a) } { case ((_, _, t, p), c) => (t, p, c) }
+      spark.createDataset(for (run <- seeds.indices; (arm, a) <- arms.zipWithIndex) yield {
+        val prf = Metrics.prfFromCounts(counts.get((run, a)).toSeq.flatten)
+        RunScore("deterministic-scorer", arm.technique.name, arm.nbFewShots, run,
+          prf.f1, prf.precision, prf.recall, if (arm.nbFewShots > 0) arm.fst else Extraction.FstNone)
+      })
     } finally { turns.unpersist(); gold.unpersist() }
   }
 

@@ -43,56 +43,60 @@ object Extraction {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(pool)
     turns.mapPartitions { it =>
-      val shots = bc.value
-      // partition-constant index for the FstEntity arm — built once
-      // per partition, not per row (same hoist as Ann.planeMatrix)
-      lazy val entityIndex: Array[(Int, Array[Float])] =
-        shots.iterator.zipWithIndex.flatMap { case (ex, i) =>
-          ex.entityVecs.iterator.map(ev => (i, ev))
-        }.toArray
-      def block(t: Turn): String =
-        if (k <= 0 || shots.isEmpty) ""
-        else {
-          val chosen: Seq[FewShots.ShotExample] = fst match {
-            case FstRandom =>
-              // seeded draws, deduped by index, first k
-              val idxs = Iterator.from(0)
-                .map(i => graft.functions.Hashing.bucket(
-                  graft.functions.Hashing.hash64(s"${t.conv_id}#${t.turn_idx}#rnd$i"), shots.length))
-                .take(4 * k + 8).toSeq.distinct.take(k)
-              idxs.map(shots(_))
-            case FstEntity =>
-              // per query token: top-k vs ALL pool entity embeddings;
-              // merge by score desc, dedup pool row keeping best,
-              // truncate to k (FST_Entity, few_shots_techniques
-              // .py:110-124 — the idx-dedup-after-sort semantics).
-              // Bounded heaps throughout: O(k) space per token.
-              val ord: Ordering[(Double, Int)] = Ordering.by { case (s, i) => (-s, i) }
-              val qTokens = t.text.split("\\s+").filter(_.nonEmpty)
-                .map(w => TextAnalytics.embedText(w))
-              val merged = qTokens.iterator.flatMap { qv =>
-                graft.functions.TopK.smallest(
-                  entityIndex.iterator.map { case (i, ev) =>
-                    (graft.functions.StringSim.cosine(qv, ev), i)
-                  }, k)(ord)
-              }.toArray.sorted(ord)
-              val seen = scala.collection.mutable.LinkedHashSet.empty[Int]
-              merged.foreach { case (_, i) => seen += i }
-              seen.take(k).toSeq.map(shots(_))
-            case _ => // sentence-kNN, ties by pool index (stable argsort)
-              val qv = TextAnalytics.embedText(t.text)
-              graft.functions.TopK.smallest(
-                shots.iterator.zipWithIndex.map { case (ex, i) =>
-                  (graft.functions.StringSim.cosine(qv, ex.vec), i)
-                }, k)(Ordering.by { case (s, i) => (-s, i) })
-                .map { case (_, i) => shots(i) }.toSeq
-          }
-          "### ASSISTANT : Can you provide me examples ?\n" +
-            "### USER : There are examples :\n" +
-            chosen.map(ex => s"${Scorer.ExampleMarker}${ex.text} -> ${ex.output}").mkString("\n") + "\n"
-        }
+      val block = shotBlock(bc.value, k, fst)
       it.flatMap(t => promptOf(t, block(t)))
     }
+  }
+
+  /** A turn's few-shot block of `k` examples under the `fst` arm ("" for
+    * k = 0 or an empty pool). Build it once per partition: the FstEntity
+    * index is partition-constant (same hoist as Ann.planeMatrix). */
+  private[kg] def shotBlock(shots: Array[FewShots.ShotExample], k: Int, fst: String): Turn => String = {
+    lazy val entityIndex: Array[(Int, Array[Float])] =
+      shots.iterator.zipWithIndex.flatMap { case (ex, i) =>
+        ex.entityVecs.iterator.map(ev => (i, ev))
+      }.toArray
+    t =>
+      if (k <= 0 || shots.isEmpty) ""
+      else {
+        val chosen: Seq[FewShots.ShotExample] = fst match {
+          case FstRandom =>
+            // seeded draws, deduped by index, first k
+            val idxs = Iterator.from(0)
+              .map(i => graft.functions.Hashing.bucket(
+                graft.functions.Hashing.hash64(s"${t.conv_id}#${t.turn_idx}#rnd$i"), shots.length))
+              .take(4 * k + 8).toSeq.distinct.take(k)
+            idxs.map(shots(_))
+          case FstEntity =>
+            // per query token: top-k vs ALL pool entity embeddings;
+            // merge by score desc, dedup pool row keeping best,
+            // truncate to k (FST_Entity, few_shots_techniques
+            // .py:110-124 — the idx-dedup-after-sort semantics).
+            // Bounded heaps throughout: O(k) space per token.
+            val ord: Ordering[(Double, Int)] = Ordering.by { case (s, i) => (-s, i) }
+            val qTokens = t.text.split("\\s+").filter(_.nonEmpty)
+              .map(w => TextAnalytics.embedText(w))
+            val merged = qTokens.iterator.flatMap { qv =>
+              graft.functions.TopK.smallest(
+                entityIndex.iterator.map { case (i, ev) =>
+                  (graft.functions.StringSim.cosine(qv, ev), i)
+                }, k)(ord)
+            }.toArray.sorted(ord)
+            val seen = scala.collection.mutable.LinkedHashSet.empty[Int]
+            merged.foreach { case (_, i) => seen += i }
+            seen.take(k).toSeq.map(shots(_))
+          case _ => // sentence-kNN, ties by pool index (stable argsort)
+            val qv = TextAnalytics.embedText(t.text)
+            graft.functions.TopK.smallest(
+              shots.iterator.zipWithIndex.map { case (ex, i) =>
+                (graft.functions.StringSim.cosine(qv, ex.vec), i)
+              }, k)(Ordering.by { case (s, i) => (-s, i) })
+              .map { case (_, i) => shots(i) }.toSeq
+        }
+        "### ASSISTANT : Can you provide me examples ?\n" +
+          "### USER : There are examples :\n" +
+          chosen.map(ex => s"${Scorer.ExampleMarker}${ex.text} -> ${ex.output}").mkString("\n") + "\n"
+      }
   }
 
   /** The reference's input cleaning (Conll2003Dataset.py:62-63): a

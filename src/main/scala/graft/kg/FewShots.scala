@@ -36,16 +36,19 @@ object FewShots {
   final case class ShotExample(text: String, output: String, vec: Array[Float],
                                entityVecs: Array[Array[Float]])
 
-  /** Bounded few-shot pool from the train split: turns with ≥1 gold
-    * mention, brace-filtered exactly like the reference's few-shot
-    * block (pt_abstract.py:84), deterministically sampled by content
-    * hash (never rand()) down to `poolSize`, collected + broadcast by
-    * the caller. The bound is the design, not a shortcut: the
-    * reference's few-shot index is likewise a frozen, small artifact
-    * relative to the corpus being tagged — at 100 TB the pool stays
-    * `poolSize` rows while the scan side grows. */
-  def buildPool(train: Dataset[Turn], gold: Dataset[Mention], poolSize: Int = 240): Array[ShotExample] = {
-    val spark = train.sparkSession
+  /** Bounded few-shot pools, one per run seed, from ONE collect: turns
+    * with ≥1 gold mention, brace-filtered exactly like the reference's
+    * few-shot block (pt_abstract.py:84), on the run's TRAIN side of
+    * [[Experiments.seededSplit]] (`testPct` 0 keeps every turn),
+    * deterministically sampled by content hash (never rand()) down to
+    * `poolSize` per run, collected + broadcast by the caller. The
+    * bound is the design, not a shortcut: the reference's few-shot
+    * index is likewise a frozen, small artifact relative to the corpus
+    * being tagged — at 100 TB each pool stays `poolSize` rows while the
+    * scan side grows. */
+  def buildPools(turns: Dataset[Turn], gold: Dataset[Mention], seeds: Seq[Long],
+                 testPct: Int, poolSize: Int): Seq[Array[ShotExample]] = {
+    val spark = turns.sparkSession
     import spark.implicits._
     val outputs = gold.groupByKey(m => (m.conv_id, m.turn_idx))
       .mapGroups { (key: (String, Int), it: Iterator[Mention]) =>
@@ -58,16 +61,23 @@ object FewShots {
         (key._1, key._2, body, spans.map(_._1))
       }
       .toDF("conv_id", "turn_idx", "output", "mentions")
-    train.filter(t => Extraction.cleanText(t.text))
+    val byHash = Window.partitionBy("run")
+      .orderBy(xxhash64(col("conv_id"), col("turn_idx")), col("conv_id"), col("turn_idx"))
+    val withOutputs = turns.filter(t => Extraction.cleanText(t.text))
       .select(col("conv_id"), col("turn_idx"), col("text"))
       .join(outputs, Seq("conv_id", "turn_idx"))
-      .orderBy(xxhash64(col("conv_id"), col("turn_idx")), col("conv_id"), col("turn_idx"))
-      .limit(poolSize)
-      .select("text", "output", "mentions")
+    val rows = Experiments.seededSplits(withOutputs, "conv_id", testPct, seeds)._1
+      .withColumn("rank", row_number().over(byHash))
+      .filter(col("rank") <= poolSize)
+      .select("run", "rank", "text", "output", "mentions")
       .collect()
-      .map(r => ShotExample(r.getString(0), r.getString(1),
-        graft.functions.TextAnalytics.embedText(r.getString(0)),
-        r.getSeq[String](2).toArray.map(m => graft.functions.TextAnalytics.embedText(m))))
+      .groupBy(_.getInt(0))
+    seeds.indices.map { run =>
+      rows.getOrElse(run, Array.empty).sortBy(_.getInt(1))
+        .map(r => ShotExample(r.getString(2), r.getString(3),
+          graft.functions.TextAnalytics.embedText(r.getString(2)),
+          r.getSeq[String](4).toArray.map(m => graft.functions.TextAnalytics.embedText(m))))
+    }
   }
 
   /** Sentence-kNN: exact top-k cosine against the broadcast training

@@ -18,26 +18,33 @@ object Metrics {
     *   rows        = res_san ++ gold rows whose mention ∉ results_nes
     *   y_true(n)   = gold_nes.get(mention, 'None')
     *   y_pred(n)   = results_nes.get(mention, 'None')
-    * Implemented as a cogroup per (conv_id, turn_idx); inside a group
-    * the rows are sorted by (mention, tag) for determinism (the
-    * reference relies on Python list order; only duplicate-mention
-    * multi-tag rows could differ, and scoring is dict-keyed anyway).
+    * Implemented as a cogroup per (conv_id, turn_idx) that applies
+    * [[alignTurn]] to each group.
     */
   def align(pred: Dataset[Mention], gold: Dataset[Mention]): Dataset[(String, String)] = {
     val spark = pred.sparkSession
     import spark.implicits._
     pred.groupByKey(m => (m.conv_id, m.turn_idx))
       .cogroup(gold.groupByKey(m => (m.conv_id, m.turn_idx))) { case (_, ps, gs) =>
-        val results = ps.map(m => (m.mention, m.tag)).toList.sortBy(identity)
-        val goldL = gs.map(m => (m.mention, m.tag)).toList.sortBy(identity)
-        val goldNes = goldL.toMap
-        val resSan = results.filter(_._2 != "None")
-        val resultsNes = resSan.toMap
-        val rows = resSan ++ goldL.filter { case (m, _) => !resultsNes.contains(m) }
-        rows.map { case (mention, _) =>
-          (goldNes.getOrElse(mention, "None"), resultsNes.getOrElse(mention, "None"))
-        }
+        alignTurn(ps.map(m => (m.mention, m.tag)).toSeq, gs.map(m => (m.mention, m.tag)).toSeq)
       }
+  }
+
+  /** [[align]]'s rule for one turn's (mention, tag) predictions and
+    * gold: (y_true, y_pred) per aligned mention. Both sides are sorted
+    * by (mention, tag) for determinism (the reference relies on Python
+    * list order; only duplicate-mention multi-tag rows could differ,
+    * and scoring is dict-keyed anyway). */
+  private[kg] def alignTurn(pred: Seq[(String, String)], gold: Seq[(String, String)]): List[(String, String)] = {
+    val results = pred.toList.sortBy(identity)
+    val goldL = gold.toList.sortBy(identity)
+    val goldNes = goldL.toMap
+    val resSan = results.filter(_._2 != "None")
+    val resultsNes = resSan.toMap
+    val rows = resSan ++ goldL.filter { case (m, _) => !resultsNes.contains(m) }
+    rows.map { case (mention, _) =>
+      (goldNes.getOrElse(mention, "None"), resultsNes.getOrElse(mention, "None"))
+    }
   }
 
   final case class PRF(precision: Double, recall: Double, f1: Double, support: Long)
@@ -64,8 +71,6 @@ object Metrics {
     * distributed groupBy as a queryable Dataset (pivot to the square
     * matrix via q33's explicit-values pattern when needed). */
   def confusionFrame(pairs: Dataset[(String, String)]): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
     pairs.toDF("y_true", "y_pred")
       .groupBy("y_true", "y_pred")
       .agg(org.apache.spark.sql.functions.count(
@@ -111,8 +116,6 @@ object Metrics {
   /** Set-based triple precision/recall (the north rule's P/R≥0.95
     * gate): exact set intersection via joins. */
   def triplePR(pred: Dataset[Triple], gold: Dataset[Triple]): PRF = {
-    val spark = pred.sparkSession
-    import spark.implicits._
     val p = pred.distinct().cache()
     val g = gold.distinct().cache()
     val nP = p.count()

@@ -119,10 +119,14 @@ object PromptTechniques {
     prompts.mapPartitions { it =>
       val m = Scorer.newMatcher()
       it.flatMap { p =>
-        val rs = respond(tech, m, p.conv_id, p.turn_idx, p.text, cfg,
-          Scorer.exampleBlockOf(p.prompt))
-        parse(tech, rs).map { case (ne, tag) => Mention(p.conv_id, p.turn_idx, ne, tag) }
+        detect(tech, m, p, cfg).map { case (ne, tag) => Mention(p.conv_id, p.turn_idx, ne, tag) }
       }
     }
   }
+
+  /** One prompt's parsed (mention, tag) pairs under `tech`, with the
+    * caller's per-partition matcher. */
+  private[kg] def detect(tech: Technique, m: Scorer.Matcher, p: Prompt,
+                         cfg: TranscriptGen.Config): List[(String, String)] =
+    parse(tech, respond(tech, m, p.conv_id, p.turn_idx, p.text, cfg, Scorer.exampleBlockOf(p.prompt)))
 }

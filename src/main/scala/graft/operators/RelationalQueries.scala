@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.StringSim
 
 /** Relational operators from SURVEY.md §2 expressed over the driver's
   * parquet tables, each with a DuckDB-oracle SQL twin in

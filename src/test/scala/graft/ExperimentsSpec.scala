@@ -9,11 +9,11 @@ class ExperimentsSpec extends AnyFunSuite {
   test("leaderboard: mean + t-CI per config, sorted desc") {
     import spark.implicits._
     val runs = Seq(
-      Experiments.RunScore("m1", "discussion", 3, 0, 0.6, 0.7, 0.5, 10),
-      Experiments.RunScore("m1", "discussion", 3, 1, 0.5, 0.6, 0.4, 11),
-      Experiments.RunScore("m1", "discussion", 3, 2, 0.7, 0.8, 0.6, 12),
-      Experiments.RunScore("m1", "wrapper", 3, 0, 0.9, 0.9, 0.9, 9),
-      Experiments.RunScore("m1", "wrapper", 3, 1, 0.8, 0.8, 0.8, 9)).toDS()
+      Experiments.RunScore("m1", "discussion", 3, 0, 0.6, 0.7, 0.5),
+      Experiments.RunScore("m1", "discussion", 3, 1, 0.5, 0.6, 0.4),
+      Experiments.RunScore("m1", "discussion", 3, 2, 0.7, 0.8, 0.6),
+      Experiments.RunScore("m1", "wrapper", 3, 0, 0.9, 0.9, 0.9),
+      Experiments.RunScore("m1", "wrapper", 3, 1, 0.8, 0.8, 0.8)).toDS()
     val lb = Experiments.leaderboard(runs).collect()
     assert(lb.head.getString(1) == "wrapper")
     val disc = lb.find(_.getString(1) == "discussion").get
@@ -26,10 +26,10 @@ class ExperimentsSpec extends AnyFunSuite {
   test("leaderboardPivot: technique × nb_few_shots grid of mean F1 (plot_results pivot)") {
     import spark.implicits._
     val runs = Seq(
-      Experiments.RunScore("m1", "discussion", 0, 0, 0.4, 0, 0, 1),
-      Experiments.RunScore("m1", "discussion", 0, 1, 0.6, 0, 0, 1),
-      Experiments.RunScore("m1", "discussion", 3, 0, 0.8, 0, 0, 1),
-      Experiments.RunScore("m1", "wrapper", 3, 0, 0.7, 0, 0, 1)).toDS()
+      Experiments.RunScore("m1", "discussion", 0, 0, 0.4, 0, 0),
+      Experiments.RunScore("m1", "discussion", 0, 1, 0.6, 0, 0),
+      Experiments.RunScore("m1", "discussion", 3, 0, 0.8, 0, 0),
+      Experiments.RunScore("m1", "wrapper", 3, 0, 0.7, 0, 0)).toDS()
     val p = Experiments.leaderboardPivot(runs, Seq(0, 3)).collect()
     assert(p.map(_.getString(0)).toSeq == Seq("discussion", "wrapper"))
     val disc = p(0); val wrap = p(1)

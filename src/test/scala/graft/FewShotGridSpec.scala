@@ -44,9 +44,8 @@ class FewShotGridSpec extends AnyFunSuite {
     val cfg = TranscriptGen.Config(nConvs = 80)
     val turns = TranscriptGen.transcripts(spark, cfg)
     val gold = TranscriptGen.goldMentions(spark, cfg)
-    val (trainT, testT) = Experiments.seededSplit(turns, "conv_id", 25, 42L)
-    val (trainG, _) = Experiments.seededSplit(gold, "conv_id", 25, 42L)
-    val pool = FewShots.buildPool(trainT, trainG, poolSize = 64)
+    val (_, testT) = Experiments.seededSplit(turns, "conv_id", 25, 42L)
+    val pool = FewShots.buildPools(turns, gold, Seq(42L), testPct = 25, poolSize = 64).head
     assert(pool.length > 10 && pool.length <= 64)
     assert(pool.forall(ex => ex.output.startsWith("[") && !ex.text.contains("{")))
 
@@ -99,6 +98,61 @@ class FewShotGridSpec extends AnyFunSuite {
     assert(Set(Extraction.FstSentence, Extraction.FstEntity).contains(lb.head.getString(2)))
     assert(lb.last.getString(2) != Extraction.FstSentence, "zero/random arm must rank below kNN")
     assert(lb.map(_.getInt(4)).forall(_ == 3)) // 3 runs per arm
+  }
+
+  // experiment_grid's arms (SparkEntry) plus the random and entity-kNN
+  // controls of the grid test above
+  private val gridArms = Seq(
+    Experiments.Arm(PromptTechniques.Discussion, Extraction.FstNone, 0),
+    Experiments.Arm(PromptTechniques.Discussion, Extraction.FstSentence, 3),
+    Experiments.Arm(PromptTechniques.Filing, Extraction.FstSentence, 3))
+
+  test("classical_test scores equal the per-arm reference path; each run's pool is its one-run pool") {
+    val cfg = TranscriptGen.Config(nConvs = 60, scorerNoisePerMille = 150)
+    val arms = gridArms ++ Seq(
+      Experiments.Arm(PromptTechniques.Discussion, Extraction.FstRandom, 3),
+      Experiments.Arm(PromptTechniques.Discussion, Extraction.FstEntity, 3))
+    val (testPct, poolSize) = (30, 48)
+    val seeds = Experiments.RunSeeds.take(2)
+    val got = Experiments.classicalTest(spark, cfg, arms, nbRuns = 2, testPct = testPct,
+      poolSize = poolSize).collect()
+    val turns = TranscriptGen.transcripts(spark, cfg)
+    val gold = TranscriptGen.goldMentions(spark, cfg)
+    def rows(pool: Array[FewShots.ShotExample]) =
+      pool.toSeq.map(ex => (ex.text, ex.output, ex.vec.toSeq, ex.entityVecs.toSeq.map(_.toSeq)))
+    val pools = FewShots.buildPools(turns, gold, seeds, testPct, poolSize)
+    assert(pools.forall(_.length == poolSize))
+    assert(rows(pools(0)) != rows(pools(1)))
+    val expected = seeds.zipWithIndex.flatMap { case (seed, run) =>
+      val pool = FewShots.buildPools(turns, gold, Seq(seed), testPct, poolSize).head
+      assert(rows(pools(run)) == rows(pool), s"run $run")
+      val (trainT, testT) = Experiments.seededSplit(turns, "conv_id", testPct, seed)
+      val (trainG, testG) = Experiments.seededSplit(gold, "conv_id", testPct, seed)
+      // the pool of the train split itself, every turn kept, is the same
+      assert(rows(FewShots.buildPools(trainT, trainG, Seq(seed), 0, poolSize).head) == rows(pool))
+      arms.map { arm =>
+        val prompts = Extraction.buildPromptsWithShots(
+          testT, if (arm.nbFewShots > 0) pool else Array.empty, arm.nbFewShots, arm.fst)
+        val prf = Metrics.weightedPRF(Metrics.align(
+          PromptTechniques.detectMentions(prompts, arm.technique, cfg), testG))
+        (run, arm.technique.name, if (arm.nbFewShots > 0) arm.fst else Extraction.FstNone,
+          arm.nbFewShots, prf.f1, prf.precision, prf.recall)
+      }
+    }
+    assert(got.toSeq.map(r => (r.run_idx, r.technique, r.fst, r.nb_few_shots, r.f1, r.precision, r.recall))
+      == expected)
+    assert(expected.map(_._5).distinct.size > 1)
+  }
+
+  test("classical_test in the experiment_grid shape runs as one plan: at most 10 jobs") {
+    val cfg = TranscriptGen.Config(nConvs = 100)
+    var runs: Array[Experiments.RunScore] = null
+    val jobs = SparkTestBase.countJobs {
+      runs = Experiments.classicalTest(spark, cfg, gridArms, nbRuns = 2).collect()
+    }
+    info(s"${jobs.started} jobs: ${jobs.callSites.mkString(", ")}")
+    assert(runs.length == 6)
+    assert(jobs.started <= 10, jobs.callSites)
   }
 
   test("classical_test runs are deterministic (same seed → same scores)") {

@@ -71,7 +71,8 @@ class KGPipelineSpec extends AnyFunSuite {
     val noisy = TranscriptGen.Config(nConvs = 120, scorerNoisePerMille = 250)
     val turns = TranscriptGen.transcripts(spark, noisy)
     val gold = TranscriptGen.goldTriples(spark, noisy)
-    val pool = FewShots.buildPool(turns, TranscriptGen.goldMentions(spark, noisy), 160)
+    val pool = FewShots.buildPools(turns, TranscriptGen.goldMentions(spark, noisy), Seq(42L),
+      testPct = 0, poolSize = 160).head
     val zero = KGPipeline.run(spark, turns, noisy)
     val shot = KGPipeline.run(spark, turns, noisy, fewShotPool = pool, nbFewShots = 3)
     val prZero = Metrics.triplePR(zero.triples, gold)
