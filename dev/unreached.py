@@ -25,13 +25,17 @@ but a symbol it prints has no reaching reference at all. An `override`
 member is reached with its enclosing type, because Spark calls it.
 
 It prints one `path: Owner.name` line per public symbol not reached,
-sorted; README's "Deliberate keeps" list is this output.
+sorted, and exits 1 when that output differs from the fenced list in
+README's "Reachability and deliberate keeps" section (the differing
+lines go to stderr).
 """
 import os
 import re
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+README = os.path.join(ROOT, "README.md")
+KEEPS = "## Reachability and deliberate keeps"
 MAIN = os.path.join(ROOT, "src", "main", "scala")
 KGBENCH = os.path.join(ROOT, "kgbench", "src", "main", "scala")
 ROOTS = {
@@ -146,6 +150,14 @@ def parse(path):
     return decls
 
 
+def readme_keeps():
+    """The lines of the first fenced block under README's keeps heading."""
+    text = open(README, encoding="utf-8").read()
+    section = text[text.index(KEEPS):]
+    start = section.index("```\n") + 4
+    return section[start:section.index("```", start)].splitlines()
+
+
 def scala_files(base):
     for d, _, files in os.walk(base):
         for f in files:
@@ -191,8 +203,16 @@ def main():
         if d.public and not d.override and id(d) not in live:
             name = d.name if d.owner is None else f"{d.owner}.{d.name}"
             out.append(f"{os.path.relpath(d.path, ROOT)}: {name}")
-    print("\n".join(sorted(out)))
-    return 0
+    out.sort()
+    print("\n".join(out))
+    keeps = readme_keeps()
+    if out == keeps:
+        return 0
+    for line in sorted(set(out) - set(keeps)):
+        print(f"not in README: {line}", file=sys.stderr)
+    for line in sorted(set(keeps) - set(out)):
+        print(f"in README but reached or gone: {line}", file=sys.stderr)
+    return 1
 
 
 if __name__ == "__main__":

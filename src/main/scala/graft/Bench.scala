@@ -112,8 +112,8 @@ object Bench {
     dir
   }
 
-  /** One full KG run from parquet; returns (nTurns, triples, wallSec). */
-  private def kgRun(spark: SparkSession, dir: String): (Long, Long, Double) = {
+  /** One full KG run from parquet; returns (triples, wallSec). */
+  private def kgRun(spark: SparkSession, dir: String): (Long, Double) = {
     import spark.implicits._
     val cfg = TranscriptGen.Config(nConvs = 0) // noise rates only
     val turns = spark.read.parquet(dir).as[Turn]
@@ -122,7 +122,7 @@ object Bench {
     val nTriples = result.triples.count()
     val wall = (System.nanoTime() - t0) / 1e9
     result.unpersistAll()
-    (0L, nTriples, wall)
+    (nTriples, wall)
   }
 
   /** Noise-robust warm measurement: repeat the run (same session, so
@@ -166,7 +166,7 @@ object Bench {
     def inBudget: Boolean = walls.size < guaranteeRuns ||
       (System.nanoTime() - t0) / 1e9 < budgetSec
     while (walls.size < maxRuns && !stable && inBudget) {
-      val (_, t, w) = kgRun(spark, dir)
+      val (t, w) = kgRun(spark, dir)
       triples = t
       walls ::= w
       onRep(walls, triples)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.kg._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -42,22 +42,22 @@ object SparkEntry {
     out
   }
 
+  /** The corpus's prompts, parsed for mentions under `tech`. */
+  private def kgMentions(s: SparkSession, cfg: TranscriptGen.Config, tech: PromptTechniques.Technique): DataFrame =
+    PromptTechniques.detectMentions(Extraction.buildPrompts(TranscriptGen.transcripts(s, cfg)), tech, cfg).toDF()
+
+  /** The corpus's extraction rows, [[KGPipeline.extract]] over its prompts. */
+  private def kgExtracted(s: SparkSession, cfg: TranscriptGen.Config): Dataset[Extraction.TurnExtraction] =
+    KGPipeline.extract(Extraction.buildPrompts(TranscriptGen.transcripts(s, cfg)), cfg)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     graft.operators.RelationalQueries.all ++ Map(
     // ---- KG pipeline stages (rows-only checks; parity in tests) ----
     "kg_triples" -> ((s, dir) => kgQuery(s, cfgFor(dir))(_.triples.toDF())),
-    "kg_mentions" -> ((s, dir) => {
-      val cfg = cfgFor(dir)
-      val prompts = Extraction.buildPrompts(TranscriptGen.transcripts(s, cfg))
-      PromptTechniques.detectMentions(prompts, PromptTechniques.Discussion, cfg).toDF()
-    }),
-    "kg_mentions_atat" -> ((s, dir) => {
-      // the per-tag fan-out technique (pt_gpt_ner.py:28-38)
-      val cfg = cfgFor(dir)
-      val prompts = Extraction.buildPrompts(TranscriptGen.transcripts(s, cfg))
-      PromptTechniques.detectMentions(prompts, PromptTechniques.AtAt, cfg).toDF()
-    }),
+    "kg_mentions" -> ((s, dir) => kgMentions(s, cfgFor(dir), PromptTechniques.Discussion)),
+    // the per-tag fan-out technique (pt_gpt_ner.py:28-38)
+    "kg_mentions_atat" -> ((s, dir) => kgMentions(s, cfgFor(dir), PromptTechniques.AtAt)),
     "kg_links" -> ((s, dir) => kgQuery(s, cfgFor(dir))(_.links.toDF())),
 
     "experiment_grid" -> ((s, dir) => {
@@ -105,8 +105,7 @@ object SparkEntry {
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")),
     "kg_mention_confidence" -> ((s, dir) => {
       val cfg = cfgFor(dir)
-      val extracted = KGPipeline.extract(Extraction.buildPrompts(TranscriptGen.transcripts(s, cfg)), cfg)
-      Extraction.withConfidence(extracted, cfg).toDF()
+      Extraction.withConfidence(kgExtracted(s, cfg), cfg).toDF()
     }),
     "kg_mention_logits" -> ((s, dir) => {
       // logit→softmax confidence suite + AUC label column
@@ -117,8 +116,7 @@ object SparkEntry {
       // typed Dataset (withLogits) keeps the real array.
       import org.apache.spark.sql.functions.{concat_ws, col, round, transform => htransform}
       val cfg = cfgFor(dir)
-      val extracted = KGPipeline.extract(Extraction.buildPrompts(TranscriptGen.transcripts(s, cfg)), cfg)
-      Extraction.withLogits(extracted, cfg).toDF()
+      Extraction.withLogits(kgExtracted(s, cfg), cfg).toDF()
         .withColumn("logits",
           concat_ws(",", htransform(col("logits"), l => round(l, 6).cast("string"))))
     }),

@@ -164,13 +164,6 @@ object TextAnalytics {
     v
   }
 
-  /** Exact Jaccard over shingle sets. */
-  def jaccard(a: Set[String], b: Set[String]): Double = {
-    if (a.isEmpty && b.isEmpty) return 1.0
-    val inter = a.intersect(b).size
-    inter.toDouble / (a.size + b.size - inter)
-  }
-
   /** MinHash signature: numHashes independent seeded min-hashes over
     * the shingle set; empty set → Long.MaxValue rows. */
   def minHashSignature(shingleSet: Iterable[String], numHashes: Int, seed: Long = 42L): Array[Long] = {

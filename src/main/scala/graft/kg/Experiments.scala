@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Experiment bookkeeping: the Spark re-expression of the reference's
   * ResultInstance store + leaderboard
   * (ner/llm_ner/ResultInstance.py:63-145, plot_results.py:10-35) and
-  * the per-stage metrics table the north rule requires.
+  * the classical_test grid that fills it.
   */
 object Experiments {
 
@@ -136,64 +136,5 @@ object Experiments {
           prf.f1, prf.precision, prf.recall, if (arm.nbFewShots > 0) arm.fst else Extraction.FstNone)
       })
     } finally { turns.unpersist(); gold.unpersist() }
-  }
-
-  /** Run the pipeline collecting per-stage row counts + wall times
-    * into StageMetric rows (north rule: every stage writes lineage +
-    * metrics). The stages are the ones [[KGPipeline.run]] calls, in
-    * its order, so the audited plan is the production plan. Each
-    * distributed stage's output is cached and counted, and its wall
-    * includes that count — an extra action per stage, so use for
-    * audited runs, not the hot path. The driver-held links and
-    * canonical map are counted from their collected rows: no job, no
-    * cache. The prompts cache is released once extraction is materialized;
-    * [[KGPipeline.Result.unpersistAll]] releases the extraction rows. */
-  def runWithMetrics(spark: SparkSession, turns: Dataset[Turn],
-                     cfg: TranscriptGen.Config, runId: String): (KGPipeline.Result, Dataset[StageMetric]) = {
-    import spark.implicits._
-    val metrics = Vector.newBuilder[StageMetric]
-    // rowsIn is timed with the stage (verify's is the stage's one job)
-    def staged[T](stage: String, rowsIn: => Long)(f: => (T, Long)): (T, Long) = {
-      val t0 = System.nanoTime()
-      val in = rowsIn
-      val (r, rowsOut) = f
-      metrics += StageMetric(runId, stage, in, rowsOut,
-        math.max(0L, in - rowsOut), (System.nanoTime() - t0) / 1000000L)
-      (r, rowsOut)
-    }
-    def cachedCount[T](ds: Dataset[T]): (Dataset[T], Long) = { val c = ds.cache(); (c, c.count()) }
-    def localCount[T](ds: Dataset[T]): (Dataset[T], Long) = (ds, ds.collect().length.toLong)
-
-    val nTurns = turns.count()
-    val (prompts, nPrompts) = staged("prompts", nTurns) {
-      cachedCount(Extraction.buildPromptsWithShots(turns, Array.empty, 0))
-    }
-    val (extracted, _) = staged("extract", nPrompts) {
-      cachedCount(KGPipeline.extract(prompts, cfg))
-    }
-    prompts.unpersist()
-    val mentions = KGPipeline.mentionsOf(extracted)
-    val verified = KGPipeline.verifiedOf(extracted)
-    val relations = KGPipeline.relationsOf(extracted)
-    // the three projection sizes in ONE job over the cached rows; the
-    // verified mentions are the parsed ones less the rejected
-    lazy val sizes = extracted.select(Seq(size(col("parsed")),
-      size(col("parsed")) - size(col("rejected")), size(col("relations")))
-      .map(c => coalesce(sum(c), lit(0L))): _*).head()
-    val (_, nVerified) = staged[Unit]("verify", sizes.getLong(0)) { ((), sizes.getLong(1)) }
-    val nRelations = sizes.getLong(2)
-    val (links, nLinks) = staged("link", nVerified) {
-      localCount(EntityLinking.linkAdaptive(verified, Lexicon.catalogue.toArray))
-    }
-    val (canon, _) = staged("canonicalize", nLinks) {
-      localCount(Canonicalize.canonicalMap(links, TranscriptGen.entities(spark)))
-    }
-    val (triples, _) = staged("materialize", nVerified + nRelations) {
-      val t = KGPipeline.materializeTriplesAdaptive(extracted, verified, relations, canon)
-      (t, t.count())
-    }
-    val result = KGPipeline.Result(turns, prompts, mentions, verified, relations,
-      links, canon, triples, extracted)
-    (result, spark.createDataset(metrics.result()))
   }
 }

@@ -1,6 +1,7 @@
 package graft.kg
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, size, sum}
 
 /** End-to-end KG construction (SURVEY.md §7.0): transcripts →
   * ordered turns → batched mention scorer → parse → verify →
@@ -20,17 +21,37 @@ object KGPipeline {
   final case class Result(
       turns: Dataset[Turn],
       prompts: Dataset[Prompt],
-      mentions: Dataset[Mention],
       verified: Dataset[Mention],
       relations: Dataset[Relation],
       links: Dataset[LinkMatch],
       canonicalMap: DataFrame, // (member, canonical)
       triples: Dataset[Triple],
-      extracted: Dataset[Extraction.TurnExtraction]) {
+      extracted: Dataset[Extraction.TurnExtraction],
+      private[kg] val observed: Seq[scala.concurrent.Future[Observed.Completion]], // turns, extraction, triples
+      private[kg] val canonNs: Long) {
     /** Release the cached extraction rows, the one stage output that
-      * [[run]] and an audited run leave cached: links and the canonical
-      * map are driver-held `LocalRelation`s and never cached. */
+      * [[run]] leaves cached: links and the canonical map are
+      * driver-held `LocalRelation`s and never cached. */
     def unpersistAll(): Unit = extracted.unpersist()
+
+    /** The run's six [[StageMetric]] rows, from the actions it already
+      * ran: link's collect observed the turns and the extraction rows
+      * (one per prompt), the first action over [[triples]] observed
+      * them, and links and the canonical map count their driver rows.
+      * Starts no job; waits at most [[Observed.Within]] for [[triples]]. */
+    def stageMetrics(runId: String): Dataset[StageMetric] = {
+      import turns.sparkSession.implicits._
+      val Seq(in, ex, out) = observed.map(Observed.await(_, "stage metrics"))
+      val Seq(nTurns, nPrompts, nParsed, nVerified, nRelations, nTriples) =
+        Seq(in, ex, out).flatMap(_.row.toSeq).map(_.asInstanceOf[Long])
+      val (nLinks, nCanon) = (links.collect().length.toLong, canonicalMap.collect().length.toLong)
+      Seq(("prompts", nTurns, nPrompts, ex.wallNs), ("extract", nPrompts, nPrompts, ex.wallNs),
+        ("verify", nParsed, nVerified, ex.wallNs), ("link", nVerified, nLinks, ex.wallNs),
+        ("canonicalize", nLinks, nCanon, canonNs), ("materialize", nVerified + nRelations, nTriples, out.wallNs))
+        .map { case (stage, rowsIn, rowsOut, ns) =>
+          StageMetric(runId, stage, rowsIn, rowsOut, math.max(0L, rowsIn - rowsOut), ns / 1000000L)
+        }.toDS()
+    }
   }
 
   def run(spark: SparkSession, cfg: TranscriptGen.Config): Result =
@@ -43,16 +64,20 @@ object KGPipeline {
     //      brace/empty/oversized drop semantics — optionally carrying
     //      a sentence-kNN few-shot block (the reference's headline
     //      quality lever, pt_abstract.py:75-89)
-    val prompts = Extraction.buildPromptsWithShots(turns, fewShotPool, nbFewShots)
+    val (observedTurns, turnsIn) = Observed(turns, count(lit(1)))
+    val prompts = Extraction.buildPromptsWithShots(observedTurns, fewShotPool, nbFewShots)
 
     // 2-4. batched scorer, then the FUSED per-turn chain (parse →
     //      verify → relations) in one narrow pass — the reference's
     //      per-sentence run_prompt flow (pt_abstract.py:45-73). Only
     //      the compact extraction rows are cached; raw text/responses
-    //      never cross a shuffle.
-    val extracted = extract(prompts, cfg).cache()
+    //      never cross a shuffle. They are observed under the cache,
+    //      so the action that fills it reports them.
+    val (extracted, extractedRows) = Observed(extract(prompts, cfg), count(lit(1)),
+      Seq(size(col("parsed")), size(col("parsed")) - size(col("rejected")), size(col("relations")))
+        .map(c => coalesce(sum(c), lit(0L))): _*)
+    extracted.cache()
 
-    val mentions = mentionsOf(extracted)
     val verified = verifiedOf(extracted)
     val relations = relationsOf(extracted)
 
@@ -66,13 +91,17 @@ object KGPipeline {
     // 6. canonicalization: the links are collected once and closed with
     //    a driver union-find (CC over accepted links + catalogue
     //    aliases); the map is a driver-held LocalRelation
+    val t0 = System.nanoTime()
     val canon = Canonicalize.canonicalMap(links, TranscriptGen.entities(spark))
+    val canonNs = System.nanoTime() - t0
 
     // 7. triple materialization: the canonical map rides a broadcast
     //    variable through ONE narrow flatMap over the extraction rows
-    val triples = materializeTriplesAdaptive(extracted, verified, relations, canon)
+    val (triples, triplesOut) = Observed(
+      materializeTriplesAdaptive(extracted, verified, relations, canon), count(lit(1)))
 
-    Result(turns, prompts, mentions, verified, relations, links, canon, triples, extracted)
+    Result(turns, prompts, verified, relations, links, canon, triples, extracted,
+      Seq(turnsIn, extractedRows, triplesOut), canonNs)
   }
 
   /** Mention scoring, then the fused per-turn chain. */
@@ -80,8 +109,7 @@ object KGPipeline {
     Extraction.extractAll(Extraction.scoreMentions(prompts, cfg), cfg)
 
   /** The projections of the extraction rows — parsed mentions,
-    * verifier-surviving mentions and relations — defined once for the
-    * batch and audited paths. */
+    * verifier-surviving mentions and relations — defined once. */
   def mentionsOf(extracted: Dataset[Extraction.TurnExtraction]): Dataset[Mention] = {
     import extracted.sparkSession.implicits._
     extracted.flatMap(e => e.parsed.map { case (m, t) => Mention(e.conv_id, e.turn_idx, m, t) })

@@ -76,7 +76,12 @@ final case class LinkMatch(
 final case class Triple(subj: String, pred: String, obj: String)
 
 /** Per-stage pipeline metrics row (north rule: every stage writes
-  * lineage + metrics). */
+  * lineage + metrics), from [[KGPipeline.Result.stageMetrics]].
+  * `wall_ms` is the wall of the Spark action that ran the stage, which
+  * fused stages share: link's collect runs prompts, extract, verify and
+  * link; the first action over the triples (a count, or the sink's
+  * write) runs materialize. Canonicalize runs no action: its wall is
+  * the driver's union-find. */
 final case class StageMetric(
     run_id: String,
     stage: String,

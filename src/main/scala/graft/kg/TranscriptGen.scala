@@ -164,16 +164,6 @@ object TranscriptGen {
     }
   }
 
-  def goldRelations(spark: SparkSession, cfg: Config): Dataset[Relation] = {
-    import spark.implicits._
-    spark.range(cfg.nConvs).flatMap { conv =>
-      (0 until turnsFor(conv, cfg)).flatMap { t =>
-        val g = genTurn(conv, t, cfg)
-        g.goldRelations.map { case (s, p, o) => Relation(g.turn.conv_id, t, s, p, o) }
-      }
-    }
-  }
-
   def entities(spark: SparkSession): Dataset[Entity] = {
     import spark.implicits._
     spark.createDataset(Lexicon.catalogue)

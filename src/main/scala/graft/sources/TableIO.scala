@@ -4,9 +4,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
-import scala.concurrent.{Await, TimeoutException}
-import scala.concurrent.duration._
-import graft.kg.Triple
+import scala.concurrent.duration.FiniteDuration
+import graft.kg.{Observed, Triple}
 
 /** Thin table facade: partitioned parquet + JSON manifest emulating
   * the Iceberg semantics the pipeline needs (atomic-ish commit,
@@ -24,7 +23,7 @@ import graft.kg.Triple
   * rows of each range are counted by an `Observation` on that write
   * (one `count_if(range = r)` per missing range), so no aggregate job
   * runs and nothing is cached; a range whose count was not observed,
-  * or an observation not completed within [[ObservedWithin]], fails
+  * or an observation not completed within [[Observed.Within]], fails
   * the call before the first commit. Then, range by range,
   * `.staging/range=R` is swapped into `range=R` by rename
   * ([[swapIn]]) and the range is recorded in `_manifest.json` via
@@ -96,21 +95,13 @@ object TableIO {
       .repartition(n, col("pred"), col("bucket"))
   }
 
-  /** How long [[writeTriples]] waits, once its write job has returned,
-    * for the observed counts. Spark completes an `Observation` from a
-    * query listener, after the action; `Observation.get` waits forever
-    * if that never happens. */
-  private val ObservedWithin = 60.seconds
-
   /** Each range's row count from an observation of `count_if(range =
     * r)` columns named by the range. A count that is missing, or an
-    * observation not completed within `within`, throws: the manifest
-    * never records a guessed count. */
+    * observation not completed within `within` ([[Observed.await]]),
+    * throws: the manifest never records a guessed count. */
   private[graft] def observedRows(rows: Observation, ranges: Seq[Int],
-                                    within: FiniteDuration = ObservedWithin): Map[Int, Long] = {
-    val row = try Await.result(rows.future, within)
-    catch { case e: TimeoutException =>
-      throw new IllegalStateException(s"no row counts observed within $within", e) }
+                                    within: FiniteDuration = Observed.Within): Map[Int, Long] = {
+    val row = Observed.await(rows.future, "row counts", within)
     ranges.map { r =>
       val i = row.schema.fieldNames.indexOf(r.toString)
       if (i < 0 || row.isNullAt(i)) throw new IllegalStateException(s"no row count observed for range $r")

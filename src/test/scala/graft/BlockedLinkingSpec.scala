@@ -66,7 +66,7 @@ class BlockedLinkingSpec extends AnyFunSuite {
   test("Filing detection = KGPipeline.run parsed mentions") {
     val cfg = TranscriptGen.Config(nConvs = 40)
     val disc = KGPipeline.run(spark, TranscriptGen.transcripts(spark, cfg), cfg)
-    val a = disc.mentions.collect().toSet
+    val a = KGPipeline.mentionsOf(disc.extracted).collect().toSet
     val b = PromptTechniques.detectMentions(disc.prompts, PromptTechniques.Filing, cfg).collect().toSet
     assert(a.nonEmpty && a == b, s"extra=${(b -- a).take(3)} missing=${(a -- b).take(3)}")
     disc.unpersistAll()

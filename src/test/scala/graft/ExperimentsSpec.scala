@@ -39,19 +39,28 @@ class ExperimentsSpec extends AnyFunSuite {
     assert(math.abs(wrap.getDouble(2) - 0.7) < 1e-9)
   }
 
-  test("runWithMetrics records per-stage lineage rows") {
-    val cfg = TranscriptGen.Config(nConvs = 20)
-    val (result, metrics) = Experiments.runWithMetrics(
-      spark, TranscriptGen.transcripts(spark, cfg), cfg, "test-run")
+  private val Stages = Set("prompts", "extract", "verify", "link", "canonicalize", "materialize")
+
+  /** A `KGPipeline.run` over `nConvs` generated conversations whose
+    * triples were counted, and that count. */
+  private def countedRun(nConvs: Int): (KGPipeline.Result, Long) = {
+    val cfg = TranscriptGen.Config(nConvs = nConvs)
+    val result = KGPipeline.run(spark, TranscriptGen.transcripts(spark, cfg), cfg)
+    (result, result.triples.count())
+  }
+
+  test("KGPipeline.run records per-stage lineage rows") {
+    val (result, nTriples) = countedRun(20)
+    val metrics = result.stageMetrics("test-run")
     val m = metrics.collect().map(s => s.stage -> s).toMap
-    assert(m.keySet == Set("prompts", "extract", "verify", "link", "canonicalize", "materialize"))
+    assert(m.keySet == Stages)
     // prompts stage drops the brace/empty/oversized turns
     assert(m("prompts").dropped > 0)
     // verify drops a small number of mentions
     assert(m("verify").rows_out <= m("verify").rows_in)
-    // its one aggregate job is timed inside the stage
+    // verify is timed by the action that ran it, link's collect
     assert(m("verify").wall_ms > 0)
-    assert(m("materialize").rows_out == result.triples.count())
+    assert(m("materialize").rows_out == nTriples)
     assert(metrics.collect().forall(_.run_id == "test-run"))
     result.unpersistAll()
   }
@@ -59,21 +68,17 @@ class ExperimentsSpec extends AnyFunSuite {
   test("metrics table accumulates per-stage lineage across runs (north-star sink)") {
     import graft.sources.TableIO
     val dir = java.nio.file.Files.createTempDirectory("metrics").toString
-    val cfg = TranscriptGen.Config(nConvs = 15)
-    val (r1, m1) = Experiments.runWithMetrics(
-      spark, TranscriptGen.transcripts(spark, cfg), cfg, "run-A")
-    TableIO.appendMetrics(m1, dir)
-    r1.unpersistAll()
-    val (r2, m2) = Experiments.runWithMetrics(
-      spark, TranscriptGen.transcripts(spark, cfg), cfg, "run-B")
-    TableIO.appendMetrics(m2, dir)
-    r2.unpersistAll()
+    for (runId <- Seq("run-A", "run-B")) {
+      val (r, _) = countedRun(15)
+      TableIO.appendMetrics(r.stageMetrics(runId), dir)
+      r.unpersistAll()
+    }
     val all = TableIO.readMetrics(spark, dir).collect()
     assert(all.map(_.run_id).toSet == Set("run-A", "run-B"))
     assert(all.count(_.run_id == "run-A") == all.count(_.run_id == "run-B"))
     // identical corpus + config → identical lineage counts per stage
     val byStage = all.groupBy(m => (m.stage, m.run_id)).view.mapValues(_.head).toMap
-    Seq("prompts", "extract", "verify", "link", "canonicalize", "materialize").foreach { s =>
+    Stages.foreach { s =>
       assert(byStage((s, "run-A")).rows_out == byStage((s, "run-B")).rows_out, s)
     }
     // run_id partition pruning: a run filter reaches PartitionFilters
@@ -85,52 +90,75 @@ class ExperimentsSpec extends AnyFunSuite {
     assert(pf.contains("run_id"), pf)
   }
 
-  test("runWithMetrics runs the production plan: no join in the audited triples, rows_out = KGPipeline.run counts") {
+  test("stage metrics: no join in the triples, rows = run's counts") {
     import org.apache.spark.sql.catalyst.plans.logical.Join
     val cfg = TranscriptGen.Config(nConvs = 20)
     val turns = TranscriptGen.transcripts(spark, cfg)
-    val (audited, metrics) = Experiments.runWithMetrics(spark, turns, cfg, "plan-run")
-    val joins = audited.triples.queryExecution.optimizedPlan.collect { case j: Join => j }
-    assert(joins.isEmpty, audited.triples.queryExecution.optimizedPlan.toString)
-    val m = metrics.collect().map(s => s.stage -> s.rows_out).toMap
-    val prod = KGPipeline.run(spark, turns, cfg)
-    val expected = Map(
-      "prompts" -> prod.prompts.count(),
-      "extract" -> prod.extracted.count(),
-      "verify" -> prod.verified.count(),
-      "link" -> prod.links.count(),
-      "canonicalize" -> prod.canonicalMap.count(),
-      "materialize" -> prod.triples.count())
-    assert(m == expected)
-    assert(audited.triples.collect().toSet == prod.triples.collect().toSet)
-    audited.unpersistAll()
-    prod.unpersistAll()
+    val r = KGPipeline.run(spark, turns, cfg)
+    val joins = r.triples.queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.isEmpty, r.triples.queryExecution.optimizedPlan.toString)
+    val triples = r.triples.collect().toSet
+    val m = r.stageMetrics("plan-run").collect().map(s => s.stage -> s).toMap
+    val (nVerified, nLinks) = (r.verified.count(), r.links.count())
+    assert(m.view.mapValues(_.rows_out).toMap == Map(
+      "prompts" -> r.prompts.count(),
+      "extract" -> r.extracted.count(),
+      "verify" -> nVerified,
+      "link" -> nLinks,
+      "canonicalize" -> r.canonicalMap.count(),
+      "materialize" -> triples.size))
+    assert(m.view.mapValues(_.rows_in).toMap == Map(
+      "prompts" -> turns.count(),
+      "extract" -> r.prompts.count(),
+      "verify" -> KGPipeline.mentionsOf(r.extracted).count(),
+      "link" -> nVerified,
+      "canonicalize" -> nLinks,
+      "materialize" -> (nVerified + r.relations.count())))
+    // the observed triples are the stages' triples
+    val plain = KGPipeline.materializeTriplesAdaptive(r.extracted, r.verified, r.relations, r.canonicalMap)
+    assert(triples == plain.collect().toSet)
+    r.unpersistAll()
   }
 
-  test("runWithMetrics counts the driver-held links and canonical map with no job and no cache") {
+  test("stage metrics count driver-held links and canon, no cache") {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import org.apache.spark.storage.StorageLevel
-    val cfg = TranscriptGen.Config(nConvs = 20)
-    val turns = TranscriptGen.transcripts(spark, cfg)
     var result: KGPipeline.Result = null
-    val jobs = SparkTestBase.countJobs {
-      result = Experiments.runWithMetrics(spark, turns, cfg, "jobs-run")._1
-    }
+    val jobs = SparkTestBase.countJobs { result = countedRun(20)._1 }
     info(s"${jobs.started} jobs: ${jobs.callSites.mkString(", ")}")
-    assert(jobs.started <= 15, jobs.callSites)
+    assert(jobs.started <= 6, jobs.callSites)
     for (ds <- Seq(result.links, result.canonicalMap)) {
       assert(ds.queryExecution.logical.isInstanceOf[LocalRelation], ds.queryExecution.logical)
       assert(ds.storageLevel == StorageLevel.NONE)
     }
+    val m = result.stageMetrics("jobs-run").collect().map(s => s.stage -> s.rows_out).toMap
+    assert(m("link") == result.links.collect().length && m("canonicalize") == result.canonicalMap.collect().length)
     result.unpersistAll()
   }
 
-  test("runWithMetrics: unpersistAll leaves no cached stage behind") {
+  test("stage metrics read after triples.count() start no job") {
+    val (result, _) = countedRun(20)
+    var rows = Array.empty[StageMetric]
+    val jobs = SparkTestBase.countJobs { rows = result.stageMetrics("read-run").collect() }
+    assert(jobs.started == 0, jobs.callSites)
+    assert(rows.map(_.stage).toSet == Stages)
+    result.unpersistAll()
+  }
+
+  test("a second action over the triples leaves their metrics unchanged") {
+    val (result, nTriples) = countedRun(20)
+    val first = result.stageMetrics("twice").collect().toSet
+    assert(result.triples.collect().length == nTriples)
+    assert(result.stageMetrics("twice").collect().toSet == first)
+    assert(first.exists(s => s.stage == "materialize" && s.rows_out == nTriples))
+    result.unpersistAll()
+  }
+
+  test("KGPipeline.run: unpersistAll leaves no cached stage behind") {
     import org.apache.spark.storage.StorageLevel
     spark.catalog.clearCache()
-    val cfg = TranscriptGen.Config(nConvs = 10)
-    val (result, _) = Experiments.runWithMetrics(
-      spark, TranscriptGen.transcripts(spark, cfg), cfg, "cache-run")
+    val (result, _) = countedRun(10)
+    result.stageMetrics("cache-run").collect()
     result.unpersistAll()
     assert(spark.sharedState.cacheManager.isEmpty)
     assert(result.prompts.storageLevel == StorageLevel.NONE)
